@@ -26,6 +26,7 @@ import shutil
 import statistics
 import subprocess
 import sys
+import tempfile
 import time
 import traceback
 
@@ -63,6 +64,7 @@ def pin_env(work: str) -> None:
             ),
         }
     )
+    tempfile.tempdir = tmp  # in case an import already cached /tmp
     sys.path.insert(0, REPO)
 
 
@@ -76,7 +78,9 @@ def start_session(work: str):
         extra_conf={
             "spark.ui.showConsoleProgress": "false",
             "spark.sql.warehouse.dir": os.path.join(work, "warehouse"),
-            "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={work}/tmp",
+            # keep the JVM's temp files, and its perf-counter file
+            # (which ignores java.io.tmpdir), out of the system /tmp
+            "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={work}/tmp -XX:-UsePerfData",
             "spark.python.authenticate.socketTimeout": "120s",
             "spark.ui.retainedJobs": retained,
             "spark.ui.retainedStages": retained,
