@@ -1305,9 +1305,11 @@ def delta_delete_where(
     return version
 
 
-def _all_txns(spark: SparkSession, table_path: str) -> dict[str, int]:
+def _all_txns(table_path: str) -> dict[str, int]:
     """Latest committed ``txn`` version per appId: the latest
-    checkpoint's ``txn`` rows plus the JSON tail."""
+    checkpoint's ``txn`` rows plus the JSON tail. Sessionless — the
+    checkpoint is read with pyarrow, so stream writer commit hooks
+    (which run where no SparkSession is guaranteed) can call it."""
     log = _log_path(table_path)
     if not _fs.is_dir(log):
         raise FileNotFoundError(f"not a Delta table: {table_path}")
@@ -1321,20 +1323,20 @@ def _all_txns(spark: SparkSession, table_path: str) -> dict[str, int]:
     ckpt = _latest_checkpoint(table_path, 1 << 60)
     start = 0
     if ckpt is not None:
+        import pyarrow.parquet as pq
+
         cp_version, cp_file = ckpt
         start = cp_version + 1
-        cp = spark.read.parquet(cp_file)
-        if "txn" in cp.columns:
-            for row in cp.select("txn").where(
-                F.col("txn").isNotNull()
-            ).collect():
-                fold(row["txn"].asDict())
+        with _fs.open_random(cp_file) as f:
+            pf = pq.ParquetFile(f)
+            if "txn" in pf.schema_arrow.names:
+                for t in pf.read(columns=["txn"]).column("txn").to_pylist():
+                    fold(t)
     for v in delta_versions(table_path):
         if v < start:
             continue
         for line in _read_commit_lines(log, v):
-            if line.strip():
-                fold(json.loads(line).get("txn"))
+            fold(json.loads(line).get("txn"))
     return best
 
 
@@ -1343,8 +1345,9 @@ def delta_last_txn_version(
 ) -> int | None:
     """Highest committed ``txn`` version for ``app_id`` — the Delta
     protocol's idempotent-writer primitive. None if the app has never
-    committed."""
-    return _all_txns(spark, table_path).get(app_id)
+    committed. ``spark`` is unused (the log walk is sessionless); it
+    stays for the public signature."""
+    return _all_txns(table_path).get(app_id)
 
 
 def delta_checkpoint(spark: SparkSession, table_path: str) -> int:
@@ -1381,7 +1384,7 @@ def delta_checkpoint(spark: SparkSession, table_path: str) -> int:
     rows += [{"add": a} for a in adds.values()]
     rows += [
         {"txn": {"appId": app, "version": v, "lastUpdated": 0}}
-        for app, v in sorted(_all_txns(spark, table_path).items())
+        for app, v in sorted(_all_txns(table_path).items())
     ]
     # spec: checkpoints must carry live domainMetadata — the row-
     # tracking watermark (and any other domain) survives log truncation
@@ -1470,6 +1473,31 @@ def delta_append_txn(
     )
 
 
+def _appended_adds(
+    table_path: str, versions: list[int], context: str
+) -> dict[str, dict]:
+    """path -> add action for every ``dataChange`` add the commits
+    ``versions`` made. Raises when one of them removes data with
+    ``dataChange=true`` (update/delete): its net change is not an
+    append row-set. OPTIMIZE commits (``dataChange=false``) add
+    nothing."""
+    log = _log_path(table_path)
+    adds: dict[str, dict] = {}
+    for v in versions:
+        for line in _read_commit_lines(log, v):
+            action = json.loads(line)
+            if "add" in action and action["add"].get("dataChange", True):
+                adds[action["add"]["path"]] = action["add"]
+            elif "remove" in action and action["remove"].get(
+                "dataChange", True
+            ):
+                raise ValueError(
+                    f"{context}: commit {v} removes data (update/delete) "
+                    "— the change set is not append-only"
+                )
+    return adds
+
+
 def read_delta_changes(
     spark: SparkSession,
     table_path: str,
@@ -1504,23 +1532,7 @@ def read_delta_changes(
     _adds, meta = _replay(spark, table_path, hi)
     schema = StructType.fromJson(json.loads(meta["schemaString"]))
     part_cols = list(meta.get("partitionColumns") or [])
-    log = _log_path(table_path)
-    adds: dict[str, dict] = {}
-    for v in want:
-        for line in _read_commit_lines(log, v):
-            if not line.strip():
-                continue
-            action = json.loads(line)
-            if "add" in action and action["add"].get("dataChange", True):
-                adds[action["add"]["path"]] = action["add"]
-            elif "remove" in action and action["remove"].get(
-                "dataChange", True
-            ):
-                raise ValueError(
-                    f"read_delta_changes: commit {v} removes data "
-                    "(update/delete) — the change set is not "
-                    "append-only"
-                )
+    adds = _appended_adds(table_path, want, "read_delta_changes")
     if not adds:
         return spark.createDataFrame([], schema)
     phys = _physical_names(meta)

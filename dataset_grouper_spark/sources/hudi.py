@@ -159,6 +159,12 @@ def _table_props(table_path: str) -> dict[str, str]:
     return props
 
 
+def _partition_fields(props: dict[str, str]) -> list[str]:
+    """The table's partition columns from ``hoodie.properties``."""
+    fields = props.get("hoodie.table.partition.fields")
+    return fields.split(",") if fields else []
+
+
 def _next_instant(table_path: str) -> str:
     hp = _hoodie_path(table_path)
     best = _FIRST_INSTANT - 1
@@ -426,7 +432,11 @@ def _commit(
     operation: str,
     stats: dict,
     action: str = "commit",
+    extra: dict | None = None,
 ) -> str:
+    """Complete ``instant`` with a commit body of ``stats``, the
+    ``operation`` and any ``extra`` top-level keys (e.g.
+    ``partitionToReplaceFileIds``, ``extraMetadata``)."""
     hp = _hoodie_path(table_path)
     # requested -> inflight -> completed, the timeline's three states
     for suffix in (f"{action}.requested", f"{action}.inflight"):
@@ -434,6 +444,7 @@ def _commit(
     body = {
         "partitionToWriteStats": stats,
         "operationType": operation,
+        **(extra or {}),
     }
     # The atomic claim is an exclusive create of an ACTION-AGNOSTIC
     # marker (.{instant}.claim): two writers racing on the same instant
@@ -445,9 +456,8 @@ def _commit(
     # ANOTHER writer owns this instant — our already-placed base files
     # carry the same instant time and would be attributed to the
     # winner's commit on every later read, so delete them before
-    # surfacing the conflict (mirrors the hudi_lite streaming writer's
-    # abort cleanup). The dotfile name keeps the claim invisible to
-    # hudi_timeline's introspection.
+    # surfacing the conflict. The dotfile name keeps the claim
+    # invisible to hudi_timeline's introspection.
     try:
         _claim_instant(table_path, instant, action)
     except FileExistsError:
@@ -497,11 +507,7 @@ def hudi_insert(
             raise ValueError(
                 f"hudi_insert: record key mismatch — table has {want!r}"
             )
-        have_parts = (
-            props.get("hoodie.table.partition.fields", "").split(",")
-            if props.get("hoodie.table.partition.fields")
-            else []
-        )
+        have_parts = _partition_fields(props)
         if have_parts != part_cols:
             raise ValueError(
                 f"hudi_insert: partition fields mismatch — table has "
@@ -569,11 +575,7 @@ def hudi_upsert(
     (enforced with one cheap count, fails loudly otherwise)."""
     props = _table_props(table_path)
     record_key = props["hoodie.table.recordkey.fields"]
-    part_cols = (
-        props.get("hoodie.table.partition.fields", "").split(",")
-        if props.get("hoodie.table.partition.fields")
-        else []
-    )
+    part_cols = _partition_fields(props)
     if record_key not in df.columns:
         raise ValueError(f"hudi_upsert: record key {record_key!r} not in frame")
     user_cols = list(df.columns)
@@ -1150,11 +1152,7 @@ def _read_mor(
 
     props = _table_props(table_path)
     record_key = props["hoodie.table.recordkey.fields"]
-    part_cols = (
-        props.get("hoodie.table.partition.fields", "").split(",")
-        if props.get("hoodie.table.partition.fields")
-        else []
-    )
+    part_cols = _partition_fields(props)
     slices = hudi_file_slices(table_path, as_of)
     if not slices:
         raise ValueError(
@@ -1415,11 +1413,7 @@ def hudi_mor_upsert(
             "with hudi_insert(..., table_type='MERGE_ON_READ'))"
         )
     record_key = props["hoodie.table.recordkey.fields"]
-    part_cols = (
-        props.get("hoodie.table.partition.fields", "").split(",")
-        if props.get("hoodie.table.partition.fields")
-        else []
-    )
+    part_cols = _partition_fields(props)
     if record_key not in df.columns:
         raise ValueError(
             f"hudi_mor_upsert: record key {record_key!r} not in frame"
@@ -1492,11 +1486,7 @@ def hudi_mor_delete(
     if props.get("hoodie.table.type") != "MERGE_ON_READ":
         raise ValueError("hudi_mor_delete: table is not MERGE_ON_READ")
     record_key = props["hoodie.table.recordkey.fields"]
-    part_cols = (
-        props.get("hoodie.table.partition.fields", "").split(",")
-        if props.get("hoodie.table.partition.fields")
-        else []
-    )
+    part_cols = _partition_fields(props)
     if record_key not in keys_df.columns:
         raise ValueError(
             f"hudi_mor_delete: record key {record_key!r} not in frame"
@@ -1563,11 +1553,7 @@ def hudi_compact(spark: SparkSession, table_path: str) -> str | None:
     them."""
     props = _table_props(table_path)
     record_key = props["hoodie.table.recordkey.fields"]
-    part_cols = (
-        props.get("hoodie.table.partition.fields", "").split(",")
-        if props.get("hoodie.table.partition.fields")
-        else []
-    )
+    part_cols = _partition_fields(props)
     slices = hudi_file_slices(table_path)
     logs = _log_files(table_path)
     logged = [

@@ -3514,6 +3514,15 @@ def _epoch_ledger_path(table_path: str, app_id: str) -> str:
     return os.path.join(table_path, "metadata", f"epochs-{safe}.log")
 
 
+def _record_epoch(table_path: str, app_id: str, epoch: int) -> None:
+    """Append ``epoch`` to the app's ledger after its snapshot
+    committed. Read-modify-write: object stores can't append, and one
+    live writer per app_id is the epoch writers' contract."""
+    ledger = _epoch_ledger_path(table_path, app_id)
+    prior = _fs.read_text(ledger) if _fs.exists(ledger) else ""
+    _fs.write_text(ledger, prior + f"{int(epoch)}\n")
+
+
 def iceberg_last_epoch(table_path: str, app_id: str) -> int | None:
     """Highest committed epoch for ``app_id``: max over snapshot
     SUMMARIES (the atomic record — it rides the snapshot's own
@@ -3568,9 +3577,5 @@ def iceberg_append_epoch(
         partition_spec=partition_spec,
         summary={"app-id": app_id, "epoch": int(epoch)},
     )
-    ledger = _epoch_ledger_path(table_path, app_id)
-    # read-modify-write: object stores can't append, and one live
-    # writer per app_id is already this API's contract
-    prior = _fs.read_text(ledger) if _fs.exists(ledger) else ""
-    _fs.write_text(ledger, prior + f"{int(epoch)}\n")
+    _record_epoch(table_path, app_id, epoch)
     return snap

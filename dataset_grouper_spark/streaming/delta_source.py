@@ -1,35 +1,38 @@
-"""``delta_lite`` — a PySpark Python Data Source (SPARK-44076 API)
-exposing this engine's jar-free Delta log walk as a REGISTERED Spark
-format, batch and STREAMING:
+"""``delta_lite`` — this engine's jar-free Delta log walk as a
+REGISTERED Spark format, batch and STREAMING, read and write (the
+shared reader/writer core and its scale shape live in :mod:`.lite`):
 
     spark.dataSource.register(DeltaLiteDataSource)
     spark.read.format("delta_lite").option("path", t).load()
     spark.readStream.format("delta_lite").option("path", t).load()
+    df.write.format("delta_lite").mode("append").option("path", t).save()
 
-The streaming half is the piece the rest of the engine could not
-express before: Structured Streaming TAILS the transaction log —
-offsets ARE commit versions, each micro-batch reads exactly the files
-the commits in ``(start, end]`` added, and Spark's own offset
-checkpointing makes recovery exactly-once (replaying a batch re-reads
-the same immutable commit range — deterministic by construction, the
-same contract delta-spark's streaming source implements on the JVM).
+Stream offsets are commit versions — the contract delta-spark's
+streaming source implements on the JVM. Partition columns are restored
+from ``add.partitionValues`` as constant columns; column-mapped tables
+scan physical names and emit logical ones.
 
-Scale shape: ``latestOffset``/``partitions`` are driver-side log reads
-(planning-scale, like every source's discovery step); data moves as
-one InputPartition per added file, decoded executor-side by pyarrow
-into Arrow RecordBatches (zero row-at-a-time Python). Partition
-columns are restored from ``add.partitionValues`` as constant Arrow
-columns; column-mapped tables scan physical names and emit logical
-ones.
-
-Honest gates: the streaming source is APPEND-ONLY — a commit in range
-that REMOVES data with ``dataChange=true`` (update/delete) raises,
-exactly like :func:`read_delta_changes` (silently replaying adds would
+Honest gates: the stream is APPEND-ONLY — a commit in range that
+REMOVES data with ``dataChange=true`` (update/delete) raises, exactly
+like :func:`read_delta_changes` (silently replaying adds would
 over-count); OPTIMIZE commits (``dataChange=false``) are skipped. The
-batch reader delegates pinned-snapshot semantics to
-:func:`read_delta` for DV tables (a deletion vector needs the
-anti-join only the DataFrame path provides) — it raises with that
-pointer rather than returning resurrected rows.
+batch reader raises on tables with deletion vectors, pointing at
+:func:`read_delta` (a deletion vector needs the anti-join only the
+DataFrame path provides) rather than returning resurrected rows.
+
+Writes: batch and stream share one commit body — protocol+metaData on
+table creation, remove-everything first under ``mode("overwrite")``,
+footer-derived ``add.stats`` always (so data skipping works on
+API-written tables), and the same schema, partitioning and column
+mapping checks against the table. Partition columns live OUTSIDE the
+data files, their literals in ``add.partitionValues`` — the layout
+``sources.delta.delta_append(partition_by=...)`` commits. COLUMN-MAPPED
+tables stage files under the stable ``col-<n>`` PHYSICAL names (a
+logical-named file in a mapped table reads back all-NULL) with physical
+partitionValues keys and stats; a table re-mapped mid-write fails
+loudly. Stream commits carry a ``txn {appId, version=batchId}`` action
+in the same atomic commit — the Delta protocol's own exactly-once
+mechanism.
 """
 
 from __future__ import annotations
@@ -37,333 +40,99 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceArrowWriter,
-    DataSourceReader,
-    DataSourceStreamArrowWriter,
-    DataSourceStreamReader,
-    InputPartition,
-    WriterCommitMessage,
-)
 from pyspark.sql.types import StructField, StructType
 
 from dataset_grouper_spark.compat import fs as _fs
-
-# simple-type partition literals the Arrow emit path supports
-_PART_CASTS = {
-    "string": str,
-    "long": int,
-    "bigint": int,
-    "integer": int,
-    "int": int,
-    "short": int,
-    "double": float,
-    "float": float,
-    "boolean": lambda s: s == "true",
-}
-
-
-class _FilePartition(InputPartition):
-    def __init__(self, path, part_values, field_names, phys_names, types):
-        self.path = path
-        self.part_values = part_values  # {logical name: raw string|None}
-        self.field_names = field_names  # logical, schema order
-        self.phys_names = phys_names  # logical -> physical
-        self.types = types  # logical -> pyspark DataType (picklable)
-
-
-def _read_file_as_arrow(part):
-    """Executor-side decode: one parquet file -> Arrow batches with
-    partition literals attached and physical names mapped to logical.
-    Missing columns (pre-mergeSchema files) backfill as NULL."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from pyspark.sql.pandas.types import to_arrow_type
-
-    pf = pq.ParquetFile(part.path)
-    have = set(pf.schema_arrow.names)
-    data_cols = [
-        n
-        for n in part.field_names
-        if n not in part.part_values and part.phys_names[n] in have
-    ]
-    for batch in pf.iter_batches(
-        columns=[part.phys_names[n] for n in data_cols]
-    ):
-        n_rows = batch.num_rows
-        arrays, names = [], []
-        for name in part.field_names:
-            # part.types carries pickled DataType objects: no session
-            # needed executor-side (DDL parsing would require one)
-            atype = to_arrow_type(part.types[name])
-            if name in part.part_values:
-                raw = part.part_values[name]
-                if raw is None:
-                    arrays.append(pa.nulls(n_rows, type=atype))
-                else:
-                    cast = _PART_CASTS.get(part.types[name].simpleString())
-                    if cast is None:
-                        raise RuntimeError(
-                            f"delta_lite: partition column type "
-                            f"{part.types[name].simpleString()!r} "
-                            "not supported"
-                        )
-                    arrays.append(
-                        pa.array([cast(raw)] * n_rows).cast(atype)
-                    )
-            elif name in data_cols:
-                arrays.append(
-                    batch.column(data_cols.index(name)).cast(atype)
-                )
-            else:
-                arrays.append(pa.nulls(n_rows, type=atype))
-            names.append(name)
-        yield pa.RecordBatch.from_arrays(arrays, names=names)
+from dataset_grouper_spark.streaming import lite
 
 
 def _table_state(path: str):
-    """(schema, part_cols, phys, latest_version) from the log —
-    driver-side planning read shared by batch and stream."""
-    from dataset_grouper_spark.sources.delta import (
-        _latest_version,
-        _physical_names,
-        _replay,
-    )
+    """(live adds, metaData, latest version) from the log — the
+    driver-side planning read shared by every hook."""
+    from dataset_grouper_spark.sources.delta import _latest_version, _replay
 
     latest = _latest_version(path)
     if latest is None:
         raise FileNotFoundError(f"empty Delta log: {path}")
     adds, meta = _replay(None, path, latest)
-    schema = StructType.fromJson(json.loads(meta["schemaString"]))
-    part_cols = list(meta.get("partitionColumns") or [])
-    return adds, schema, part_cols, _physical_names(meta), latest
+    return adds, meta, latest
 
 
-def _file_partitions(path, adds, schema, part_cols, phys):
-    field_names = [f.name for f in schema.fields]
-    types = {f.name: f.dataType for f in schema.fields}
-    table_abs = os.path.abspath(path)
+def _schema(meta) -> StructType:
+    return StructType.fromJson(json.loads(meta["schemaString"]))
+
+
+def _part_cols(meta) -> list[str]:
+    return list(meta.get("partitionColumns") or [])
+
+
+def _partitions(path, adds, meta):
+    from dataset_grouper_spark.sources.delta import _physical_names
+
+    schema, part_cols = _schema(meta), _part_cols(meta)
+    phys = _physical_names(meta)
+    renamed = {k: v for k, v in phys.items() if k != v}
+    table = os.path.abspath(path)
     out = []
     for a in adds:
-        pv_raw = a.get("partitionValues") or {}
-        pv = {
-            c: pv_raw.get(phys[c], pv_raw.get(c)) for c in part_cols
-        }
+        pv = a.get("partitionValues") or {}
         out.append(
-            _FilePartition(
-                os.path.join(table_abs, a["path"]),
-                pv,
-                field_names,
-                phys,
-                types,
+            lite.FilePartition(
+                os.path.join(table, a["path"]),
+                schema,
+                {c: pv.get(phys[c], pv.get(c)) for c in part_cols},
+                renamed,
             )
         )
     return out
 
 
-class _DeltaLiteBatchReader(DataSourceReader):
-    def __init__(self, path: str):
-        self.path = path
-        self.skip_filters: list[tuple[str, str, object]] = []
+def _live(path, skip):
+    """Batch plan: the snapshot's live files, minus those whose log
+    stats envelope or partition values disprove ``skip``."""
+    from dataset_grouper_spark.sources.delta import (
+        _add_may_match,
+        _physical_names,
+    )
 
-    def partitions(self):
-        from dataset_grouper_spark.sources.delta import _add_may_match
-
-        adds, schema, part_cols, phys, _v = _table_state(self.path)
-        live = list(adds.values())
-        # NB: RuntimeError, not NotImplementedError — the data source
-        # API treats NotImplementedError from partitions() as "no
-        # partitioning support" and silently falls back
-        if any(a.get("deletionVector") for a in live):
-            raise RuntimeError(
-                "delta_lite batch read: table carries deletion vectors — "
-                "use sources.delta.read_delta (DataFrame path applies "
-                "the tombstone anti-join)"
-            )
-        if self.skip_filters:
-            live = [
-                a
-                for a in live
-                if _add_may_match(a, self.skip_filters, part_cols, phys)
-            ]
-        parts = _file_partitions(self.path, live, schema, part_cols, phys)
-        return parts or [None]
-
-    def read(self, partition):
-        if partition is None:
-            return iter(())
-        return _read_file_as_arrow(partition)
-
-
-class _DeltaLitePushdownReader(_DeltaLiteBatchReader):
-    """The pushdown-capable variant, OPT-IN via
-    ``.option("pushdown", "true")`` — separate class because Spark
-    refuses any reader that defines ``pushFilters`` unless
-    ``spark.sql.python.filterPushdown.enabled`` is true (our
-    ``session.get_spark`` sets it).
-
-    WHY OPT-IN — verified at the bytecode level on Spark 4.1.2 (this
-    repo's probe, r7): the JVM's ``PythonDataSourceV2`` holds ONE
-    mutable ``readInfo`` slot per ``load()`` relation.
-    ``PythonScanBuilder.pushFilters`` re-runs the Python pushdown
-    runner and ``setReadInfo``-overwrites the slot — so every plan
-    WITH a translatable filter is correct, including two different
-    filters on the same relation (each re-plans; regression-tested).
-    But ``UserDefinedPythonDataSource.pushdownFiltersInPython`` gates
-    the runner on ``isAnyFilterSupported``: a later plan on the SAME
-    relation with NO translatable filters (unfiltered, or only
-    disjunctions) skips the runner entirely and
-    ``PythonBatch.planInputPartitions -> getOrCreateReadInfo`` reuses
-    the poisoned slot — the unfiltered query silently serves the
-    previous plan's pruned file set. The staleness lives in the JVM
-    slot, NOT in Python reader state (a fresh reader is constructed
-    per runner invocation — see pyspark/sql/worker/
-    data_source_pushdown_filters.py), so NO Python-side design can
-    make default-on safe: any filter-dependent partitions/read-func
-    stored in the slot is wrong for a reusing plan, and
-    filter-independent ones are no pushdown at all. Default therefore
-    stays stateless/off; the hazard ordering is pinned by a canary
-    test that will flip when a Spark release fixes the slot (then
-    flip the default). Rule when opting in: ONE ``load()`` per
-    query."""
-
-    def pushFilters(self, filters):
-        """FILE-LEVEL pushdown: comparison filters on top-level
-        columns feed the log-stats skip planner (add.stats envelopes +
-        partitionValues), so `spark.read.format("delta_lite")...
-        .filter("id < k")` plans only candidate files. Skipping is
-        never exact, so EVERY filter is returned for Spark to
-        re-evaluate row-level — pushdown here prunes I/O, it does not
-        replace the filter."""
-        from pyspark.sql.datasource import (
-            EqualTo,
-            GreaterThan,
-            GreaterThanOrEqual,
-            In,
-            LessThan,
-            LessThanOrEqual,
+    adds, meta, _v = _table_state(path)
+    live = list(adds.values())
+    if any(a.get("deletionVector") for a in live):
+        raise RuntimeError(
+            "delta_lite batch read: table carries deletion vectors — "
+            "use sources.delta.read_delta (DataFrame path applies "
+            "the tombstone anti-join)"
         )
-
-        ops = {
-            EqualTo: "=",
-            LessThan: "<",
-            LessThanOrEqual: "<=",
-            GreaterThan: ">",
-            GreaterThanOrEqual: ">=",
-        }
-        for f in filters:
-            op = ops.get(type(f))
-            if (
-                op is not None
-                and len(f.attribute) == 1
-                and f.value is not None
-            ):
-                self.skip_filters.append((f.attribute[0], op, f.value))
-            elif (
-                isinstance(f, In)
-                and len(f.attribute) == 1
-                and f.value
-                and all(v is not None for v in f.value)
-            ):
-                # IN ⊆ [min(values), max(values)]: a sound envelope
-                # conjunction (weaker than per-value, still prunes)
-                self.skip_filters.append(
-                    (f.attribute[0], ">=", min(f.value))
-                )
-                self.skip_filters.append(
-                    (f.attribute[0], "<=", max(f.value))
-                )
-            yield f  # Spark always re-evaluates: skipping is file-level
+    if skip:
+        part_cols, phys = _part_cols(meta), _physical_names(meta)
+        live = [a for a in live if _add_may_match(a, skip, part_cols, phys)]
+    return _partitions(path, live, meta)
 
 
-class _DeltaLiteStreamReader(DataSourceStreamReader):
-    def __init__(self, path: str, starting_version: int | None):
-        self.path = path
-        self.starting_version = starting_version
+def _latest(path):
+    from dataset_grouper_spark.sources.delta import _latest_version
 
-    def initialOffset(self):
-        if self.starting_version is not None:
-            return {"version": int(self.starting_version) - 1}
-        return {"version": -1}
-
-    def latestOffset(self):
-        from dataset_grouper_spark.sources.delta import _latest_version
-
-        v = _latest_version(self.path)
-        return {"version": -1 if v is None else v}
-
-    def partitions(self, start, end):
-        from dataset_grouper_spark.sources.delta import (
-            _replay,
-            delta_versions,
-        )
-
-        lo, hi = int(start["version"]), int(end["version"])
-        if hi <= lo:
-            return [None]
-        versions = [v for v in delta_versions(self.path) if lo < v <= hi]
-        expect = list(range(lo + 1, hi + 1))
-        if versions != expect:
-            raise ValueError(
-                f"delta_lite stream: missing commits "
-                f"{sorted(set(expect) - set(versions))} (vacuumed past "
-                f"retention? restart the stream from a newer "
-                f"startingVersion)"
-            )
-        _adds, schema, part_cols, phys, _v = _table_state(self.path)
-        log = os.path.join(self.path, "_delta_log")
-        new_adds = []
-        for v in versions:
-            text = _fs.read_text(os.path.join(log, f"{v:020d}.json"))
-            for line in text.splitlines():
-                if not line.strip():
-                    continue
-                action = json.loads(line)
-                if "add" in action and action["add"].get(
-                    "dataChange", True
-                ):
-                    new_adds.append(action["add"])
-                elif "remove" in action and action["remove"].get(
-                    "dataChange", True
-                ):
-                    raise ValueError(
-                        f"delta_lite stream: commit {v} removes data "
-                        "(update/delete) — the streaming source is "
-                        "append-only"
-                    )
-        parts = _file_partitions(
-            self.path, new_adds, schema, part_cols, phys
-        )
-        return parts or [None]
-
-    def read(self, partition):
-        if partition is None:
-            return iter(())
-        return _read_file_as_arrow(partition)
-
-    def commit(self, end):
-        pass  # offsets live in Spark's own checkpoint
+    v = _latest_version(path)
+    return -1 if v is None else v
 
 
-class _DeltaWriteMessage(WriterCommitMessage):
-    """One per task. ``files`` lists (relative path, partitionValues)
-    for every parquet file the task staged — one per distinct
-    partition tuple it saw (one total when unpartitioned). ``rel``
-    kept as the single-file accessor for unpartitioned callers."""
+def _between(path, lo, hi):
+    """Stream plan: the files the commits in ``(lo, hi]`` added."""
+    from dataset_grouper_spark.sources.delta import (
+        _appended_adds,
+        delta_versions,
+    )
 
-    def __init__(self, files: list[tuple[str, dict]] | None = None):
-        self.files = files or []
-
-    @property
-    def rel(self):
-        return self.files[0][0] if self.files else None
+    versions = [v for v in delta_versions(path) if lo < v <= hi]
+    lite.check_retained("delta_lite", versions, lo, hi, "startingVersion")
+    _adds, meta, _v = _table_state(path)
+    added = _appended_adds(path, versions, "delta_lite stream")
+    return _partitions(path, added.values(), meta)
 
 
 def _pv_string(value) -> str | None:
     """Delta ``add.partitionValues`` literal for a python value — the
-    inverse of the reader's ``_PART_CASTS`` (same supported simple
+    inverse of the reader's literal casts (same supported simple
     types; anything else raises rather than writing a literal the
     reader cannot restore)."""
     if value is None:
@@ -383,576 +152,216 @@ def _pv_string(value) -> str | None:
     )
 
 
-def _write_task_files(
-    path, iterator, part_cols, drop_part_cols=True, rename=None
-):
-    """Executor-side staging shared by the delta_lite batch and stream
-    writers: stream this task's Arrow batches into ONE parquet file
-    per distinct partition tuple (unpartitioned: exactly one file).
-    Partition columns live OUTSIDE the data files, Delta-style, their
-    values in the returned messages. Upstream should repartition by
-    the partition columns so a task sees few distinct tuples — the
-    same discipline as any partitioned write at 100 TB.
+class _DeltaTable:
+    """Write adapter shared by the batch and stream writers. ``phys``
+    (logical -> physical) is the table's column mapping resolved by the
+    factory; ``commit`` re-checks it against the then-current log."""
 
-    ``rename`` (logical -> physical, r13) writes COLUMN-MAPPED
-    tables: data files land under the stable ``col-<n>`` physical
-    names from the field metadata (a logical-named file in a mapped
-    table reads back all-NULL — the failure mapping exists to
-    prevent) and partitionValues keys go physical, the
-    ``delta_append`` convention."""
-    import uuid
-
-    import pyarrow.parquet as pq
-
-    def _renamed(batch):
-        if not rename:
-            return batch
-        return batch.rename_columns(
-            [rename.get(n, n) for n in batch.schema.names]
-        )
-
-    _fs.makedirs(path)
-    if not part_cols:
-        rel = f"part-{uuid.uuid4().hex}.parquet"
-        dst = os.path.join(path, rel)
-        writer = None
-        for batch in iterator:
-            batch = _renamed(batch)
-            if writer is None:
-                writer = pq.ParquetWriter(_fs.open_write(dst), batch.schema)
-            writer.write_batch(batch)
-        if writer is None:
-            return _DeltaWriteMessage()
-        writer.close()
-        return _DeltaWriteMessage([(rel, {})])
-    import pyarrow as pa
-
-    writers: dict[tuple, tuple] = {}  # tuple -> (pq writer, rel, pv)
-    for batch in iterator:
-        key_batch = batch.select(part_cols)
-        key_arrays = []
-        for f in key_batch.schema:
-            col = key_batch.column(f.name)
-            if pa.types.is_integer(f.type):
-                # to_pandas would coerce a NULL-carrying int column to
-                # float64 and the literal would read back as '2.0' —
-                # stringify on the Arrow side where int-ness is exact
-                col = col.cast(pa.string())
-            key_arrays.append(col)
-        key_df = pa.RecordBatch.from_arrays(
-            key_arrays, names=list(part_cols)
-        ).to_pandas()
-        groups = key_df.groupby(part_cols, dropna=False, sort=False)
-        data = _renamed(
-            batch.drop_columns(part_cols) if drop_part_cols else batch
-        )
-        for tup, idx in groups.indices.items():
-            if len(part_cols) == 1:
-                tup = (tup,)
-            pv = {}
-            for c, v in zip(part_cols, tup):
-                try:
-                    v = None if v != v else v  # pandas NaN -> null
-                except (TypeError, ValueError):
-                    pass
-                if v is not None and hasattr(v, "item"):
-                    v = v.item()  # numpy scalar -> python
-                pv[(rename or {}).get(c, c)] = _pv_string(v)
-            k = tuple(sorted(pv.items()))
-            if k not in writers:
-                rel = f"part-{uuid.uuid4().hex}.parquet"
-                sliced = data.take(idx)
-                w = pq.ParquetWriter(
-                    _fs.open_write(os.path.join(path, rel)), sliced.schema
-                )
-                writers[k] = (w, rel, pv)
-                w.write_batch(sliced)
-            else:
-                writers[k][0].write_batch(data.take(idx))
-    if not writers:
-        return _DeltaWriteMessage()
-    files = []
-    for w, rel, pv in writers.values():
-        w.close()
-        files.append((rel, pv))
-    return _DeltaWriteMessage(files)
-
-
-class _DeltaLiteArrowWriter(DataSourceArrowWriter):
-    """Write half of the ``delta_lite`` format — the Delta commit
-    protocol spoken through the Python data source API:
-
-        df.write.format("delta_lite").mode("append").option("path", t).save()
-
-    Each task streams its Arrow batches into ONE parquet file placed
-    directly in the table directory (invisible until committed —
-    Delta's contract makes staging free), returns its relative path,
-    and the driver-side ``commit`` claims the next ``<version>.json``
-    with an exclusive create: protocol+metaData on table creation,
-    remove-everything first under ``mode("overwrite")``, footer-derived
-    ``add.stats`` always (so data skipping works on API-written
-    tables). ``abort`` deletes the uncommitted files — readers never
-    saw them.
-
-    Partitioned writes: an EXISTING partitioned table's partition
-    columns are honored automatically (each task splits its batches
-    into one file per distinct partition tuple — repartition by the
-    partition columns upstream so a task sees few); a NEW table is
-    partitioned with ``.option("partitionBy", "a,b")``. Partition
-    columns live OUTSIDE the data files, their literals in
-    ``add.partitionValues`` — exactly the layout
-    ``sources.delta.delta_append(partition_by=...)`` commits.
-
-    COLUMN-MAPPED tables (r13, VERDICT r12 task 3) write correctly:
-    the factory resolves the logical->physical map driver-side, write
-    tasks stage files under the stable ``col-<n>`` PHYSICAL names
-    with physical partitionValues keys (the ``delta_append``
-    convention), stats are keyed physical, and commit() re-checks the
-    table's mapping so a concurrent re-map fails loudly instead of
-    committing wrong-named files.
-
-    Honest gate: schema must match an existing table."""
-
-    def __init__(
-        self,
-        path: str,
-        overwrite: bool,
-        schema: StructType,
-        part_cols: list[str] | None = None,
-        phys: dict[str, str] | None = None,
-    ):
+    def __init__(self, path, schema, part_cols, phys):
         self.path = os.path.abspath(path)
-        self.overwrite = overwrite
         self.schema = schema
-        self.part_cols = list(part_cols or [])
-        # logical -> physical for columns whose names differ (empty on
-        # unmapped and new tables)
-        self.phys = {
-            k: v for k, v in (phys or {}).items() if k != v
-        }
-        missing = [c for c in self.part_cols if c not in schema.names]
-        if missing:
-            raise ValueError(
-                f"delta_lite write: partition columns {missing} not in "
-                f"the frame ({schema.names})"
+        self.part_cols = list(part_cols)
+        self.phys = {k: v for k, v in phys.items() if k != v}
+        lite.check_columns("delta_lite", schema, self.part_cols)
+
+    def stage(self, batches):
+        import uuid
+
+        part_cols, phys = self.part_cols, self.phys
+        _fs.makedirs(self.path)
+
+        def shape(rows):
+            rows = rows.drop_columns(part_cols)
+            return rows.rename_columns(
+                [phys.get(n, n) for n in rows.schema.names]
             )
 
-    def write(self, iterator):
-        return _write_task_files(
-            self.path, iterator, self.part_cols, rename=self.phys
+        def place(values):
+            rel = f"part-{uuid.uuid4().hex}.parquet"
+            pv = {
+                phys.get(c, c): _pv_string(v)
+                for c, v in zip(part_cols, values)
+            }
+            return os.path.join(self.path, rel), shape, (rel, pv)
+
+        return lite.stage(
+            batches, lambda b: [b.column(c) for c in part_cols], place
         )
 
-    def _cleanup(self, messages):
-        for m in messages:
-            if m is None:
-                continue
-            for rel, _pv in m.files:
-                try:
-                    _fs.remove(os.path.join(self.path, rel))
-                except (OSError, FileNotFoundError):
-                    pass
+    def _check(self, meta):
+        from dataset_grouper_spark.sources.delta import _physical_names
 
-    def abort(self, messages):
-        self._cleanup(messages)
+        have = _schema(meta)
+        if [(f.name, f.dataType) for f in have.fields] != [
+            (f.name, f.dataType) for f in self.schema.fields
+        ]:
+            raise ValueError(
+                f"delta_lite write: schema mismatch — table has "
+                f"{have.simpleString()}, frame has "
+                f"{self.schema.simpleString()}"
+            )
+        if _part_cols(meta) != self.part_cols:
+            raise ValueError(
+                f"delta_lite write: partition columns mismatch — table "
+                f"has {_part_cols(meta)}, write declared {self.part_cols} "
+                "(an existing table's partitioning is honored "
+                "automatically; drop the partitionBy option or make it "
+                "match)"
+            )
+        now = {k: v for k, v in _physical_names(meta).items() if k != v}
+        if now != self.phys:
+            # files staged under a mapping the table no longer has
+            # would register wrong-named columns that read all-NULL
+            raise RuntimeError(
+                "delta_lite write: the table's column mapping changed "
+                "during the write — re-run"
+            )
 
-    def commit(self, messages):
+    def commit(self, files, overwrite, epoch):
+        import uuid
+
         from dataset_grouper_spark.sources.delta import (
             _file_stats,
-            _latest_version,
             _log_path,
-            _physical_names,
-            _replay,
+            _write_commit,
         )
 
-        files = sorted(
-            (rel, pv)
-            for m in messages
-            if m is not None
-            for rel, pv in m.files
-        )
         log = _log_path(self.path)
         try:
-            latest = _latest_version(self.path)
-        except FileNotFoundError:
-            latest = None  # no _delta_log yet: this write creates it
+            adds, meta, latest = _table_state(self.path)
+        except FileNotFoundError:  # no log yet: this write creates it
+            latest = None
         actions: list[dict] = []
         if latest is None:
             actions.append(
-                {
-                    "protocol": {
-                        "minReaderVersion": 1,
-                        "minWriterVersion": 2,
-                    }
-                }
+                {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}}
             )
             actions.append(
                 {
                     "metaData": {
-                        "id": "delta-lite-write",
-                        "format": {
-                            "provider": "parquet",
-                            "options": {},
-                        },
+                        "id": str(uuid.uuid4()),
+                        "format": {"provider": "parquet", "options": {}},
                         "schemaString": self.schema.json(),
                         "partitionColumns": self.part_cols,
                         "configuration": {},
                     }
                 }
             )
-            version = 0
             _fs.makedirs(log)
         else:
-            adds, meta = _replay(None, self.path, latest)
-            have = StructType.fromJson(
-                json.loads(meta["schemaString"])
-            )
-            if [ (f.name, f.dataType) for f in have.fields ] != [
-                (f.name, f.dataType) for f in self.schema.fields
-            ]:
-                self._cleanup(messages)
-                raise ValueError(
-                    f"delta_lite write: schema mismatch — table has "
-                    f"{[f.name for f in have.fields]}, frame has "
-                    f"{[f.name for f in self.schema.fields]}"
-                )
-            table_parts = list(meta.get("partitionColumns") or [])
-            if table_parts != self.part_cols:
-                self._cleanup(messages)
-                raise ValueError(
-                    f"delta_lite write: partition columns mismatch — "
-                    f"table has {table_parts}, write declared "
-                    f"{self.part_cols} (an existing table's partitioning "
-                    "is honored automatically; drop the partitionBy "
-                    "option or make it match)"
-                )
-            phys = _physical_names(meta)
-            now = {
-                f.name: phys[f.name]
-                for f in have.fields
-                if phys[f.name] != f.name
-            }
-            if now != self.phys:
-                # the mapping this writer staged files under no longer
-                # matches the table (re-mapped mid-write): committing
-                # would register wrong-named files that read all-NULL
-                self._cleanup(messages)
-                raise RuntimeError(
-                    "delta_lite write: the table's column mapping "
-                    "changed during the write — re-run"
-                )
-            version = latest + 1
-            if self.overwrite:
-                for rel, a in sorted(adds.items()):
-                    actions.append(
-                        {
-                            "remove": {
-                                "path": rel,
-                                "dataChange": True,
-                                "deletionTimestamp": 0,
-                                "partitionValues": (
-                                    a.get("partitionValues") or {}
-                                ),
-                            }
+            self._check(meta)
+            if overwrite:
+                actions += [
+                    {
+                        "remove": {
+                            "path": rel,
+                            "dataChange": True,
+                            "deletionTimestamp": 0,
+                            "partitionValues": a.get("partitionValues") or {},
                         }
-                    )
-        stats_fields = [
-            StructField(
-                self.phys.get(f.name, f.name), f.dataType, True
+                    }
+                    for rel, a in sorted(adds.items())
+                ]
+        if epoch is not None:
+            actions.append(
+                {
+                    "txn": {
+                        "appId": epoch[0],
+                        "version": epoch[1],
+                        "lastUpdated": 0,
+                    }
+                }
             )
+        stats_fields = [
+            StructField(self.phys.get(f.name, f.name), f.dataType, True)
             for f in self.schema.fields
             if f.name not in self.part_cols
         ]
-        for rel, pv in files:
-            dst = os.path.join(self.path, rel)
+        for f in sorted(files, key=lambda f: f.info[0]):
+            rel, pv = f.info
             actions.append(
                 {
                     "add": {
                         "path": rel,
                         "partitionValues": pv,
-                        "size": _fs.file_size(dst),
+                        "size": f.size,
                         "modificationTime": 0,
                         "dataChange": True,
-                        "stats": _file_stats(dst, stats_fields),
+                        "stats": _file_stats(f.dst, stats_fields),
                     }
                 }
             )
+        version = 0 if latest is None else latest + 1
         try:
-            data = "".join(json.dumps(a) + "\n" for a in actions)
-            with _fs.open_create(
-                os.path.join(log, f"{version:020d}.json")
-            ) as f:
-                f.write(data.encode())
+            _write_commit(log, version, actions)
         except FileExistsError:
-            # a concurrent writer claimed the version; our files are
-            # uncommitted and must not linger
-            self._cleanup(messages)
             raise RuntimeError(
                 f"delta_lite write: lost the commit race at version "
                 f"{version} — re-run the write"
-            )
+            ) from None
 
+    def last_epoch(self, app_id):
+        from dataset_grouper_spark.sources.delta import _all_txns
 
-class _DeltaLiteStreamArrowWriter(DataSourceStreamArrowWriter):
-    """Streaming write half: ``df.writeStream.format("delta_lite")``.
-    Exactly-once by the Delta protocol's own mechanism — each
-    micro-batch's files and a ``txn {appId, version=batchId}`` action
-    land in ONE atomic commit, and a replayed batch (crash between
-    sink commit and stream checkpoint) sees ``batchId <= `` the app's
-    last committed txn version and becomes a file-cleanup no-op.
-    ``appId`` comes from ``option("txnAppId")`` (default
-    ``delta_lite_stream``); one live writer per appId is the stream
-    checkpoint's own guarantee. Partitioned sinks work exactly like
-    the batch writer: an existing table's partition columns are
-    honored automatically, a new table takes
-    ``.option("partitionBy", "a,b")``."""
-
-    def __init__(
-        self,
-        path: str,
-        schema: StructType,
-        app_id: str,
-        part_cols: list[str] | None = None,
-        phys: dict[str, str] | None = None,
-    ):
-        self.path = os.path.abspath(path)
-        self.schema = schema
-        self.app_id = app_id
-        self.part_cols = list(part_cols or [])
-        self.phys = {
-            k: v for k, v in (phys or {}).items() if k != v
-        }
-        missing = [c for c in self.part_cols if c not in schema.names]
-        if missing:
-            raise ValueError(
-                f"delta_lite stream write: partition columns {missing} "
-                f"not in the frame ({schema.names})"
-            )
-
-    # per-task staging + uncommitted-file cleanup, shared with the
-    # batch writer (same contract: one file per partition tuple,
-    # column-mapped tables staged under physical names)
-    write = _DeltaLiteArrowWriter.write
-    _cleanup = _DeltaLiteArrowWriter._cleanup
-
-    def commit(self, messages, batchId):
-        from dataset_grouper_spark.sources.delta import (
-            _file_stats,
-            _latest_version,
-            _log_path,
-            _physical_names,
-            _replay,
-        )
-
-        log = _log_path(self.path)
         try:
-            latest = _latest_version(self.path)
+            return _all_txns(self.path).get(app_id)
         except FileNotFoundError:
-            latest = None
-        if latest is not None:
-            last = _stream_last_txn(self.path, self.app_id)
-            if last is not None and batchId <= last:
-                self._cleanup(messages)  # replayed epoch: no-op
-                return
-            _adds, meta = _replay(None, self.path, latest)
-            phys = _physical_names(meta)
-            now = {k: v for k, v in phys.items() if k != v}
-            if now != self.phys:
-                self._cleanup(messages)
-                raise RuntimeError(
-                    "delta_lite stream write: the table's column "
-                    "mapping changed during the stream — restart the "
-                    "query"
-                )
-        files = sorted(
-            (rel, pv)
-            for m in messages
-            if m is not None
-            for rel, pv in m.files
-        )
-        actions: list[dict] = []
-        if latest is None:
-            actions.append(
-                {
-                    "protocol": {
-                        "minReaderVersion": 1,
-                        "minWriterVersion": 2,
-                    }
-                }
-            )
-            actions.append(
-                {
-                    "metaData": {
-                        "id": "delta-lite-stream",
-                        "format": {
-                            "provider": "parquet",
-                            "options": {},
-                        },
-                        "schemaString": self.schema.json(),
-                        "partitionColumns": self.part_cols,
-                        "configuration": {},
-                    }
-                }
-            )
-            version = 0
-            _fs.makedirs(log)
-        else:
-            version = latest + 1
-        actions.append(
-            {
-                "txn": {
-                    "appId": self.app_id,
-                    "version": int(batchId),
-                    "lastUpdated": 0,
-                }
-            }
-        )
-        stats_fields = [
-            StructField(
-                self.phys.get(f.name, f.name), f.dataType, True
-            )
-            for f in self.schema.fields
-            if f.name not in self.part_cols
-        ]
-        for rel, pv in files:
-            dst = os.path.join(self.path, rel)
-            actions.append(
-                {
-                    "add": {
-                        "path": rel,
-                        "partitionValues": pv,
-                        "size": _fs.file_size(dst),
-                        "modificationTime": 0,
-                        "dataChange": True,
-                        "stats": _file_stats(dst, stats_fields),
-                    }
-                }
-            )
-        try:
-            data = "".join(json.dumps(a) + "\n" for a in actions)
-            with _fs.open_create(
-                os.path.join(log, f"{version:020d}.json")
-            ) as f:
-                f.write(data.encode())
-        except FileExistsError:
-            self._cleanup(messages)
-            raise RuntimeError(
-                f"delta_lite stream write: lost the commit race at "
-                f"version {version} — the engine will retry the batch"
-            )
-
-    def abort(self, messages, batchId):
-        self._cleanup(messages)
+            return None
 
 
-def _stream_last_txn(path: str, app_id: str):
-    """Highest committed txn version for ``app_id`` — a log walk
-    without a SparkSession (stream writer commit hooks run where none
-    is guaranteed)."""
-    from dataset_grouper_spark.sources.delta import (
-        _latest_checkpoint,
-        delta_versions,
-        _log_path,
-    )
-
-    best = None
-    ckpt = _latest_checkpoint(path, 1 << 60)
-    if ckpt is not None:
-        import pyarrow.parquet as pq
-
-        pf = pq.ParquetFile(ckpt[1])
-        if "txn" in pf.schema_arrow.names:
-            tbl = pq.read_table(ckpt[1], columns=["txn"])
-            for rec in tbl.column("txn").to_pylist():
-                if rec and rec.get("appId") == app_id:
-                    v = int(rec.get("version") or 0)
-                    best = v if best is None else max(best, v)
-    log = _log_path(path)
-    for v in delta_versions(path):
-        if ckpt is not None and v <= ckpt[0]:
-            continue
-        text = _fs.read_text(os.path.join(log, f"{v:020d}.json"))
-        for line in text.splitlines():
-            if not line.strip():
-                continue
-            a = json.loads(line)
-            t = a.get("txn")
-            if t and t.get("appId") == app_id:
-                tv = int(t.get("version") or 0)
-                best = tv if best is None else max(best, tv)
-    return best
-
-
-class DeltaLiteDataSource(DataSource):
+class DeltaLiteDataSource(lite.LiteDataSource):
     """``spark.dataSource.register(DeltaLiteDataSource)`` then
     ``.format("delta_lite").option("path", table_path)``. Options:
-    ``path`` (required), ``startingVersion`` (stream only — first
-    commit to consume; default 0, i.e. the whole table then the
-    tail)."""
+    ``path`` (required); ``startingVersion`` (stream read — first
+    commit to consume; default 0, i.e. the whole table then the tail);
+    ``pushdown`` (batch read, opt-in file skipping — see
+    :class:`lite.PushdownReader`); ``partitionBy`` (write, new tables
+    only — an existing table's partitioning is honored automatically);
+    ``txnAppId`` (stream write; default ``delta_lite_stream``)."""
 
     @classmethod
     def name(cls):
         return "delta_lite"
 
-    def _path(self) -> str:
-        p = self.options.get("path")
-        if not p:
-            raise ValueError("delta_lite: option 'path' is required")
-        return p
-
     def schema(self):
-        _adds, schema, _pc, _ph, _v = _table_state(self._path())
-        return schema
+        return _schema(_table_state(self._path())[1])
 
     def reader(self, schema):
-        # pushdown is OPT-IN: the pushdown scan carries per-query
-        # state that Spark's relation-level scan cache can leak into a
-        # later unfiltered query on the SAME load() (see
-        # _DeltaLitePushdownReader docstring). Default = stateless.
-        if str(self.options.get("pushdown", "false")).lower() == "true":
-            return _DeltaLitePushdownReader(self._path())
-        return _DeltaLiteBatchReader(self._path())
-
-    def _write_conf(self) -> tuple[list[str], dict[str, str]]:
-        """(partition columns, logical->physical map) for a write: an
-        existing table's partitioning and column mapping are
-        authoritative; a new table takes
-        ``.option("partitionBy", "a,b")`` and no mapping. A declared
-        option that contradicts an existing table fails here; commit()
-        re-checks both against the then-current log."""
-        opt = self.options.get("partitionBy")
-        declared = (
-            [c.strip() for c in opt.split(",") if c.strip()] if opt else []
-        )
-        try:
-            _adds, _schema, table_parts, phys, _v = _table_state(
-                self._path()
-            )
-        except (FileNotFoundError, OSError):
-            return declared, {}
-        if declared and declared != table_parts:
-            raise ValueError(
-                f"delta_lite write: partitionBy option {declared} "
-                f"contradicts the existing table's partition columns "
-                f"{table_parts} (an existing table's partitioning is "
-                "honored automatically; drop the option)"
-            )
-        return table_parts, dict(phys)
-
-    def writer(self, schema, overwrite):
-        parts, phys = self._write_conf()
-        return _DeltaLiteArrowWriter(
-            self._path(), overwrite, schema, parts, phys
-        )
-
-    def streamWriter(self, schema, overwrite):
-        app = self.options.get("txnAppId") or "delta_lite_stream"
-        parts, phys = self._write_conf()
-        return _DeltaLiteStreamArrowWriter(
-            self._path(), schema, app, parts, phys
-        )
+        return self._reader(_live)
 
     def streamReader(self, schema):
         sv = self.options.get("startingVersion")
-        return _DeltaLiteStreamReader(
-            self._path(), int(sv) if sv is not None else None
+        first = -1 if sv is None else int(sv) - 1
+        return lite.StreamReader(
+            self._path(), "version", first, _latest, _between
         )
+
+    def _table(self, schema) -> _DeltaTable:
+        """The write adapter: an existing table's partitioning and
+        column mapping are authoritative; a new table takes
+        ``.option("partitionBy", "a,b")`` and no mapping. A declared
+        option that contradicts an existing table fails here."""
+        from dataset_grouper_spark.sources.delta import _physical_names
+
+        declared = self._partition_by()
+        try:
+            _adds, meta, _v = _table_state(self._path())
+        except (FileNotFoundError, OSError):
+            return _DeltaTable(self._path(), schema, declared, {})
+        if declared and declared != _part_cols(meta):
+            raise ValueError(
+                f"delta_lite write: partitionBy option {declared} "
+                f"contradicts the existing table's partition columns "
+                f"{_part_cols(meta)} (an existing table's partitioning "
+                "is honored automatically; drop the option)"
+            )
+        return _DeltaTable(
+            self._path(), schema, _part_cols(meta), _physical_names(meta)
+        )
+
+    def writer(self, schema, overwrite):
+        return lite.ArrowWriter(self._table(schema), overwrite)
+
+    def streamWriter(self, schema, overwrite):
+        app = self.options.get("txnAppId") or "delta_lite_stream"
+        return lite.StreamArrowWriter(self._table(schema), app)

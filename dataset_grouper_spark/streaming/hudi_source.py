@@ -1,30 +1,32 @@
-"""``hudi_lite`` — a PySpark Python Data Source (SPARK-44076 API)
-exposing the jar-free Hudi CoW timeline walk as a REGISTERED Spark
-format, batch and STREAMING — completing the trio next to
-``delta_lite`` and ``iceberg_lite``:
+"""``hudi_lite`` — the jar-free Hudi timeline walk as a REGISTERED
+Spark format, batch and STREAMING, read and write — completing the trio
+next to ``delta_lite`` and ``iceberg_lite`` (the shared reader/writer
+core and its scale shape live in :mod:`.lite`):
 
     spark.dataSource.register(HudiLiteDataSource)
     spark.read.format("hudi_lite").option("path", t).load()
     spark.readStream.format("hudi_lite").option("path", t).load()
 
-The streaming half TAILS the timeline: offsets ARE completed instant
-times (Hudi's monotone commit timestamps), each micro-batch reads
-exactly what the commits in ``(start, end]`` wrote (paths straight
-from each commit's ``partitionToWriteStats``), and Spark's own offset
-checkpointing makes recovery exactly-once.
+Stream offsets are completed instant times (Hudi's monotone commit
+timestamps); a micro-batch reads exactly what the commits in
+``(start, end]`` wrote, paths straight from each commit's
+``partitionToWriteStats``. Base files carry full rows (partition
+columns AND the ``_hoodie_*`` meta columns, dropped in the decode); the
+table schema comes from the newest live slice's parquet footer (Hudi
+keeps no schema in the timeline markers this reader relies on).
 
-MERGE_ON_READ (r13, VERDICT r12 task 1): fully supported on both
-halves. The BATCH reader serves the merged snapshot — one
-InputPartition per FILE SLICE (base file + its ordered log files),
-each merged executor-side under the same supersedence law as
-``sources.hudi._mor_winners`` (event-time orderingVal when the table
-declares ``hoodie.table.precombine.field``, natural-order deletes by
-commit order, commit/seq tiebreak) — parity is pinned against
-``read_hudi`` on the foreign ordering fixture. The STREAM walks
-deltacommit instants: each micro-batch surfaces the LOG rows those
-instants appended (decoded through ``sources.hudi_log`` for
-HoodieLogFormat framing or the Avro-container dialect) plus any
-new-group base files — Hudi MoR CDC falls straight out of the log.
+MERGE_ON_READ is supported on both halves. The BATCH reader serves the
+merged snapshot — one InputPartition per FILE SLICE (base file + its
+ordered log files), each merged executor-side under the same
+supersedence law as ``sources.hudi._mor_winners`` (event-time
+orderingVal when the table declares ``hoodie.table.precombine.field``,
+natural-order deletes by commit order, commit/seq tiebreak); unlogged
+slices stream straight through. The STREAM walks deltacommit instants:
+each micro-batch surfaces the LOG rows those instants appended (decoded
+through ``sources.hudi_log`` for HoodieLogFormat framing or the
+Avro-container dialect) plus any new-group base files. Log blocks are
+decoded by the same pure-Python scanners the batch MoR read uses,
+sized by Hudi's design to the un-compacted tail.
 
 Stream modes (``option("mode", ...)``):
 
@@ -37,19 +39,6 @@ Stream modes (``option("mode", ...)``):
   log rows surface as postimages, delete blocks as identity-only
   delete rows, new-group base files as inserts.
 
-Scale shape: ``latestOffset``/``partitions`` are planning-scale
-timeline reads; data moves as one InputPartition per base file or
-file slice, decoded executor-side by pyarrow into Arrow RecordBatches
-(zero row-at-a-time Python on the parquet path; log blocks are
-decoded by the same pure-Python scanners the batch MoR read uses,
-sized by Hudi's design to the un-compacted tail). Hudi base files
-carry full rows (partition columns AND the ``_hoodie_*`` meta columns
-— the meta columns are dropped in the decode), so there is no
-partition-literal restoration; columns absent from an old file
-backfill NULL. The table schema comes from the newest live slice's
-parquet footer (Hudi keeps no schema in the timeline markers this
-reader relies on).
-
 Honest gates: ``replacecommit`` instants that add data (overwrites)
 raise in both stream modes — their row-level delta is not recorded
 anywhere (pure clustering is skipped); compaction commits are
@@ -59,29 +48,22 @@ Writes: ``df.write.format("hudi_lite")`` bulk-inserts (CoW INSERT
 commit; ``mode("overwrite")`` commits a ``replacecommit`` replacing
 every live file group — the spec's insert_overwrite_table, with full
 time travel to pre-overwrite instants); ``writeStream`` commits each
-micro-batch as one INSERT whose commit JSON carries
-``extraMetadata {app-id, epoch=batchId}`` — a replayed batch sees an
-epoch at or below the app's last committed one and no-ops with file
-cleanup.
+micro-batch as one INSERT whose commit JSON carries ``extraMetadata
+{app-id, epoch=batchId}``. Every commit claims its instant through
+``sources.hudi._commit`` — the same exclusive claim every other Hudi
+writer here takes.
 """
 
 from __future__ import annotations
 
-import json
+import functools
 import os
 
-from dataset_grouper_spark.compat import fs as _fs
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceArrowWriter,
-    DataSourceReader,
-    DataSourceStreamArrowWriter,
-    DataSourceStreamReader,
-    InputPartition,
-    WriterCommitMessage,
-)
-from pyspark.sql.types import StructType
+from pyspark.sql.datasource import InputPartition
+from pyspark.sql.types import StringType, StructField, StructType
 
+from dataset_grouper_spark.compat import fs as _fs
+from dataset_grouper_spark.streaming import lite
 
 _CDC_COLS = ["_change_type", "_change_key", "_commit_instant"]
 
@@ -91,62 +73,54 @@ def _table_schema(path: str) -> StructType:
     slice's parquet footer — no SparkSession needed. Serves both
     COPY_ON_WRITE and MERGE_ON_READ (a MoR table's base footer
     carries the full user schema; log rows share it)."""
-    from pyspark.sql.pandas.types import from_arrow_type
-
     import pyarrow.parquet as pq
 
-    from dataset_grouper_spark.sources.hudi import (
-        META_COLS,
-        hudi_file_slices,
-    )
+    from pyspark.sql.pandas.types import from_arrow_type
+
+    from dataset_grouper_spark.sources.hudi import META_COLS, hudi_file_slices
 
     slices = hudi_file_slices(path)
     if not slices:
         raise ValueError(f"hudi_lite: no completed file slices in {path}")
-    newest = max(slices, key=lambda s: s[2])[3]
-    arrow = pq.read_schema(newest)
-    from pyspark.sql.types import StructField
-
-    fields = [
-        StructField(n, from_arrow_type(arrow.field(n).type), True)
-        for n in arrow.names
-        if n not in META_COLS
-    ]
-    return StructType(fields)
+    arrow = pq.read_schema(max(slices, key=lambda s: s[2])[3])
+    return StructType(
+        [
+            StructField(n, from_arrow_type(arrow.field(n).type), True)
+            for n in arrow.names
+            if n not in META_COLS
+        ]
+    )
 
 
-class _FilePartition(InputPartition):
-    def __init__(self, path, field_names, types):
-        self.path = path
-        self.field_names = field_names
-        self.types = types  # name -> pyspark DataType (picklable)
+def _cdc_schema(struct: StructType) -> StructType:
+    return StructType(
+        [StructField(c, StringType(), True) for c in _CDC_COLS]
+        + list(struct.fields)
+    )
 
 
-def _read_file_as_arrow(part):
-    import pyarrow as pa
-    import pyarrow.parquet as pq
+def _layout(path, struct):
+    """(record key, partition columns, precombine column)."""
+    from dataset_grouper_spark.sources.hudi import (
+        _partition_fields,
+        _precombine_col,
+        _table_props,
+    )
 
-    from pyspark.sql.pandas.types import to_arrow_type
-
-    pf = pq.ParquetFile(part.path)
-    have = set(pf.schema_arrow.names)
-    data_cols = [n for n in part.field_names if n in have]
-    for batch in pf.iter_batches(columns=data_cols):
-        n_rows = batch.num_rows
-        arrays = []
-        for name in part.field_names:
-            atype = to_arrow_type(part.types[name])
-            if name in have:
-                arrays.append(batch.column(data_cols.index(name)).cast(atype))
-            else:
-                arrays.append(pa.nulls(n_rows, type=atype))
-        yield pa.RecordBatch.from_arrays(arrays, names=part.field_names)
+    props = _table_props(path)
+    return (
+        props["hoodie.table.recordkey.fields"],
+        _partition_fields(props),
+        _precombine_col(props, struct.names),
+    )
 
 
-def _partitions_for(paths, struct):
-    field_names = [f.name for f in struct.fields]
-    types = {f.name: f.dataType for f in struct.fields}
-    return [_FilePartition(p, field_names, types) for p in paths]
+def _ord(v):
+    """orderingVal for the event-time merge: numeric only (bool
+    excluded); None otherwise."""
+    if isinstance(v, (int, float)) and not isinstance(v, bool):
+        return float(v)
+    return None
 
 
 def _py_part_path(part_cols, payload):
@@ -175,8 +149,8 @@ def _decode_log_group(
     instant in the record (seq 0), and blocks/files outside
     ``visible`` are invisible. Delete records surface with null
     payload; their orderingVal joins the event-time merge only when
-    numeric (bool excluded), with 0/null meaning NATURAL ORDER
-    downstream (``_mor_winners`` law)."""
+    numeric, with 0/null meaning NATURAL ORDER downstream
+    (``_mor_winners`` law)."""
     from dataset_grouper_spark.sources import hudi_log
     from dataset_grouper_spark.sources.avro import read_avro_file
     from dataset_grouper_spark.sources.hudi import (
@@ -193,41 +167,26 @@ def _decode_log_group(
                 hoodie, visible
             ):
                 if op == "d":
-                    ov = rec.get("orderingVal")
-                    ordv = (
-                        float(ov)
-                        if isinstance(ov, (int, float))
-                        and not isinstance(ov, bool)
-                        else None
-                    )
                     out.append(
                         (
                             "d",
                             instant,
                             seq,
-                            ordv,
+                            _ord(rec.get("orderingVal")),
                             rec.get("recordKey"),
                             rec.get("partitionPath") or "",
                             None,
                         )
                     )
-                else:
-                    key = _py_str(rec.get("_hoodie_record_key"))
-                    if key is None:
-                        key = _py_str(rec.get(record_key))
-                    part = rec.get("_hoodie_partition_path")
-                    if part is None:
-                        part = _py_part_path(part_cols, rec)
-                    ov = rec.get(precombine) if precombine else None
-                    ordv = (
-                        float(ov)
-                        if isinstance(ov, (int, float))
-                        and not isinstance(ov, bool)
-                        else None
-                    )
-                    out.append(
-                        ("u", instant, seq, ordv, key, part, rec)
-                    )
+                    continue
+                key = _py_str(rec.get("_hoodie_record_key"))
+                if key is None:
+                    key = _py_str(rec.get(record_key))
+                part = rec.get("_hoodie_partition_path")
+                if part is None:
+                    part = _py_part_path(part_cols, rec)
+                ordv = _ord(rec.get(precombine)) if precombine else None
+                out.append(("u", instant, seq, ordv, key, part, rec))
         for path in group:
             if path in hoodie:
                 continue
@@ -236,45 +195,41 @@ def _decode_log_group(
                 instant = rec[_MOR_INSTANT]
                 if visible is not None and instant not in visible:
                     continue
-                op = rec[_MOR_OP]
-                key = _py_str(rec.get(record_key))
-                part = _py_part_path(part_cols, rec)
-                ov = rec.get(precombine) if precombine else None
-                ordv = (
-                    float(ov)
-                    if isinstance(ov, (int, float))
-                    and not isinstance(ov, bool)
-                    else None
-                )
+                ordv = _ord(rec.get(precombine)) if precombine else None
                 # avro-dialect delete rows keep their stored payload
                 # (the record key column — read_hudi_changes parity);
                 # hoodie DELETE_BLOCK rows have no user columns
-                out.append((op, instant, 0, ordv, key, part, rec))
+                out.append(
+                    (
+                        rec[_MOR_OP],
+                        instant,
+                        0,
+                        ordv,
+                        _py_str(rec.get(record_key)),
+                        _py_part_path(part_cols, rec),
+                        rec,
+                    )
+                )
     return out
 
 
-def _payloads_to_arrow(payloads, field_names, types, prefix=None):
-    """Build one Arrow RecordBatch from decoded log payload dicts
-    (typed per the table schema; absent columns null). ``prefix`` is
-    an optional ``[(name, list_of_values)]`` of string columns
-    prepended before the user columns (the CDC triplet)."""
+def _payloads_to_arrow(payloads, schema, prefix=()):
+    """One Arrow RecordBatch from decoded log payload dicts, typed per
+    ``schema`` (absent columns null). ``prefix`` is ``[(name, values)]``
+    of string columns put before the user columns (the CDC triplet)."""
     import pyarrow as pa
 
     from pyspark.sql.pandas.types import to_arrow_type
 
-    names, arrays = [], []
-    for name, vals in prefix or []:
-        names.append(name)
-        arrays.append(pa.array(vals, type=pa.string()))
-    for name in field_names:
-        atype = to_arrow_type(types[name])
+    names = [n for n, _v in prefix] + schema.names
+    arrays = [pa.array(vals, type=pa.string()) for _n, vals in prefix]
+    for f in schema.fields:
         arrays.append(
             pa.array(
-                [p.get(name) if p is not None else None for p in payloads],
-                type=atype,
+                [p.get(f.name) if p is not None else None for p in payloads],
+                type=to_arrow_type(f.dataType),
             )
         )
-        names.append(name)
     return pa.RecordBatch.from_arrays(arrays, names=names)
 
 
@@ -285,15 +240,17 @@ class _MorSlicePartition(InputPartition):
     is the global merge."""
 
     def __init__(self, base_path, log_groups, visible, record_key,
-                 precombine, part_cols, field_names, types):
+                 precombine, part_cols, schema):
         self.base_path = base_path
         self.log_groups = log_groups
         self.visible = visible
         self.record_key = record_key
         self.precombine = precombine
         self.part_cols = part_cols
-        self.field_names = field_names
-        self.types = types
+        self.schema = schema
+
+    def read(self):
+        return _read_merged_slice(self)
 
 
 def _read_merged_slice(part):
@@ -313,16 +270,8 @@ def _read_merged_slice(part):
         part.precombine is not None
         and part.precombine in base.column_names
     )
-
-    def _ordf(v):
-        return (
-            float(v)
-            if isinstance(v, (int, float)) and not isinstance(v, bool)
-            else None
-        )
-
     base_ord = (
-        [_ordf(v) for v in base.column(part.precombine).to_pylist()]
+        [_ord(v) for v in base.column(part.precombine).to_pylist()]
         if pc_active
         else [None] * nb
     )
@@ -384,96 +333,14 @@ def _read_merged_slice(part):
     winners = winners[winners["op"] == "u"]
     base_idx = winners.loc[winners["src"] == "b", "idx"].tolist()
     if base_idx:
-        sub = _FilePartitionView(
-            base.take(sorted(base_idx)), part.field_names, part.types
+        yield from lite.project(
+            base.take(sorted(base_idx)).to_batches(), part.schema
         )
-        yield from sub
     log_idx = winners.loc[winners["src"] == "l", "idx"].tolist()
     if log_idx:
         yield _payloads_to_arrow(
-            [logs[i][6] for i in sorted(log_idx)],
-            part.field_names,
-            part.types,
+            [logs[i][6] for i in sorted(log_idx)], part.schema
         )
-
-
-def _FilePartitionView(tbl, field_names, types):
-    """Project an in-memory Arrow table to the declared schema (same
-    null-backfill + cast law as ``_read_file_as_arrow``)."""
-    import pyarrow as pa
-
-    from pyspark.sql.pandas.types import to_arrow_type
-
-    have = set(tbl.column_names)
-    for batch in tbl.to_batches():
-        n_rows = batch.num_rows
-        arrays = []
-        for name in field_names:
-            atype = to_arrow_type(types[name])
-            if name in have:
-                arrays.append(
-                    batch.column(tbl.column_names.index(name)).cast(atype)
-                )
-            else:
-                arrays.append(pa.nulls(n_rows, type=atype))
-        yield pa.RecordBatch.from_arrays(arrays, names=field_names)
-
-
-class _HudiLiteBatchReader(DataSourceReader):
-    def __init__(self, path: str):
-        self.path = path
-
-    def partitions(self):
-        from dataset_grouper_spark.sources.hudi import (
-            _completed,
-            _group_log_paths,
-            _log_files,
-            _precombine_col,
-            _table_props,
-            hudi_file_slices,
-        )
-
-        struct = _table_schema(self.path)
-        field_names = [f.name for f in struct.fields]
-        types = {f.name: f.dataType for f in struct.fields}
-        props = _table_props(self.path)
-        record_key = props["hoodie.table.recordkey.fields"]
-        part_cols = (
-            props.get("hoodie.table.partition.fields", "").split(",")
-            if props.get("hoodie.table.partition.fields")
-            else []
-        )
-        precombine = _precombine_col(props, field_names)
-        logs = _log_files(self.path)
-        completed = set(_completed(self.path)) if logs else None
-        parts: list = []
-        for part, fid, instant, path in hudi_file_slices(self.path):
-            entries = logs.get((part, fid, instant))
-            if not entries:
-                # unlogged groups stream straight through — only
-                # logged slices pay the merge (MoR read economics)
-                parts.append(_FilePartition(path, field_names, types))
-            else:
-                parts.append(
-                    _MorSlicePartition(
-                        path,
-                        _group_log_paths([p for _i, p in entries]),
-                        completed,
-                        record_key,
-                        precombine,
-                        part_cols,
-                        field_names,
-                        types,
-                    )
-                )
-        return parts or [None]
-
-    def read(self, partition):
-        if partition is None:
-            return iter(())
-        if isinstance(partition, _MorSlicePartition):
-            return _read_merged_slice(partition)
-        return _read_file_as_arrow(partition)
 
 
 class _LogChangePartition(InputPartition):
@@ -483,387 +350,247 @@ class _LogChangePartition(InputPartition):
     deletes)."""
 
     def __init__(self, log_groups, visible, record_key, precombine,
-                 part_cols, field_names, types):
+                 part_cols, schema):
         self.log_groups = log_groups
         self.visible = visible
         self.record_key = record_key
         self.precombine = precombine
         self.part_cols = part_cols
-        self.field_names = field_names
-        self.types = types
+        self.schema = schema
+
+    def read(self):
+        recs = _decode_log_group(
+            self.log_groups, self.visible, self.record_key,
+            self.precombine, self.part_cols,
+        )
+        if not recs:
+            return
+        yield _payloads_to_arrow(
+            [r[6] for r in recs],
+            self.schema,
+            prefix=[
+                (
+                    "_change_type",
+                    [
+                        "delete" if r[0] == "d" else "update_postimage"
+                        for r in recs
+                    ],
+                ),
+                ("_change_key", [r[4] for r in recs]),
+                ("_commit_instant", [r[1] for r in recs]),
+            ],
+        )
 
 
-def _read_log_changes(part):
-    recs = _decode_log_group(
-        part.log_groups, part.visible, part.record_key,
-        part.precombine, part.part_cols,
+def _live(path, _skip):
+    """Batch plan: one partition per live file slice."""
+    from dataset_grouper_spark.sources.hudi import (
+        _completed,
+        _group_log_paths,
+        _log_files,
+        hudi_file_slices,
     )
-    if not recs:
-        return
-    yield _payloads_to_arrow(
-        [r[6] for r in recs],
-        part.field_names,
-        part.types,
-        prefix=[
-            (
-                "_change_type",
-                [
-                    "delete" if r[0] == "d" else "update_postimage"
-                    for r in recs
-                ],
-            ),
-            ("_change_key", [r[4] for r in recs]),
-            ("_commit_instant", [r[1] for r in recs]),
-        ],
+
+    struct = _table_schema(path)
+    record_key, part_cols, precombine = _layout(path, struct)
+    logs = _log_files(path)
+    completed = set(_completed(path)) if logs else None
+    parts: list = []
+    for part, fid, instant, base in hudi_file_slices(path):
+        entries = logs.get((part, fid, instant))
+        if not entries:
+            # unlogged groups stream straight through — only logged
+            # slices pay the merge (MoR read economics)
+            parts.append(lite.FilePartition(base, struct))
+        else:
+            parts.append(
+                _MorSlicePartition(
+                    base,
+                    _group_log_paths([p for _i, p in entries]),
+                    completed,
+                    record_key,
+                    precombine,
+                    part_cols,
+                    struct,
+                )
+            )
+    return parts
+
+
+def _latest(path):
+    from dataset_grouper_spark.sources.hudi import _completed
+
+    try:
+        commits = _completed(path)
+    except FileNotFoundError:
+        return "0"
+    return max(commits) if commits else "0"
+
+
+def _between(path, lo, hi, cdc=False):
+    """Stream plan: what the instants in ``(lo, hi]`` wrote, through
+    the append-only / replacecommit gates."""
+    from dataset_grouper_spark.sources.hudi import (
+        _completed,
+        _group_log_paths,
     )
 
-
-class _InsertFilePartition(InputPartition):
-    """A base file a commit in range wrote, surfaced as CDC 'insert'
-    rows (``_change_key`` from the file's own ``_hoodie_record_key``
-    column)."""
-
-    def __init__(self, path, field_names, types, instant):
-        self.path = path
-        self.field_names = field_names
-        self.types = types
-        self.instant = instant
-
-
-def _read_insert_file_cdc(part):
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from pyspark.sql.pandas.types import to_arrow_type
-
-    pf = pq.ParquetFile(part.path)
-    have = set(pf.schema_arrow.names)
-    data_cols = [n for n in part.field_names if n in have]
-    read_cols = data_cols + ["_hoodie_record_key"]
-    for batch in pf.iter_batches(columns=read_cols):
-        n_rows = batch.num_rows
-        key = batch.column(read_cols.index("_hoodie_record_key")).cast(
-            pa.string()
-        )
-        arrays = [
-            pa.array(["insert"] * n_rows, type=pa.string()),
-            key,
-            pa.array([part.instant] * n_rows, type=pa.string()),
-        ]
-        for name in part.field_names:
-            atype = to_arrow_type(part.types[name])
-            if name in have:
-                arrays.append(
-                    batch.column(data_cols.index(name)).cast(atype)
-                )
-            else:
-                arrays.append(pa.nulls(n_rows, type=atype))
-        yield pa.RecordBatch.from_arrays(
-            arrays, names=_CDC_COLS + part.field_names
-        )
-
-
-class _HudiLiteStreamReader(DataSourceStreamReader):
-    def __init__(self, path: str, starting_instant: str | None,
-                 cdc: bool = False):
-        self.path = path
-        self.starting_instant = starting_instant
-        self.cdc = cdc
-
-    def initialOffset(self):
-        return {"instant": self.starting_instant or "0"}
-
-    def latestOffset(self):
-        from dataset_grouper_spark.sources.hudi import _completed
-
-        try:
-            commits = _completed(self.path)
-        except FileNotFoundError:
-            return {"instant": "0"}
-        return {"instant": max(commits) if commits else "0"}
-
-    def partitions(self, start, end):
-        from dataset_grouper_spark.sources.hudi import (
-            _completed,
-            _group_log_paths,
-            _precombine_col,
-            _table_props,
-        )
-
-        lo, hi = str(start["instant"]), str(end["instant"])
-        if hi <= lo:
-            return [None]
-        commits = _completed(self.path, as_of=hi)
-        struct = _table_schema(self.path)
-        field_names = [f.name for f in struct.fields]
-        types = {f.name: f.dataType for f in struct.fields}
-        props = _table_props(self.path)
-        record_key = props["hoodie.table.recordkey.fields"]
-        part_cols = (
-            props.get("hoodie.table.partition.fields", "").split(",")
-            if props.get("hoodie.table.partition.fields")
-            else []
-        )
-        precombine = _precombine_col(props, field_names)
-        parts: list = []
-        for ts in sorted(commits):
-            if ts <= lo:
-                continue
-            meta = commits[ts]
-            action = meta["__action"]
-            op = meta.get("operationType")
-            if action == "replacecommit":
-                # only pure clustering (file reorganization, no logical
-                # change) may be skipped. An INSERT_OVERWRITE replace-
-                # commit — the only replacecommit this repo's writers
-                # produce (mode('overwrite')) — both drops file groups
-                # AND inserts rows; silently skipping it would lose its
-                # data from the stream, so it raises like UPSERT does.
-                if op == "INSERT_OVERWRITE_TABLE" or (
-                    meta.get("partitionToWriteStats")
-                ):
-                    raise ValueError(
-                        f"hudi_lite stream: instant {ts} is a "
-                        f"{op or 'replace'} "
-                        "replacecommit — overwrites rewrite history; "
-                        "their row-level delta is not recorded (restart "
-                        "the stream from the overwrite instant)"
-                    )
-                continue  # genuine clustering: no logical change
-            if op == "COMPACT":
-                continue  # logs folded into base: logically no change
-            base_paths, log_paths = [], []
-            for stats in (
-                meta.get("partitionToWriteStats") or {}
-            ).values():
-                for st in stats:
-                    (
-                        log_paths if ".log." in st["path"] else base_paths
-                    ).append(os.path.join(self.path, st["path"]))
-            if action == "commit" and op not in (None, "INSERT"):
-                raise ValueError(
-                    f"hudi_lite stream: instant {ts} is a CoW {op} — "
-                    "slice rewrites record no row-level delta; the "
-                    "stream is append-only (use MERGE_ON_READ writes "
-                    "for CDC)"
-                )
-            if log_paths and not self.cdc:
-                raise ValueError(
-                    f"hudi_lite stream: deltacommit {ts} appended LOG "
-                    "rows (updates/deletes) — the default stream is "
-                    "append-only; tail MoR change streams with "
-                    "option('mode', 'cdc')"
-                )
-            for p in base_paths:
-                parts.append(
-                    _InsertFilePartition(p, field_names, types, ts)
-                    if self.cdc
-                    else _FilePartition(p, field_names, types)
-                )
-            for group in _group_log_paths(log_paths):
-                parts.append(
-                    _LogChangePartition(
-                        [group], {ts}, record_key, precombine,
-                        part_cols, field_names, types,
-                    )
-                )
-        return parts or [None]
-
-    def read(self, partition):
-        if partition is None:
-            return iter(())
-        if isinstance(partition, _LogChangePartition):
-            return _read_log_changes(partition)
-        if isinstance(partition, _InsertFilePartition):
-            return _read_insert_file_cdc(partition)
-        return _read_file_as_arrow(partition)
-
-    def commit(self, end):
-        pass  # offsets live in Spark's own checkpoint
-
-
-class _HudiWriteMessage(WriterCommitMessage):
-    def __init__(self, files: list[tuple] | None = None):
-        # (abs_path, rel_path, partition_rel, nrows, size, token)
-        self.files = files or []
-
-
-def _hudi_stage_write(path, iterator, record_key, part_cols):
-    """Executor-side staging: one base file per distinct partition
-    tuple per task, meta columns synthesized in-Arrow, placed directly
-    in the table. Files are named with an INVISIBLE placeholder
-    instant (a 17-digit token starting '0' — lexically below every
-    real instant, so never in the completed set): the driver's commit
-    claims the real instant and RENAMES the staged files into it,
-    which is what keeps a streaming sink correct across micro-batches
-    (executor-side writer copies cannot learn a per-batch instant).
-    Consequence, stated honestly: the row-level _hoodie_commit_time
-    in files written through this path carries the staging token, not
-    the final instant — the timeline/file name is authoritative (and
-    is what every read path here resolves slices by)."""
-    import uuid
-
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    token = "0" + f"{uuid.uuid4().int % 10**16:016d}"
-    instant = token
-    files = []
-    writers = {}
-    for batch in iterator:
-        tbl = pa.Table.from_batches([batch])
-        # partition-path values via Arrow string cast — pandas would
-        # coerce NULL-carrying int columns to float64 and the dir name
-        # ('c=2.0') would diverge from the Spark-cast identity
-        # hudi_upsert computes ('c=2')
-        keys = (
-            pa.table(
-                [tbl.column(c).cast(pa.string()) for c in part_cols],
-                names=list(part_cols),
-            ).to_pandas()
-            if part_cols
-            else None
-        )
-        groups = (
-            keys.groupby(part_cols, dropna=False, sort=False).indices.items()
-            if part_cols
-            else [((), range(tbl.num_rows))]
-        )
-        for tup, idx in groups:
-            if part_cols and len(part_cols) == 1:
-                tup = (tup,)
-            part_rel = "/".join(
-                f"{c}={v}" for c, v in zip(part_cols, tup)
-            )
-            if part_rel not in writers:
-                fid = uuid.uuid4().hex[:20]
-                name = f"{fid}_0-0-0_{instant}.parquet"
-                rel = os.path.join(part_rel, name) if part_rel else name
-                dst_dir = (
-                    os.path.join(path, part_rel) if part_rel else path
-                )
-                _fs.makedirs(dst_dir)
-                if part_rel:
-                    pmeta = os.path.join(
-                        dst_dir, ".hoodie_partition_metadata"
-                    )
-                    if not _fs.exists(pmeta):
-                        _fs.write_text(
-                            pmeta,
-                            f"#partition metadata\ncommitTime="
-                            f"{instant}\npartitionDepth="
-                            f"{len(part_cols)}\n",
-                        )
-                writers[part_rel] = [None, os.path.join(path, rel), rel, 0, name]
-            sliced = tbl.take(list(idx))
-            n = sliced.num_rows
-            key_arr = pc.cast(sliced.column(record_key), pa.string())
-            meta_arrays = [
-                pa.array([instant] * n),
-                pa.array([f"{instant}_0"] * n),
-                key_arr,
-                pa.array([part_rel] * n),
-                pa.array([writers[part_rel][4]] * n),
-            ]
-            meta_names = [
-                "_hoodie_commit_time",
-                "_hoodie_commit_seqno",
-                "_hoodie_record_key",
-                "_hoodie_partition_path",
-                "_hoodie_file_name",
-            ]
-            full = pa.table(
-                meta_arrays + [sliced.column(c) for c in sliced.column_names],
-                names=meta_names + list(sliced.column_names),
-            )
-            if writers[part_rel][0] is None:
-                writers[part_rel][0] = pq.ParquetWriter(
-                    _fs.open_write(writers[part_rel][1]), full.schema
-                )
-            writers[part_rel][0].write_table(full)
-            writers[part_rel][3] += n
-    for part_rel, (w, dst, rel, nrows, _name) in writers.items():
-        if w is None:
+    commits = _completed(path, as_of=hi)
+    struct = _table_schema(path)
+    record_key, part_cols, precombine = _layout(path, struct)
+    cdc_struct = _cdc_schema(struct)
+    parts: list = []
+    for ts in sorted(commits):
+        if ts <= lo:
             continue
-        w.close()
-        files.append(
-            (dst, rel, part_rel, nrows, _fs.file_size(dst), token)
-        )
-    return _HudiWriteMessage(files)
-
-
-def _finalize_files(path, messages, instant):
-    """Rename every staged file's placeholder token to the claimed
-    ``instant`` (driver-local renames, O(files)) and return the
-    partitionToWriteStats for the commit body."""
-    from dataset_grouper_spark.sources.hudi import _BASE_RE
-
-    stats: dict[str, list[dict]] = {}
-    for m in messages:
-        if m is None:
-            continue
-        for dst, rel, part_rel, nrows, size, token in m.files:
-            new_rel = rel.replace(token, instant)
-            _fs.move(dst, os.path.join(path, new_rel))
-            fid = _BASE_RE.match(os.path.basename(new_rel)).group("fid")
-            stats.setdefault(part_rel, []).append(
-                {
-                    "fileId": fid,
-                    "path": new_rel,
-                    "numWrites": nrows,
-                    "fileSizeInBytes": size,
-                }
+        meta = commits[ts]
+        action = meta["__action"]
+        op = meta.get("operationType")
+        if action == "replacecommit":
+            # only pure clustering (file reorganization, no logical
+            # change) may be skipped. An INSERT_OVERWRITE replace-
+            # commit — the only replacecommit this repo's writers
+            # produce (mode('overwrite')) — both drops file groups
+            # AND inserts rows; silently skipping it would lose its
+            # data from the stream, so it raises like UPSERT does.
+            if op == "INSERT_OVERWRITE_TABLE" or (
+                meta.get("partitionToWriteStats")
+            ):
+                raise ValueError(
+                    f"hudi_lite stream: instant {ts} is a "
+                    f"{op or 'replace'} "
+                    "replacecommit — overwrites rewrite history; "
+                    "their row-level delta is not recorded (restart "
+                    "the stream from the overwrite instant)"
+                )
+            continue  # genuine clustering: no logical change
+        if op == "COMPACT":
+            continue  # logs folded into base: logically no change
+        base_paths, log_paths = [], []
+        for stats in (meta.get("partitionToWriteStats") or {}).values():
+            for st in stats:
+                (
+                    log_paths if ".log." in st["path"] else base_paths
+                ).append(os.path.join(path, st["path"]))
+        if action == "commit" and op not in (None, "INSERT"):
+            raise ValueError(
+                f"hudi_lite stream: instant {ts} is a CoW {op} — "
+                "slice rewrites record no row-level delta; the "
+                "stream is append-only (use MERGE_ON_READ writes "
+                "for CDC)"
             )
-    return stats
+        if log_paths and not cdc:
+            raise ValueError(
+                f"hudi_lite stream: deltacommit {ts} appended LOG "
+                "rows (updates/deletes) — the default stream is "
+                "append-only; tail MoR change streams with "
+                "option('mode', 'cdc')"
+            )
+        for p in base_paths:
+            # CDC: a new-group base file surfaces as 'insert' rows
+            # keyed by its own _hoodie_record_key column
+            parts.append(
+                lite.FilePartition(
+                    p,
+                    cdc_struct,
+                    {"_change_type": "insert", "_commit_instant": ts},
+                    {"_change_key": "_hoodie_record_key"},
+                )
+                if cdc
+                else lite.FilePartition(p, struct)
+            )
+        for group in _group_log_paths(log_paths):
+            parts.append(
+                _LogChangePartition(
+                    [group], {ts}, record_key, precombine, part_cols,
+                    struct,
+                )
+            )
+    return parts
 
 
-class _HudiLiteArrowWriter(DataSourceArrowWriter):
-    def __init__(
-        self,
-        path: str,
-        overwrite: bool,
-        schema: StructType,
-        record_key: str,
-        part_cols: list[str],
-    ):
+class _HudiTable:
+    """Write adapter shared by the batch and stream writers."""
+
+    def __init__(self, path, schema, record_key, part_cols):
         self.path = os.path.abspath(path)
-        self.overwrite = overwrite
         self.schema = schema
         self.record_key = record_key
         self.part_cols = list(part_cols)
-        if record_key not in schema.names:
-            raise ValueError(
-                f"hudi_lite write: recordKey {record_key!r} not in frame"
-            )
-        missing = [c for c in self.part_cols if c not in schema.names]
-        if missing:
-            raise ValueError(
-                f"hudi_lite write: partition columns {missing} not in frame"
-            )
+        lite.check_columns("hudi_lite", schema, [record_key], "recordKey")
+        lite.check_columns("hudi_lite", schema, self.part_cols)
 
-    def write(self, iterator):
-        return _hudi_stage_write(
-            self.path, iterator, self.record_key, self.part_cols
+    def stage(self, batches):
+        """One base file per partition tuple, meta columns synthesized
+        in-Arrow, placed directly in the table. Files are named with an
+        INVISIBLE placeholder instant (a 17-digit token starting '0' —
+        lexically below every real instant, so never in the completed
+        set): the driver's commit claims the real instant and RENAMES
+        the staged files into it, which keeps a streaming sink correct
+        across micro-batches (executor-side writer copies cannot learn
+        a per-batch instant). Consequence, stated honestly: the
+        row-level _hoodie_commit_time in files written through this
+        path carries the staging token, not the final instant — the
+        timeline/file name is authoritative (and is what every read
+        path here resolves slices by)."""
+        import uuid
+
+        import pyarrow as pa
+
+        from dataset_grouper_spark.sources.hudi import META_COLS
+
+        token = "0" + f"{uuid.uuid4().int % 10**16:016d}"
+        path, part_cols, key = self.path, self.part_cols, self.record_key
+
+        def place(values):
+            # null partition values name the directory the way Spark's
+            # partitionBy (and so hudi_insert) does
+            part_rel = "/".join(
+                f"{c}={'__HIVE_DEFAULT_PARTITION__' if v is None else v}"
+                for c, v in zip(part_cols, values)
+            )
+            name = f"{uuid.uuid4().hex[:20]}_0-0-0_{token}.parquet"
+            dst_dir = os.path.join(path, part_rel) if part_rel else path
+            _fs.makedirs(dst_dir)
+            pmeta = os.path.join(dst_dir, ".hoodie_partition_metadata")
+            if part_rel and not _fs.exists(pmeta):
+                _fs.write_text(
+                    pmeta,
+                    f"#partition metadata\ncommitTime={token}\n"
+                    f"partitionDepth={len(part_cols)}\n",
+                )
+
+            def shape(rows):
+                n = rows.num_rows
+                meta = [
+                    pa.array([token] * n),
+                    pa.array([f"{token}_0"] * n),
+                    rows.column(key).cast(pa.string()),
+                    pa.array([part_rel] * n),
+                    pa.array([name] * n),
+                ]
+                return pa.RecordBatch.from_arrays(
+                    meta + rows.columns,
+                    names=META_COLS + rows.schema.names,
+                )
+
+            return os.path.join(dst_dir, name), shape, (part_rel, token)
+
+        # partition-path values via Arrow string cast — the same
+        # identity hudi_upsert's Spark cast computes ('c=2', not '2.0')
+        return lite.stage(
+            batches,
+            lambda b: [b.column(c).cast(pa.string()) for c in part_cols],
+            place,
         )
 
-    def _cleanup(self, messages):
-        for m in messages:
-            if m is None:
-                continue
-            for dst, _rel, _p, _n, _s, _t in m.files:
-                try:
-                    _fs.remove(dst)
-                except (OSError, FileNotFoundError):
-                    pass
-
-    def abort(self, messages):
-        self._cleanup(messages)
-
-    def commit(self, messages, extra_meta=None):
+    def commit(self, files, overwrite, epoch):
         from dataset_grouper_spark.sources.hudi import (
+            _BASE_RE,
             _commit,
             _hoodie_path,
+            _next_instant,
+            _partition_fields,
             _table_props,
             _write_properties,
             hudi_file_slices,
@@ -877,127 +604,71 @@ class _HudiLiteArrowWriter(DataSourceArrowWriter):
             props = _table_props(self.path)
             want = props.get("hoodie.table.recordkey.fields")
             if want and want != self.record_key:
-                self._cleanup(messages)
                 raise ValueError(
                     f"hudi_lite write: recordKey mismatch — table has "
                     f"{want!r}"
                 )
-            have_parts = (
-                props.get("hoodie.table.partition.fields", "").split(",")
-                if props.get("hoodie.table.partition.fields")
-                else []
-            )
-            if have_parts != self.part_cols:
-                self._cleanup(messages)
+            if _partition_fields(props) != self.part_cols:
                 raise ValueError(
                     f"hudi_lite write: partition fields mismatch — table "
-                    f"has {have_parts}, write declared {self.part_cols}"
+                    f"has {_partition_fields(props)}, write declared "
+                    f"{self.part_cols}"
                 )
         _write_properties(self.path, self.record_key, self.part_cols)
-        from dataset_grouper_spark.sources.hudi import _next_instant
-
+        extra: dict = {}
+        if overwrite and existed:
+            # insert_overwrite_table: one replacecommit replacing every
+            # live file group, new files in the same instant
+            replaced: dict[str, list[str]] = {}
+            for part, fid, _i, _p in hudi_file_slices(self.path):
+                replaced.setdefault(part, []).append(fid)
+            extra["partitionToReplaceFileIds"] = replaced
+        if epoch is not None:
+            extra["extraMetadata"] = {"app-id": epoch[0], "epoch": epoch[1]}
+        # rename every staged file's placeholder token to the instant
+        # (driver-local renames, O(files)); _commit claims the instant
+        # and, on a lost race, removes the renamed files
         instant = _next_instant(self.path)
-        stats = _finalize_files(self.path, messages, instant)
-        try:
-            if self.overwrite and existed:
-                # insert_overwrite_table: one replacecommit replacing
-                # every live file group, new files in the same instant
-                replaced: dict[str, list[str]] = {}
-                for part, fid, _i, _p in hudi_file_slices(self.path):
-                    replaced.setdefault(part, []).append(fid)
-                hp = _hoodie_path(self.path)
-                for suffix in (
-                    "replacecommit.requested",
-                    "replacecommit.inflight",
-                ):
-                    _fs.write_text(
-                        os.path.join(hp, f"{instant}.{suffix}"), "{}"
-                    )
-                body = {
-                    "partitionToWriteStats": stats,
-                    "partitionToReplaceFileIds": replaced,
-                    "operationType": "INSERT_OVERWRITE_TABLE",
+        stats: dict[str, list[dict]] = {}
+        for f in files:
+            part_rel, token = f.info
+            name = os.path.basename(f.dst).replace(token, instant)
+            rel = f"{part_rel}/{name}" if part_rel else name
+            _fs.move(f.dst, os.path.join(self.path, rel))
+            stats.setdefault(part_rel, []).append(
+                {
+                    "fileId": _BASE_RE.match(name).group("fid"),
+                    "path": rel,
+                    "numWrites": f.nrows,
+                    "fileSizeInBytes": f.size,
                 }
-                if extra_meta:
-                    body["extraMetadata"] = extra_meta
-                with _fs.open_create(
-                    os.path.join(hp, f"{instant}.replacecommit")
-                ) as f:
-                    f.write(json.dumps(body).encode())
-            else:
-                hp = _hoodie_path(self.path)
-                for suffix in ("commit.requested", "commit.inflight"):
-                    _fs.write_text(
-                        os.path.join(hp, f"{instant}.{suffix}"), "{}"
-                    )
-                body = {
-                    "partitionToWriteStats": stats,
-                    "operationType": "INSERT",
-                }
-                if extra_meta:
-                    body["extraMetadata"] = extra_meta
-                with _fs.open_create(
-                    os.path.join(hp, f"{instant}.commit")
-                ) as f:
-                    f.write(json.dumps(body).encode())
-        except FileExistsError:
-            # a racer claimed this instant: our files were already
-            # RENAMED into it, and files carrying a completed instant
-            # are readable — remove the finalized paths, not the stale
-            # staging names
-            for flist in stats.values():
-                for st in flist:
-                    try:
-                        _fs.remove(os.path.join(self.path, st["path"]))
-                    except (OSError, FileNotFoundError):
-                        pass
-            raise RuntimeError(
-                f"hudi_lite write: lost the commit race at instant "
-                f"{instant} — re-run the write"
             )
+        replace = "partitionToReplaceFileIds" in extra
+        _commit(
+            self.path,
+            instant,
+            "INSERT_OVERWRITE_TABLE" if replace else "INSERT",
+            stats,
+            action="replacecommit" if replace else "commit",
+            extra=extra,
+        )
 
-
-class _HudiLiteStreamArrowWriter(_HudiLiteArrowWriter, DataSourceStreamArrowWriter):
-    """Streaming sink: each micro-batch is one INSERT commit whose
-    ``extraMetadata`` carries ``{app-id, epoch=batchId}`` — a replayed
-    batch (epoch <= the app's last committed) no-ops with cleanup."""
-
-    def __init__(self, path, schema, record_key, part_cols, app_id):
-        super().__init__(path, False, schema, record_key, part_cols)
-        self.app_id = app_id
-
-    def _last_epoch(self):
+    def last_epoch(self, app_id):
         from dataset_grouper_spark.sources.hudi import _completed
 
         try:
             commits = _completed(self.path)
         except FileNotFoundError:
             return None
-        best = None
-        for meta in commits.values():
-            em = meta.get("extraMetadata") or {}
-            if em.get("app-id") == self.app_id:
-                e = int(em.get("epoch", -1))
-                best = e if best is None else max(best, e)
-        return best
-
-    def commit(self, messages, batchId):
-        last = self._last_epoch()
-        if last is not None and batchId <= last:
-            self._cleanup(messages)  # replayed epoch: no-op
-            return
-        # the real instant is claimed (and staged files renamed into
-        # it) inside the base commit — fresh per micro-batch
-        super().commit(
-            messages,
-            extra_meta={"app-id": self.app_id, "epoch": int(batchId)},
-        )
-
-    def abort(self, messages, batchId):
-        self._cleanup(messages)
+        epochs = [
+            int(em.get("epoch", -1))
+            for em in (m.get("extraMetadata") or {} for m in commits.values())
+            if em.get("app-id") == app_id
+        ]
+        return max(epochs, default=None)
 
 
-class HudiLiteDataSource(DataSource):
+class HudiLiteDataSource(lite.LiteDataSource):
     """``spark.dataSource.register(HudiLiteDataSource)`` then
     ``.format("hudi_lite").option("path", table_path)``. Options:
     ``path`` (required), ``recordKey`` (write; default the table's, or
@@ -1010,60 +681,52 @@ class HudiLiteDataSource(DataSource):
     def name(cls):
         return "hudi_lite"
 
-    def _path(self) -> str:
-        p = self.options.get("path")
-        if not p:
-            raise ValueError("hudi_lite: option 'path' is required")
-        return p
-
-    def _mode(self) -> str:
+    def _cdc(self) -> bool:
         m = (self.options.get("mode") or "append").lower()
         if m not in ("append", "cdc"):
             raise ValueError(
                 f"hudi_lite: mode {m!r} not supported (append/cdc)"
             )
-        return m
+        return m == "cdc"
 
     def schema(self):
         struct = _table_schema(self._path())
-        if self._mode() == "cdc":
-            from pyspark.sql.types import StringType, StructField
-
-            return StructType(
-                [StructField(c, StringType(), True) for c in _CDC_COLS]
-                + list(struct.fields)
-            )
-        return struct
+        return _cdc_schema(struct) if self._cdc() else struct
 
     def reader(self, schema):
-        if self._mode() == "cdc":
+        if self._cdc():
             raise ValueError(
                 "hudi_lite: mode=cdc is a STREAMING read option; for "
                 "batch CDC use sources.hudi.read_hudi_changes"
             )
-        return _HudiLiteBatchReader(self._path())
+        return lite.BatchReader(self._path(), _live)
 
     def streamReader(self, schema):
-        return _HudiLiteStreamReader(
+        return lite.StreamReader(
             self._path(),
-            self.options.get("startingInstant"),
-            cdc=self._mode() == "cdc",
+            "instant",
+            self.options.get("startingInstant") or "0",
+            _latest,
+            functools.partial(_between, cdc=self._cdc()),
         )
 
-    def _write_conf(self, schema):
-        from dataset_grouper_spark.sources.hudi import _table_props
+    def _table(self, schema) -> _HudiTable:
+        """The write adapter: an existing table's record key and
+        partition fields are authoritative; an option contradicting
+        them fails here."""
+        from dataset_grouper_spark.sources.hudi import (
+            _partition_fields,
+            _table_props,
+        )
 
         opt_key = self.options.get("recordKey")
-        opt_parts = self.options.get("partitionBy")
-        declared = (
-            [c.strip() for c in opt_parts.split(",") if c.strip()]
-            if opt_parts
-            else []
-        )
+        declared = self._partition_by()
         try:
             props = _table_props(self._path())
         except (FileNotFoundError, OSError):
-            return opt_key or schema.names[0], declared
+            return _HudiTable(
+                self._path(), schema, opt_key or schema.names[0], declared
+            )
         table_key = props.get("hoodie.table.recordkey.fields")
         if table_key and opt_key and opt_key != table_key:
             # same contract as the partitionBy check below: a caller
@@ -1072,26 +735,19 @@ class HudiLiteDataSource(DataSource):
                 f"hudi_lite write: recordKey option {opt_key!r} "
                 f"contradicts the table's record key {table_key!r}"
             )
-        key = table_key or opt_key
-        table_parts = (
-            props.get("hoodie.table.partition.fields", "").split(",")
-            if props.get("hoodie.table.partition.fields")
-            else []
-        )
+        table_parts = _partition_fields(props)
         if declared and declared != table_parts:
             raise ValueError(
                 f"hudi_lite write: partitionBy option {declared} "
                 f"contradicts the table's partition fields {table_parts}"
             )
-        return key, table_parts
+        return _HudiTable(
+            self._path(), schema, table_key or opt_key, table_parts
+        )
 
     def writer(self, schema, overwrite):
-        key, parts = self._write_conf(schema)
-        return _HudiLiteArrowWriter(self._path(), overwrite, schema, key, parts)
+        return lite.ArrowWriter(self._table(schema), overwrite)
 
     def streamWriter(self, schema, overwrite):
-        key, parts = self._write_conf(schema)
         app = self.options.get("epochAppId") or "hudi_lite_stream"
-        return _HudiLiteStreamArrowWriter(
-            self._path(), schema, key, parts, app
-        )
+        return lite.StreamArrowWriter(self._table(schema), app)

@@ -1,26 +1,17 @@
-"""``iceberg_lite`` — a PySpark Python Data Source (SPARK-44076 API)
-exposing the jar-free Iceberg metadata walk as a REGISTERED Spark
-format, batch and STREAMING — the Iceberg twin of ``delta_lite``:
+"""``iceberg_lite`` — the jar-free Iceberg metadata walk as a
+REGISTERED Spark format, batch and STREAMING, read and write — the
+Iceberg twin of ``delta_lite`` (the shared reader/writer core and its
+scale shape live in :mod:`.lite`):
 
     spark.dataSource.register(IcebergLiteDataSource)
     spark.read.format("iceberg_lite").option("path", t).load()
     spark.readStream.format("iceberg_lite").option("path", t).load()
 
-The streaming half TAILS the snapshot log: offsets ARE data sequence
-numbers (the spec's monotone per-commit counter), each micro-batch
-reads exactly the files the snapshots in ``(start, end]`` added, and
-Spark's own offset checkpointing makes recovery exactly-once
-(replaying a batch re-walks the same immutable snapshots —
-deterministic by construction; the contract Iceberg's own incremental
-append scan implements on the JVM).
-
-Scale shape: ``latestOffset``/``partitions`` are planning-scale
-metadata reads; data moves as one InputPartition per added file,
-decoded executor-side by pyarrow into Arrow RecordBatches (zero
-row-at-a-time Python). Iceberg data files carry EVERY column
-(identity partition values included), so unlike ``delta_lite`` there
-is no partition-literal restoration and no physical-name mapping —
-columns absent from an old file (schema evolution) backfill NULL.
+Stream offsets are data sequence numbers (the spec's monotone
+per-commit counter) — the contract Iceberg's own incremental append
+scan implements on the JVM. Iceberg data files carry EVERY column
+(identity partition values included), so there is no partition-literal
+restoration and no physical-name mapping.
 
 Honest gates, same as the batch changelog (`read_iceberg_changes`):
 the stream is APPEND-ONLY — a snapshot in range that commits DELETE
@@ -29,22 +20,31 @@ files (position or equality) raises; REPLACE snapshots (compaction,
 refuses tables whose current snapshot carries live delete files —
 merge-on-read reconciliation needs the anti-joins only the DataFrame
 path (`sources.iceberg.read_iceberg`) provides.
+
+Writes commit spec-shaped snapshots: an Avro manifest with Appendix-D
+column bounds, a manifest list and the next metadata version (exclusive
+claim). ``mode("overwrite")`` commits a snapshot whose manifest list
+carries NOTHING over — replace-table semantics, with full time travel
+to the pre-overwrite snapshots. An existing table's partition spec is
+honored automatically: identity fields group straight off the Arrow
+columns, and NON-IDENTITY transforms (bucket[N] via the spec's murmur3,
+truncate[W], year/month/day/hour) compute each row's partition value
+task-side with the same ``_transform_value`` the read-side pruning
+uses. A NEW table is partitioned with ``.option("partitionBy", "a,b")``
+(identity). Each manifest entry's ``partition`` struct carries the
+file's tuple — what ``read_iceberg(partition_filter=...)`` prunes on.
+Stream writes carry ``{app-id, epoch=batchId}`` in the snapshot
+summary plus an append-only per-app ledger that survives snapshot
+expiry (the ``iceberg_append_epoch`` scheme). Exact schema match on
+existing tables (evolution goes through
+``iceberg_append(merge_schema=True)``); identity partition sources must
+be string/int/long.
 """
 
 from __future__ import annotations
 
 import os
 
-from dataset_grouper_spark.compat import fs as _fs
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceArrowWriter,
-    DataSourceReader,
-    DataSourceStreamArrowWriter,
-    DataSourceStreamReader,
-    InputPartition,
-    WriterCommitMessage,
-)
 from pyspark.sql.types import (
     BinaryType,
     BooleanType,
@@ -59,6 +59,9 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+
+from dataset_grouper_spark.compat import fs as _fs
+from dataset_grouper_spark.streaming import lite
 
 _TYPE_OBJS = {
     "boolean": BooleanType(),
@@ -98,41 +101,8 @@ def _struct_from_iceberg(fields: list[dict]) -> StructType:
     return StructType(out)
 
 
-class _FilePartition(InputPartition):
-    def __init__(self, path, field_names, types):
-        self.path = path
-        self.field_names = field_names  # schema order
-        self.types = types  # name -> pyspark DataType (picklable)
-
-
-def _read_file_as_arrow(part):
-    """Executor-side decode: one parquet file -> Arrow batches in
-    schema column order; columns the file predates backfill NULL."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from pyspark.sql.pandas.types import to_arrow_type
-
-    pf = pq.ParquetFile(part.path)
-    have = set(pf.schema_arrow.names)
-    data_cols = [n for n in part.field_names if n in have]
-    for batch in pf.iter_batches(columns=data_cols):
-        n_rows = batch.num_rows
-        arrays = []
-        for name in part.field_names:
-            atype = to_arrow_type(part.types[name])
-            if name in have:
-                arrays.append(batch.column(data_cols.index(name)).cast(atype))
-            else:
-                arrays.append(pa.nulls(n_rows, type=atype))
-        yield pa.RecordBatch.from_arrays(arrays, names=part.field_names)
-
-
-def _table_state(path: str):
-    """(meta, current schema dict, StructType) — shared planning read."""
-    from dataset_grouper_spark.sources.iceberg import _load_metadata
-
-    meta = _load_metadata(path)
+def _current_schema(meta, path):
+    """(current schema dict, its StructType)."""
     schemas = meta.get("schemas") or []
     schema = next(
         (
@@ -144,765 +114,354 @@ def _table_state(path: str):
     )
     if schema is None:
         raise ValueError(f"iceberg_lite: no schema in {path}")
-    return meta, schema, _struct_from_iceberg(schema["fields"])
+    return schema, _struct_from_iceberg(schema["fields"])
 
 
-def _partitions_for(paths, struct):
-    field_names = [f.name for f in struct.fields]
-    types = {f.name: f.dataType for f in struct.fields}
-    return [_FilePartition(p, field_names, types) for p in paths]
+def _load(path):
+    from dataset_grouper_spark.sources.iceberg import _load_metadata
+
+    meta = _load_metadata(path)
+    return (meta, *_current_schema(meta, path))
 
 
-class _IcebergLiteBatchReader(DataSourceReader):
-    def __init__(self, path: str):
-        self.path = path
+def _live(path, skip):
+    """Batch plan: the current snapshot's data files, minus those whose
+    manifest bounds (Appendix-D lower/upper envelopes) disprove
+    ``skip``."""
+    from dataset_grouper_spark.sources.iceberg import _live_files
 
-    def partitions(self):
-        from dataset_grouper_spark.sources.iceberg import _live_files
-
-        meta, _schema, struct = _table_state(self.path)
-        cur = meta.get("current-snapshot-id")
-        if cur is None:
-            return [None]
-        snap = next(
-            s for s in meta["snapshots"] if s["snapshot-id"] == cur
+    meta, schema, struct = _load(path)
+    cur = meta.get("current-snapshot-id")
+    if cur is None:
+        return []
+    snap = next(s for s in meta["snapshots"] if s["snapshot-id"] == cur)
+    by_name = {f["name"]: f for f in schema["fields"]}
+    by_id, field_types = [], {}
+    for col, op, value in skip:
+        f = by_name.get(col)
+        if f is None or not isinstance(f["type"], str):
+            continue  # nested/unknown column: no file-level help
+        by_id.append((f["id"], op, value))
+        field_types[f["id"]] = f["type"]
+    data, delete_files, _rows, eq = _live_files(
+        path, snap, None, by_id or None, field_types
+    )
+    if delete_files or eq:
+        raise RuntimeError(
+            "iceberg_lite batch read: table carries merge-on-read "
+            "delete files — use sources.iceberg.read_iceberg (the "
+            "DataFrame path applies the delete anti-joins)"
         )
-        data, delete_files, _rows, eq = _live_files(self.path, snap)
-        # RuntimeError, not NotImplementedError: the DSv2 wrapper
-        # treats NotImplementedError from partitions() as "no
-        # partitioning support" and silently falls back
-        if delete_files or eq:
-            raise RuntimeError(
-                "iceberg_lite batch read: table carries merge-on-read "
-                "delete files — use sources.iceberg.read_iceberg (the "
-                "DataFrame path applies the delete anti-joins)"
-            )
-        parts = _partitions_for([p for p, _s in data], struct)
-        return parts or [None]
-
-    def read(self, partition):
-        if partition is None:
-            return iter(())
-        return _read_file_as_arrow(partition)
+    return [lite.FilePartition(p, struct) for p, _s in data]
 
 
-class _IcebergLitePushdownReader(_IcebergLiteBatchReader):
-    """Pushdown-capable variant, OPT-IN via
-    ``.option("pushdown", "true")`` — comparison/IN filters on
-    top-level columns feed the manifest bounds skipper (Iceberg
-    Appendix-D lower/upper envelopes in ``_live_files``), so
-    ``spark.read.format("iceberg_lite")....filter("id < k")`` plans
-    only candidate files. Skipping is never exact, so EVERY filter is
-    returned for Spark to re-evaluate row-level.
+def _latest(path):
+    from dataset_grouper_spark.sources.iceberg import _load_metadata
 
-    WHY OPT-IN — the same verified Spark 4.1 wrapper hazard as
-    delta_lite (see _DeltaLitePushdownReader): the JVM's
-    PythonDataSourceV2 keeps ONE mutable readInfo slot per load()
-    relation; pushFilters overwrites it, and a later plan on the SAME
-    relation with no translatable filters reuses the slot WITHOUT
-    re-invoking Python (pushdownFiltersInPython gates the runner on
-    isAnyFilterSupported). Rule when opting in: ONE load() per query.
-    """
-
-    def __init__(self, path: str):
-        super().__init__(path)
-        self.skip_filters: list[tuple[str, str, object]] = []
-
-    def pushFilters(self, filters):
-        from pyspark.sql.datasource import (
-            EqualTo,
-            GreaterThan,
-            GreaterThanOrEqual,
-            In,
-            LessThan,
-            LessThanOrEqual,
-        )
-
-        ops = {
-            EqualTo: "=",
-            LessThan: "<",
-            LessThanOrEqual: "<=",
-            GreaterThan: ">",
-            GreaterThanOrEqual: ">=",
-        }
-        for f in filters:
-            op = ops.get(type(f))
-            if (
-                op is not None
-                and len(f.attribute) == 1
-                and f.value is not None
-            ):
-                self.skip_filters.append((f.attribute[0], op, f.value))
-            elif (
-                isinstance(f, In)
-                and len(f.attribute) == 1
-                and f.value
-                and all(v is not None for v in f.value)
-            ):
-                # IN ⊆ [min, max] envelope: sound, still prunes
-                self.skip_filters.append(
-                    (f.attribute[0], ">=", min(f.value))
-                )
-                self.skip_filters.append(
-                    (f.attribute[0], "<=", max(f.value))
-                )
-            yield f  # Spark always re-evaluates: skipping is file-level
-
-    def partitions(self):
-        if not self.skip_filters:
-            return super().partitions()
-        from dataset_grouper_spark.sources.iceberg import _live_files
-
-        meta, schema, struct = _table_state(self.path)
-        cur = meta.get("current-snapshot-id")
-        if cur is None:
-            return [None]
-        snap = next(
-            s for s in meta["snapshots"] if s["snapshot-id"] == cur
-        )
-        by_name = {f["name"]: f for f in schema["fields"]}
-        skip, field_types = [], {}
-        for col, op, value in self.skip_filters:
-            f = by_name.get(col)
-            if f is None or not isinstance(f["type"], str):
-                continue  # nested/unknown column: no file-level help
-            skip.append((f["id"], op, value))
-            field_types[f["id"]] = f["type"]
-        data, delete_files, _rows, eq = _live_files(
-            self.path, snap, None, skip or None, field_types
-        )
-        if delete_files or eq:
-            raise RuntimeError(
-                "iceberg_lite batch read: table carries merge-on-read "
-                "delete files — use sources.iceberg.read_iceberg (the "
-                "DataFrame path applies the delete anti-joins)"
-            )
-        parts = _partitions_for([p for p, _s in data], struct)
-        return parts or [None]
+    try:
+        meta = _load_metadata(path)
+    except FileNotFoundError:
+        return 0
+    return int(meta.get("last-sequence-number") or 0)
 
 
-class _IcebergLiteStreamReader(DataSourceStreamReader):
-    def __init__(self, path: str, starting_sequence: int | None):
-        self.path = path
-        self.starting_sequence = starting_sequence
+def _between(path, lo, hi):
+    """Stream plan: the data files the snapshots with sequence numbers
+    in ``(lo, hi]`` added."""
+    from dataset_grouper_spark.sources.iceberg import (
+        _added_data_files,
+        _snapshots_by_sequence,
+    )
 
-    def initialOffset(self):
-        if self.starting_sequence is not None:
-            return {"sequence": int(self.starting_sequence) - 1}
-        return {"sequence": 0}
-
-    def latestOffset(self):
-        from dataset_grouper_spark.sources.iceberg import _load_metadata
-
-        try:
-            meta = _load_metadata(self.path)
-        except FileNotFoundError:
-            return {"sequence": 0}
-        return {"sequence": int(meta.get("last-sequence-number") or 0)}
-
-    def partitions(self, start, end):
-        from dataset_grouper_spark.sources.iceberg import (
-            _added_data_files,
-            _load_metadata,
-            _snapshots_by_sequence,
-        )
-
-        lo, hi = int(start["sequence"]), int(end["sequence"])
-        if hi <= lo:
-            return [None]
-        meta = _load_metadata(self.path)
-        snaps = _snapshots_by_sequence(meta)
-        want = [
-            s
-            for s in snaps
-            if lo < int(s.get("sequence-number") or 0) <= hi
-        ]
-        have = [int(s.get("sequence-number") or 0) for s in want]
-        if have != list(range(lo + 1, hi + 1)):
-            raise ValueError(
-                f"iceberg_lite stream: sequence range ({lo}, {hi}] not "
-                f"fully retained (have {have}; expired history? restart "
-                "from a newer startingSequence)"
-            )
-        _m, _schema, struct = _table_state(self.path)
-        paths = []
-        for s in want:
-            if (s.get("summary") or {}).get("operation") == "replace":
-                continue  # compaction: no logical change
-            paths.extend(
-                _added_data_files(self.path, s, "iceberg_lite stream")
-            )
-        return _partitions_for(paths, struct) or [None]
-
-    def read(self, partition):
-        if partition is None:
-            return iter(())
-        return _read_file_as_arrow(partition)
-
-    def commit(self, end):
-        pass  # offsets live in Spark's own checkpoint
-
-
-class _IceWriteMessage(WriterCommitMessage):
-    """One per task. ``files`` lists
-    (path, size, nrows, partition_struct_or_None) for every parquet
-    file the task staged — one per distinct partition tuple it saw
-    (one total when unpartitioned)."""
-
-    def __init__(self, files: list[tuple] | None = None):
-        self.files = files or []
-
-
-def _ice_write_task_files(table_path, iterator, part_cols, transforms=None):
-    """Executor-side staging for the iceberg_lite writers: one parquet
-    file per distinct partition tuple per task (Iceberg data files
-    KEEP partition columns — only the manifest's partition struct
-    makes pruning work). Upstream should repartition by the partition
-    columns so a task sees few distinct tuples.
-
-    ``transforms`` (r13, VERDICT r12 task 3) routes NON-IDENTITY
-    specs through the format API: a list of ``(spec_field_name,
-    source_col, transform, src_type)`` — each row's partition value
-    comes from the same ``_transform_value`` the read-side pruning
-    uses (spec murmur3 for bucket[N], truncate[W], date transforms),
-    so files group by TRANSFORMED value and the manifest carries the
-    exact struct ``iceberg_append(partition_spec=...)`` would
-    commit."""
-    import uuid
-
-    import pyarrow.parquet as pq
-
-    ddir = os.path.join(table_path, "data")
-    _fs.makedirs(ddir)
-    if transforms:
-        import pandas as pd
-
-        from dataset_grouper_spark.sources.iceberg import (
-            _transform_value,
-        )
-
-        names = [t[0] for t in transforms]
-        writers: dict[tuple, list] = {}
-        for batch in iterator:
-            tvals = {}
-            for name, src, tr, st in transforms:
-                vals = batch.column(src).to_pylist()
-                tvals[name] = [_transform_value(tr, v, st) for v in vals]
-            key_df = pd.DataFrame(
-                {
-                    n: pd.Series(
-                        [None if v is None else str(v) for v in tvals[n]],
-                        dtype=object,
-                    )
-                    for n in names
-                }
-            )
-            groups = key_df.groupby(names, dropna=False, sort=False)
-            for _tup, idx in groups.indices.items():
-                first = int(idx[0])
-                part = {n: tvals[n][first] for n in names}
-                k = tuple(sorted(part.items(), key=lambda kv: kv[0]))
-                sliced = batch.take(idx)
-                if k not in writers:
-                    dst = os.path.join(
-                        ddir, f"w-{uuid.uuid4().hex}.parquet"
-                    )
-                    w = pq.ParquetWriter(
-                        _fs.open_write(dst), sliced.schema
-                    )
-                    writers[k] = [w, dst, 0, part]
-                writers[k][0].write_batch(sliced)
-                writers[k][2] += sliced.num_rows
-        if not writers:
-            return _IceWriteMessage()
-        files = []
-        for w, dst, nrows, part in writers.values():
-            w.close()
-            files.append((dst, _fs.file_size(dst), nrows, part))
-        return _IceWriteMessage(files)
-    if not part_cols:
-        dst = os.path.join(ddir, f"w-{uuid.uuid4().hex}.parquet")
-        writer, nrows = None, 0
-        for batch in iterator:
-            if writer is None:
-                writer = pq.ParquetWriter(_fs.open_write(dst), batch.schema)
-            writer.write_batch(batch)
-            nrows += batch.num_rows
-        if writer is None:
-            return _IceWriteMessage()
-        writer.close()
-        return _IceWriteMessage(
-            [(dst, _fs.file_size(dst), nrows, None)]
-        )
-    import pyarrow as pa
-
-    writers: dict[tuple, list] = {}  # key -> [pq writer, dst, nrows, part]
-    for batch in iterator:
-        # group on STRINGIFIED int keys (to_pandas coerces a NULL-
-        # carrying int column to float64 — ADVICE r7), but take the
-        # typed partition VALUES straight from the Arrow arrays
-        key_batch = batch.select(part_cols)
-        grp_arrays = []
-        for f in key_batch.schema:
-            col = key_batch.column(f.name)
-            if pa.types.is_integer(f.type):
-                col = col.cast(pa.string())
-            grp_arrays.append(col)
-        key_df = pa.RecordBatch.from_arrays(
-            grp_arrays, names=list(part_cols)
-        ).to_pandas()
-        groups = key_df.groupby(part_cols, dropna=False, sort=False)
-        for tup, idx in groups.indices.items():
-            if len(part_cols) == 1:
-                tup = (tup,)
-            first = int(idx[0])
-            part = {
-                c: key_batch.column(c)[first].as_py() for c in part_cols
-            }
-            k = tuple(sorted(part.items()))
-            sliced = batch.take(idx)
-            if k not in writers:
-                dst = os.path.join(ddir, f"w-{uuid.uuid4().hex}.parquet")
-                w = pq.ParquetWriter(_fs.open_write(dst), sliced.schema)
-                writers[k] = [w, dst, 0, part]
-            writers[k][0].write_batch(sliced)
-            writers[k][2] += sliced.num_rows
-    if not writers:
-        return _IceWriteMessage()
-    files = []
-    for w, dst, nrows, part in writers.values():
-        w.close()
-        files.append((dst, _fs.file_size(dst), nrows, part))
-    return _IceWriteMessage(files)
-
-
-def _ice_schema_fields(schema: StructType) -> list[dict]:
-    from dataset_grouper_spark.sources.iceberg import _iceberg_type
-
+    meta, _schema, struct = _load(path)
+    want = [
+        s
+        for s in _snapshots_by_sequence(meta)
+        if lo < int(s.get("sequence-number") or 0) <= hi
+    ]
+    lite.check_retained(
+        "iceberg_lite",
+        [int(s.get("sequence-number") or 0) for s in want],
+        lo,
+        hi,
+        "startingSequence",
+    )
     return [
-        {
-            "id": i + 1,
-            "name": f.name,
-            "required": False,
-            "type": _iceberg_type(f.dataType.simpleString()),
-        }
-        for i, f in enumerate(schema.fields)
+        lite.FilePartition(p, struct)
+        for s in want
+        if (s.get("summary") or {}).get("operation") != "replace"
+        for p in _added_data_files(path, s, "iceberg_lite stream")
     ]
 
 
-class _IcebergLiteArrowWriter(DataSourceArrowWriter):
-    """Write half of ``iceberg_lite`` — spec-shaped snapshot commits
-    through the Python data source API:
+def _rows(rows):
+    return rows  # Iceberg data files keep every column
 
-        df.write.format("iceberg_lite").mode("append")
-          .option("path", t).save()
 
-    Each task streams its Arrow batches into ONE parquet file under
-    ``<table>/data`` (invisible until the snapshot commits), and the
-    driver commit writes an Avro manifest with Appendix-D column
-    bounds + a manifest list + the next metadata version (exclusive
-    claim). ``mode("overwrite")`` commits a snapshot whose manifest
-    list carries NOTHING over — the spec's replace-table semantics,
-    with full time travel to the pre-overwrite snapshots.
+class _IcebergTable:
+    """Write adapter shared by the batch and stream writers.
+    ``transforms`` — ``[(spec_field_name, source_col, transform,
+    src_type)]`` — is set when the table's default spec has any
+    non-identity field; ``part_cols`` lists identity sources
+    otherwise."""
 
-    Partitioned writes: an EXISTING partitioned table's spec is
-    honored automatically — identity fields group straight off the
-    Arrow columns, and NON-IDENTITY transforms (bucket[N] via the
-    spec's murmur3, truncate[W], year/month/day/hour) compute each
-    row's partition value task-side with the same ``_transform_value``
-    the read-side pruning uses (r13, VERDICT r12 task 3). A NEW table
-    is partitioned with ``.option("partitionBy", "a,b")`` (identity).
-    Data files keep the partition columns (Iceberg layout); each
-    manifest entry's ``partition`` struct carries the file's tuple,
-    which is what ``read_iceberg(partition_filter=...)`` prunes on.
-
-    Honest gates: exact schema match on existing tables (evolution
-    goes through ``iceberg_append(merge_schema=True)``); identity
-    partition sources must be string/int/long."""
-
-    def __init__(
-        self,
-        path: str,
-        overwrite: bool,
-        schema: StructType,
-        part_cols: list[str] | None = None,
-        transforms: list[tuple] | None = None,
-    ):
+    def __init__(self, path, schema, part_cols, transforms):
         self.path = os.path.abspath(path)
-        self.overwrite = overwrite
         self.schema = schema
-        self.part_cols = list(part_cols or [])
-        # [(spec_field_name, source_col, transform, src_type)] when
-        # the table's default spec has any non-identity field
-        self.transforms = list(transforms or []) or None
-        missing = [c for c in self.part_cols if c not in schema.names]
-        if self.transforms:
-            missing += [
-                t[1] for t in self.transforms if t[1] not in schema.names
-            ]
-        if missing:
-            raise ValueError(
-                f"iceberg_lite write: partition columns {missing} not "
-                f"in the frame ({schema.names})"
-            )
-
-    def write(self, iterator):
-        return _ice_write_task_files(
-            self.path, iterator, self.part_cols, self.transforms
+        self.part_cols = list(part_cols)
+        self.transforms = list(transforms)
+        lite.check_columns(
+            "iceberg_lite",
+            schema,
+            self.part_cols + [t[1] for t in self.transforms],
         )
 
-    def _cleanup(self, messages):
-        for m in messages:
-            if m is None:
-                continue
-            for dst, _size, _nrows, _part in m.files:
-                try:
-                    _fs.remove(dst)
-                except (OSError, FileNotFoundError):
-                    pass
-
-    def abort(self, messages):
-        self._cleanup(messages)
-
-    def _load_or_create_meta(self):
+    def stage(self, batches):
         import uuid
 
-        from dataset_grouper_spark.sources.iceberg import _load_metadata
+        import pyarrow as pa
 
-        mdir = os.path.join(self.path, "metadata")
-        exists = _fs.is_dir(mdir) and any(
-            n.endswith(".metadata.json") for n in _fs.listdir(mdir)
-        )
-        if exists:
-            meta = _load_metadata(self.path)
-            cur = next(
-                (
-                    s
-                    for s in meta.get("schemas") or []
-                    if s.get("schema-id") == meta.get("current-schema-id")
-                ),
-                None,
-            )
-            want = _ice_schema_fields(self.schema)
-            have = [
-                {"name": f["name"], "type": f["type"]}
-                for f in (cur or {}).get("fields", [])
+        from dataset_grouper_spark.sources.iceberg import _transform_value
+
+        ddir = os.path.join(self.path, "data")
+        _fs.makedirs(ddir)
+        transforms = self.transforms
+        names = [t[0] for t in transforms] or self.part_cols
+
+        def keys(batch):
+            if not transforms:
+                return [batch.column(c) for c in names]
+            return [
+                pa.array(
+                    [_transform_value(tr, v, st) for v in
+                     batch.column(src).to_pylist()]
+                )
+                for _n, src, tr, st in transforms
             ]
-            if [{"name": f["name"], "type": f["type"]} for f in want] != have:
-                raise ValueError(
-                    f"iceberg_lite write: schema mismatch — table has "
-                    f"{have}, frame maps to {want}"
-                )
-            spec = next(
-                (
-                    s
-                    for s in meta.get("partition-specs") or []
-                    if s.get("spec-id") == meta.get("default-spec-id", 0)
-                ),
-                {"fields": []},
-            )
-            spec_fields = spec.get("fields") or []
-            by_id = {f["id"]: f["name"] for f in cur["fields"]}
-            if any(
-                f.get("transform", "identity") != "identity"
-                for f in spec_fields
-            ):
-                # non-identity spec: the writer must have been built
-                # against THIS spec (factory resolves it); a spec
-                # changed mid-write commits wrong partition structs
-                want = [
-                    (f["name"], by_id[f["source-id"]],
-                     f.get("transform", "identity"))
-                    for f in spec_fields
-                ]
-                have = [(t[0], t[1], t[2]) for t in self.transforms or []]
-                if want != have:
-                    raise RuntimeError(
-                        "iceberg_lite write: the table's partition "
-                        f"spec ({want}) does not match what this "
-                        f"writer staged under ({have}) — re-run"
-                    )
-                return meta, cur, spec_fields
-            table_parts = [by_id[f["source-id"]] for f in spec_fields]
-            if table_parts != self.part_cols:
-                raise ValueError(
-                    f"iceberg_lite write: partition columns mismatch — "
-                    f"table spec has {table_parts}, write declared "
-                    f"{self.part_cols}"
-                )
-            return meta, cur, spec_fields
-        _fs.makedirs(mdir)
-        fields = _ice_schema_fields(self.schema)
-        schema_entry = {
-            "type": "struct",
-            "schema-id": 0,
-            "fields": fields,
-        }
-        ids = {f["name"]: f["id"] for f in fields}
-        spec_fields = [
-            {
-                "name": c,  # identity: spec field name == column name
-                "transform": "identity",
-                "source-id": ids[c],
-                "field-id": 1000 + i,
-            }
-            for i, c in enumerate(self.part_cols)
-        ]
-        meta = {
-            "format-version": 2,
-            "table-uuid": str(uuid.uuid4()),
-            "location": self.path,
-            "current-snapshot-id": None,
-            "schemas": [schema_entry],
-            "current-schema-id": 0,
-            "partition-specs": [{"spec-id": 0, "fields": spec_fields}],
-            "default-spec-id": 0,
-            "snapshots": [],
-        }
-        return meta, schema_entry, spec_fields
 
-    def _commit_files(self, messages, summary=None, carry=None) -> int:
+        def place(values):
+            dst = os.path.join(ddir, f"w-{uuid.uuid4().hex}.parquet")
+            return dst, _rows, dict(zip(names, values)) if names else None
+
+        return lite.stage(batches, keys, place)
+
+    def _meta(self):
+        """(metadata, current schema entry) checked against what this
+        writer staged — or a new table's, built in memory."""
+        import uuid
+
+        from dataset_grouper_spark.sources.iceberg import (
+            _default_spec,
+            _iceberg_type,
+            _load_metadata,
+        )
+
+        fields = [
+            {
+                "id": i + 1,
+                "name": f.name,
+                "required": False,
+                "type": _iceberg_type(f.dataType.simpleString()),
+            }
+            for i, f in enumerate(self.schema.fields)
+        ]
+        try:
+            meta = _load_metadata(self.path)
+        except FileNotFoundError:
+            _fs.makedirs(os.path.join(self.path, "metadata"))
+            ids = {f["name"]: f["id"] for f in fields}
+            entry = {"type": "struct", "schema-id": 0, "fields": fields}
+            spec_fields = [
+                {
+                    "name": c,  # identity: spec field name == column name
+                    "transform": "identity",
+                    "source-id": ids[c],
+                    "field-id": 1000 + i,
+                }
+                for i, c in enumerate(self.part_cols)
+            ]
+            return {
+                "format-version": 2,
+                "table-uuid": str(uuid.uuid4()),
+                "location": self.path,
+                "current-snapshot-id": None,
+                "schemas": [entry],
+                "current-schema-id": 0,
+                "partition-specs": [{"spec-id": 0, "fields": spec_fields}],
+                "default-spec-id": 0,
+                "snapshots": [],
+            }, entry
+        cur, _struct = _current_schema(meta, self.path)
+        want = [{"name": f["name"], "type": f["type"]} for f in fields]
+        have = [{"name": f["name"], "type": f["type"]} for f in cur["fields"]]
+        if want != have:
+            raise ValueError(
+                f"iceberg_lite write: schema mismatch — table has "
+                f"{have}, frame maps to {want}"
+            )
+        by_id = {f["id"]: f["name"] for f in cur["fields"]}
+        spec_fields = _default_spec(meta)[1].get("fields") or []
+        spec = [
+            (f["name"], by_id[f["source-id"]], f.get("transform", "identity"))
+            for f in spec_fields
+        ]
+        if any(tr != "identity" for _n, _c, tr in spec):
+            # the factory built this writer against the spec; one
+            # changed mid-write would commit wrong partition structs
+            staged = [tuple(t[:3]) for t in self.transforms]
+            if spec != staged:
+                raise RuntimeError(
+                    f"iceberg_lite write: the table's partition spec "
+                    f"({spec}) does not match what this writer staged "
+                    f"under ({staged}) — re-run"
+                )
+        elif [c for _n, c, _t in spec] != self.part_cols:
+            raise ValueError(
+                f"iceberg_lite write: partition columns mismatch — table "
+                f"spec has {[c for _n, c, _t in spec]}, write declared "
+                f"{self.part_cols}"
+            )
+        return meta, cur
+
+    def commit(self, files, overwrite, epoch):
         import uuid
 
         from dataset_grouper_spark.sources.avro import write_avro_file
         from dataset_grouper_spark.sources.iceberg import (
             _MANIFEST_SCHEMA,
             _commit_snapshot,
+            _default_spec_value_types,
             _footer_bounds,
             _partition_manifest_schema,
+            _record_epoch,
         )
 
-        meta, schema_entry, spec_fields = self._load_or_create_meta()
-        manifest_schema = _MANIFEST_SCHEMA
-        if spec_fields:
-            by_id = {
-                f["id"]: f["type"] for f in schema_entry["fields"]
-            }
-            value_types = {}
-            for f in spec_fields:
-                tr = f.get("transform", "identity")
-                src = by_id[f["source-id"]]
-                if tr == "identity":
-                    if src == "string":
-                        value_types[f["name"]] = "string"
-                    elif src in ("int", "long"):
-                        value_types[f["name"]] = "long"
-                    else:
-                        raise NotImplementedError(
-                            f"iceberg_lite write: identity partition "
-                            f"on {src!r} column {f['name']!r} is not "
-                            "supported (string/int/long only)"
-                        )
-                elif tr.startswith("truncate[") and src == "string":
-                    value_types[f["name"]] = "string"
-                else:
-                    # bucket / numeric truncate / date transforms:
-                    # int-kind values, long manifest encoding — the
-                    # iceberg_append convention
-                    value_types[f["name"]] = "long"
-            manifest_schema = _partition_manifest_schema(
-                spec_fields, value_types
-            )
-        snap_id = (
-            max(
-                (s["snapshot-id"] for s in meta["snapshots"]),
-                default=0,
-            )
-            + 1
-        )
-        entries = []
-        for m in messages:
-            if m is None:
-                continue
-            for dst, size, nrows, part in m.files:
-                lo_b, hi_b = _footer_bounds(dst, schema_entry["fields"])
-                data_file = {
-                    "content": 0,
-                    "file_path": dst,
-                    "file_format": "PARQUET",
-                    "record_count": nrows,
-                    "file_size_in_bytes": size,
-                    "equality_ids": None,
-                    "lower_bounds": lo_b,
-                    "upper_bounds": hi_b,
-                }
-                if spec_fields:
-                    data_file["partition"] = {
-                        k: (
-                            int(v)
-                            if v is not None
-                            and value_types.get(k) == "long"
-                            else v
-                        )
-                        for k, v in (part or {}).items()
-                    }
-                entries.append(
-                    {
-                        "status": 1,
-                        "snapshot_id": None,
-                        "sequence_number": None,
-                        "data_file": data_file,
-                    }
+        meta, entry = self._meta()
+        spec, value_types = _default_spec_value_types(meta, entry)
+        src_types = {f["id"]: f["type"] for f in entry["fields"]}
+        for f in spec["fields"]:
+            src = src_types[f["source-id"]]
+            if f.get("transform", "identity") == "identity" and src not in (
+                "string",
+                "int",
+                "long",
+            ):
+                raise NotImplementedError(
+                    f"iceberg_lite write: identity partition on {src!r} "
+                    f"column {f['name']!r} is not supported "
+                    "(string/int/long only)"
                 )
-        mdir = os.path.join(self.path, "metadata")
-        mpath = os.path.join(mdir, f"w-{snap_id}-{uuid.uuid4().hex}.avro")
-        write_avro_file(mpath, manifest_schema, entries)
-        return _commit_snapshot(
+        entries = []
+        for f in files:
+            lo_b, hi_b = _footer_bounds(f.dst, entry["fields"])
+            data_file = {
+                "content": 0,
+                "file_path": f.dst,
+                "file_format": "PARQUET",
+                "record_count": f.nrows,
+                "file_size_in_bytes": f.size,
+                "equality_ids": None,
+                "lower_bounds": lo_b,
+                "upper_bounds": hi_b,
+            }
+            if spec["fields"]:
+                data_file["partition"] = {
+                    k: int(v)
+                    if v is not None and value_types.get(k) == "long"
+                    else v
+                    for k, v in (f.info or {}).items()
+                }
+            entries.append(
+                {
+                    "status": 1,
+                    "snapshot_id": None,
+                    "sequence_number": None,
+                    "data_file": data_file,
+                }
+            )
+        snap_id = max((s["snapshot-id"] for s in meta["snapshots"]), default=0) + 1
+        mpath = os.path.join(
+            self.path, "metadata", f"w-{snap_id}-{uuid.uuid4().hex}.avro"
+        )
+        write_avro_file(
+            mpath,
+            _partition_manifest_schema(spec["fields"], value_types)
+            if spec["fields"]
+            else _MANIFEST_SCHEMA,
+            entries,
+        )
+        summary = {"operation": "overwrite"} if overwrite else None
+        if epoch is not None:
+            summary = {"app-id": epoch[0], "epoch": epoch[1]}
+        # overwrite: the new manifest list carries NOTHING over —
+        # replace-table semantics, previous snapshots time-travel
+        _commit_snapshot(
             self.path,
             meta,
             snap_id,
             mpath,
             content=0,
             summary=summary,
-            carry_content=carry,
+            carry_content=set() if overwrite else None,
         )
+        if epoch is not None:
+            _record_epoch(self.path, *epoch)
 
-    def commit(self, messages):
+    def last_epoch(self, app_id):
+        from dataset_grouper_spark.sources.iceberg import iceberg_last_epoch
+
         try:
-            # overwrite: the new manifest list carries NOTHING over —
-            # replace-table semantics, previous snapshots time-travel
-            self._commit_files(
-                messages,
-                summary={"operation": "overwrite"}
-                if self.overwrite
-                else None,
-                carry=set() if self.overwrite else None,
-            )
-        except Exception:
-            self._cleanup(messages)
-            raise
+            return iceberg_last_epoch(self.path, app_id)
+        except FileNotFoundError:
+            return None
 
 
-class _IcebergLiteStreamArrowWriter(DataSourceStreamArrowWriter):
-    """Streaming write half: ``df.writeStream.format("iceberg_lite")``
-    — exactly-once via the epoch scheme `iceberg_append_epoch` uses:
-    the snapshot summary carries ``{app-id, epoch=batchId}`` atomically
-    with the commit and an append-only per-app ledger survives
-    snapshot expiry; a replayed batch no-ops and removes its files."""
-
-    def __init__(
-        self,
-        path: str,
-        schema: StructType,
-        app_id: str,
-        part_cols: list[str] | None = None,
-        transforms: list[tuple] | None = None,
-    ):
-        self.path = os.path.abspath(path)
-        self.schema = schema
-        self.app_id = app_id
-        self.overwrite = False
-        self.part_cols = list(part_cols or [])
-        self.transforms = list(transforms or []) or None
-        missing = [c for c in self.part_cols if c not in schema.names]
-        if self.transforms:
-            missing += [
-                t[1] for t in self.transforms if t[1] not in schema.names
-            ]
-        if missing:
-            raise ValueError(
-                f"iceberg_lite stream write: partition columns {missing} "
-                f"not in the frame ({schema.names})"
-            )
-
-    write = _IcebergLiteArrowWriter.write
-    _cleanup = _IcebergLiteArrowWriter._cleanup
-    _load_or_create_meta = _IcebergLiteArrowWriter._load_or_create_meta
-    _commit_files = _IcebergLiteArrowWriter._commit_files
-
-    def commit(self, messages, batchId):
-        from dataset_grouper_spark.sources.iceberg import (
-            _epoch_ledger_path,
-            iceberg_last_epoch,
-        )
-
-        mdir = os.path.join(self.path, "metadata")
-        exists = _fs.is_dir(mdir) and any(
-            n.endswith(".metadata.json") for n in _fs.listdir(mdir)
-        )
-        if exists:
-            last = iceberg_last_epoch(self.path, self.app_id)
-            if last is not None and batchId <= last:
-                self._cleanup(messages)  # replayed epoch: no-op
-                return
-        try:
-            self._commit_files(
-                messages,
-                summary={"app-id": self.app_id, "epoch": int(batchId)},
-            )
-        except Exception:
-            self._cleanup(messages)
-            raise
-        ledger = _epoch_ledger_path(self.path, self.app_id)
-        # read-modify-write: object stores can't append; one live
-        # writer per app_id is the stream checkpoint's contract
-        prior = _fs.read_text(ledger) if _fs.exists(ledger) else ""
-        _fs.write_text(ledger, prior + f"{int(batchId)}\n")
-
-    def abort(self, messages, batchId):
-        self._cleanup(messages)
-
-
-class IcebergLiteDataSource(DataSource):
+class IcebergLiteDataSource(lite.LiteDataSource):
     """``spark.dataSource.register(IcebergLiteDataSource)`` then
     ``.format("iceberg_lite").option("path", table_path)``. Options:
-    ``path`` (required), ``startingSequence`` (stream only — first
+    ``path`` (required); ``startingSequence`` (stream read — first
     data sequence number to consume; default 1, i.e. the whole table
-    then the tail)."""
+    then the tail); ``pushdown`` (batch read, opt-in file skipping —
+    see :class:`lite.PushdownReader`); ``partitionBy`` (write, new
+    tables only); ``epochAppId`` (stream write; default
+    ``iceberg_lite_stream``)."""
 
     @classmethod
     def name(cls):
         return "iceberg_lite"
 
-    def _path(self) -> str:
-        p = self.options.get("path")
-        if not p:
-            raise ValueError("iceberg_lite: option 'path' is required")
-        return p
-
     def schema(self):
-        _m, _schema, struct = _table_state(self._path())
-        return struct
+        return _load(self._path())[2]
 
     def reader(self, schema):
-        # pushdown is OPT-IN: Spark 4.1's DSv2 wrapper caches ONE
-        # planned scan per relation and reuses it for plans with no
-        # translatable filters (see _IcebergLitePushdownReader)
-        if str(self.options.get("pushdown", "false")).lower() == "true":
-            return _IcebergLitePushdownReader(self._path())
-        return _IcebergLiteBatchReader(self._path())
+        return self._reader(_live)
 
-    def _write_conf(self) -> tuple[list[str], list[tuple]]:
-        """(identity partition source columns, transform list) for a
-        write: an existing table's default spec is authoritative —
-        all-identity specs group straight off the frame columns;
-        specs with any non-identity field resolve to
-        ``(spec_name, source_col, transform, src_type)`` tuples the
-        write tasks evaluate via ``_transform_value`` (r13). A new
-        table takes ``.option("partitionBy", "a,b")`` (identity)."""
-        opt = self.options.get("partitionBy")
-        declared = (
-            [c.strip() for c in opt.split(",") if c.strip()] if opt else []
+    def streamReader(self, schema):
+        sv = self.options.get("startingSequence")
+        first = 0 if sv is None else int(sv) - 1
+        return lite.StreamReader(
+            self._path(), "sequence", first, _latest, _between
         )
+
+    def _table(self, schema) -> _IcebergTable:
+        """The write adapter: an existing table's default spec is
+        authoritative — all-identity specs group straight off the frame
+        columns; specs with any non-identity field resolve to transform
+        tuples the write tasks evaluate. A new table takes
+        ``.option("partitionBy", "a,b")`` (identity)."""
+        from dataset_grouper_spark.sources.iceberg import _default_spec
+
+        declared = self._partition_by()
         try:
-            meta, schema, _struct = _table_state(self._path())
+            meta, schema_entry, _struct = _load(self._path())
         except (FileNotFoundError, OSError, ValueError):
-            return declared, []
-        spec = next(
-            (
-                s
-                for s in meta.get("partition-specs") or []
-                if s.get("spec-id") == meta.get("default-spec-id", 0)
-            ),
-            {"fields": []},
-        )
+            return _IcebergTable(self._path(), schema, declared, [])
         by_id = {
-            f["id"]: (f["name"], f["type"]) for f in schema["fields"]
+            f["id"]: (f["name"], f["type"]) for f in schema_entry["fields"]
         }
-        spec_fields = spec.get("fields") or []
+        spec_fields = _default_spec(meta)[1].get("fields") or []
         if any(
-            f.get("transform", "identity") != "identity"
-            for f in spec_fields
+            f.get("transform", "identity") != "identity" for f in spec_fields
         ):
             if declared:
                 raise ValueError(
@@ -922,7 +481,7 @@ class IcebergLiteDataSource(DataSource):
                         src_type if isinstance(src_type, str) else "",
                     )
                 )
-            return [], transforms
+            return _IcebergTable(self._path(), schema, [], transforms)
         table_parts = [by_id[f["source-id"]][0] for f in spec_fields]
         if declared and declared != table_parts:
             raise ValueError(
@@ -931,23 +490,11 @@ class IcebergLiteDataSource(DataSource):
                 f"{table_parts} (an existing table's partitioning is "
                 "honored automatically; drop the option)"
             )
-        return table_parts, []
+        return _IcebergTable(self._path(), schema, table_parts, [])
 
     def writer(self, schema, overwrite):
-        parts, transforms = self._write_conf()
-        return _IcebergLiteArrowWriter(
-            self._path(), overwrite, schema, parts, transforms
-        )
+        return lite.ArrowWriter(self._table(schema), overwrite)
 
     def streamWriter(self, schema, overwrite):
         app = self.options.get("epochAppId") or "iceberg_lite_stream"
-        parts, transforms = self._write_conf()
-        return _IcebergLiteStreamArrowWriter(
-            self._path(), schema, app, parts, transforms
-        )
-
-    def streamReader(self, schema):
-        sv = self.options.get("startingSequence")
-        return _IcebergLiteStreamReader(
-            self._path(), int(sv) if sv is not None else None
-        )
+        return lite.StreamArrowWriter(self._table(schema), app)
