@@ -18,9 +18,12 @@ while the JVM-side cached partitions it pinned live on.
 
 from __future__ import annotations
 
+import logging
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
+
+_log = logging.getLogger(__name__)
 
 _PERSISTED: list[DataFrame] = []
 _RELEASERS: list[Callable[[], None]] = []
@@ -59,12 +62,12 @@ def release_intermediates() -> int:
             df.unpersist()
             n += 1
         except Exception:
-            pass
+            _log.warning("could not unpersist an intermediate", exc_info=True)
     while _RELEASERS:
         fn = _RELEASERS.pop()
         try:
             fn()
             n += 1
         except Exception:
-            pass
+            _log.warning("deferred release %r failed", fn, exc_info=True)
     return n

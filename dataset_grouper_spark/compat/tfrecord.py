@@ -213,7 +213,7 @@ def crc32c_batch(bufs: list[bytes]) -> np.ndarray:
     groups: dict[int, list[tuple[int, bytes, int]]] = {}
     for i, b in enumerate(bufs):
         n = len(b)
-        if n < 1024:
+        if n < _BATCH_M:  # no whole chunk to lockstep
             out[i] = _crc32c_py(b) ^ 0xFFFFFFFF
         elif n > _BATCH_MAX_LEN:
             out[i] = crc32c(b)

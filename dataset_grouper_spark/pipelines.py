@@ -80,7 +80,7 @@ def serialize_examples(df: DataFrame, check_schema: bool = True) -> DataFrame:
         try:
             if v != v:  # NaN (a nulled-out integral or float cell)
                 return None
-        except Exception:
+        except (TypeError, ValueError):  # ambiguous truth, e.g. pd.NA
             pass
         if hasattr(v, "item"):  # numpy scalar
             v = v.item()

@@ -6,6 +6,18 @@ and a shuffle-partition count sized from the environment rather than
 Spark's static default of 200 (pathological both at tiny local scale
 and at 100 TB cluster scale — AQE coalesces down, but the initial
 number should track cluster parallelism).
+
+Python workers fork from ``dataset_grouper_spark.worker_daemon``
+(``spark.python.daemon.module``) instead of ``pyspark.daemon``. Every
+task start calls ``importlib.invalidate_caches()``, and before Python
+3.13 that makes each cached zipimporter re-read its whole archive
+(pyspark.zip, the spark-core jar, py4j): ~200 ms CPU per task, most of
+a small pandas-UDF task's cost. The daemon re-reads an archive only
+when its stat key changed, so every pandas UDF, ``mapInPandas`` and
+Python data-source read task skips that tax. Python data-source
+*planner* processes (``pyspark.sql.worker.*``) do not start from the
+daemon and still pay it. Pass ``extra_conf={"spark.python.daemon.module":
+"pyspark.daemon"}`` to restore Spark's own daemon.
 """
 
 from __future__ import annotations
@@ -63,6 +75,9 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", os.environ.get("SPARK_UI", "false"))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
+        # Python workers fork from this daemon (see the module docstring);
+        # extra_conf may set "pyspark.daemon" back
+        .config("spark.python.daemon.module", "dataset_grouper_spark.worker_daemon")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

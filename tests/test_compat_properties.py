@@ -80,6 +80,18 @@ def test_crc32c_large_buffer_paths():
         assert tfrecord.crc32c(data) == tfrecord._crc32c_py(data) ^ 0xFFFFFFFF
 
 
+def test_crc32c_batch_matches_bytewise_every_length():
+    # one batch over every length 0..2100: the byte loop below 16 B,
+    # the lockstep groups (P = 1..256 chunks) and their tails above
+    import random
+
+    rng = random.Random(11)
+    recs = [rng.randbytes(n) for n in range(2101)]
+    got = tfrecord.crc32c_batch(recs)
+    want = [tfrecord._crc32c_py(r) ^ 0xFFFFFFFF for r in recs]
+    assert [int(c) for c in got] == want
+
+
 # ---- pixel codecs (operators.multimodal): arbitrary rasters roundtrip
 
 

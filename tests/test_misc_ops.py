@@ -55,6 +55,18 @@ def test_release_intermediates_unpersists(spark):
     assert cache.release_intermediates() == 0
 
 
+def test_release_intermediates_logs_failed_release(caplog):
+    from dataset_grouper_spark import cache
+
+    def broken():
+        raise RuntimeError("block gone")
+
+    cache.defer_release(broken)
+    with caplog.at_level("WARNING", logger="dataset_grouper_spark.cache"):
+        assert cache.release_intermediates() == 0
+    assert "deferred release" in caplog.text and "block gone" in caplog.text
+
+
 def test_approx_percentile_close_to_exact(spark):
     """The 100 TB path for value_percentiles_events: approx_percentile
     (bounded memory, no per-group sort buffer) lands within the
