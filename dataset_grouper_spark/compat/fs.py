@@ -64,6 +64,14 @@ def _split(path: str):
     return fs, p
 
 
+def pyarrow_target(path: str):
+    """``(filesystem, path)`` for pyarrow readers (``pyarrow.dataset``,
+    ``pyarrow.parquet``): the filesystem is None for a local path,
+    which pyarrow then opens locally, else the registered or
+    URI-resolved backend."""
+    return _split(path)
+
+
 def open_write(path: str) -> IO[bytes]:
     fs, p = _split(path)
     if fs is None:

@@ -8,11 +8,14 @@ Spark design: the dataset is a Parquet layout written by
 ``sinks.write_partitioned`` with a ``_group_index`` sidecar. Group
 listing comes from the index (no data scan); group order is shuffled by
 a seeded, content-deterministic scramble (the reference's
-``shuffle_files``/``shuffle_seed`` knobs, data_loaders.py:90-100);
-per-group reads are partition-pruned scans (directory layout) or
-group-filtered scans over group-major sorted files (bucketed layout) —
-either way Spark pushes ``group_id = X`` down to the Parquet reader,
-which the reference cannot do at all (it scans every shard; SURVEY §4).
+``shuffle_files``/``shuffle_seed`` knobs, data_loaders.py:90-100).
+The group stream's per-group reads are driver-side pyarrow reads of
+the layout's Parquet files, pruned by hive partition (the group's
+directory, or the bucket recomputed from its id) and then by row-group
+statistics on the group-major sorted ``group_id`` — no Spark job per
+group, where the reference scans every shard (SURVEY §4). The data
+path must therefore be readable from the driver. ``group()`` stays a
+Spark scan with the same predicate pushed down.
 
 Two consumption modes:
 - ``group_stream()``: driver-side iterator of (group_id, pandas
@@ -23,16 +26,30 @@ Two consumption modes:
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import itertools
+import operator
+import re
 from collections.abc import Callable, Iterator
+from typing import TYPE_CHECKING
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dataset_grouper_spark import keys
-from dataset_grouper_spark.sinks import BUCKET_COL, DATA_DIR, GROUP_INDEX_DIR
+from dataset_grouper_spark.compat import fs as _cfs
+from dataset_grouper_spark.sinks import (
+    BUCKET_COL,
+    DATA_DIR,
+    GROUP_INDEX_DIR,
+    read_layout,
+)
+
+if TYPE_CHECKING:
+    import pyarrow as pa
+    import pyarrow.dataset as pads
 
 # sentinel distinct from None: a NULL-key group's id IS None
 _NO_MORE = object()
@@ -50,6 +67,97 @@ def _bucket_of(group_id: str, num_buckets: int) -> int:
     return zlib.crc32(group_id.encode()) % num_buckets
 
 
+_INT_RE = re.compile(r"[+-]?[0-9]+")
+_DECIMAL_RE = re.compile(r"[+-]?([0-9]+\.?[0-9]*|\.[0-9]+)([eE][+-]?[0-9]+)?")
+
+
+def _listed_ids(dirs: set[str]) -> dict[str, str]:
+    """Directory value -> the group id Spark lists for it.
+
+    Spark reads ``group_id=`` directories through partition-column type
+    inference and the index and ``dataframe()`` cast the result back to
+    string, so all-numeric ids come back canonicalised: "007" lists as
+    "7", and "3" next to "1.50" lists as "3.0" (a double column). Every
+    other value lists as itself."""
+    if dirs and all(_INT_RE.fullmatch(d) for d in dirs):
+        return {d: str(int(d)) for d in dirs}
+    if dirs and all(_DECIMAL_RE.fullmatch(d) for d in dirs):
+        # Python's repr of a double is Java's Double.toString in
+        # [1e-3, 1e7); outside it the ids stay as written
+        return {
+            d: repr(float(d)) if 1e-3 <= abs(float(d)) < 1e7 else d
+            for d in dirs
+        }
+    return {d: d for d in dirs}
+
+
+def _arrow_to_pandas(
+    spark: SparkSession, schema: pa.Schema, columns: list[str]
+) -> Callable[[pa.Table], pd.DataFrame]:
+    """pyarrow Table of ``columns`` -> the frame ``DataFrame.toPandas``
+    builds for the same rows (pyspark/sql/pandas/conversion.py).
+
+    The column types are the Spark types the files were written with
+    (the schema Spark stores in every Parquet footer), read as nullable
+    the way Spark reads files. The table is cast to the Arrow schema a
+    Spark collect sends (INT96 timestamps become UTC instants), then
+    converted with toPandas's ``to_pandas`` options and Spark's own
+    per-column converters under the session time zone."""
+    import json
+
+    from pyspark.sql.pandas.types import (
+        _create_converter_to_pandas,
+        from_arrow_schema,
+        to_arrow_schema,
+    )
+    from pyspark.sql.types import StructField, StructType
+
+    stored = (schema.metadata or {}).get(b"org.apache.spark.sql.parquet.row.metadata")
+    spark_schema = (
+        StructType.fromJson(json.loads(stored))
+        if stored is not None
+        else from_arrow_schema(schema)
+    )
+    types = {f.name: f.dataType for f in spark_schema}
+    fields = StructType([StructField(c, types[c], True) for c in columns])
+    target = to_arrow_schema(fields)
+
+    timezone = spark.conf.get("spark.sql.session.timeZone")
+    struct_mode = spark.conf.get(
+        "spark.sql.execution.pandas.structHandlingMode", "legacy"
+    )
+    converters = [
+        _create_converter_to_pandas(
+            f.dataType,
+            f.nullable,
+            timezone=timezone,
+            struct_in_pandas="dict" if struct_mode == "legacy" else struct_mode,
+            error_on_duplicated_field_names=struct_mode == "legacy",
+        )
+        for f in fields
+    ]
+
+    def convert(table: pa.Table) -> pd.DataFrame:
+        if table.num_rows == 0:
+            pdf = pd.DataFrame(columns=columns)
+        else:
+            # positional names: a projection may repeat a column
+            pdf = (
+                table.cast(target)
+                .rename_columns([f"col_{i}" for i in range(len(columns))])
+                .to_pandas(date_as_object=True, coerce_temporal_nanoseconds=True)
+            )
+            pdf.columns = columns
+        if not columns:
+            return pdf
+        return pd.concat(
+            [conv(ser) for conv, (_, ser) in zip(converters, pdf.items())],
+            axis="columns",
+        )
+
+    return convert
+
+
 class PartitionedDataset:
     """Handle to a written partitioned dataset (data_loaders.py:31-68)."""
 
@@ -60,42 +168,17 @@ class PartitionedDataset:
         self._meta: tuple[str, int] | None = None
         self._df: DataFrame | None = None
         self._idx: DataFrame | None = None
+        self._files: pads.Dataset | None = None
+        # partitioned layout: listed group id -> its group_id= values
+        self._dirs_of: dict[str, list[str]] = {}
 
     def layout(self) -> tuple[str, int]:
-        """(layout, num_buckets) from the group-index sidecar."""
+        """(layout, num_buckets) from the group-index sidecar; a
+        dataset without the descriptor is the legacy partitioned
+        layout."""
         if self._meta is None:
-            try:
-                row = self._index_df().select("layout", "num_buckets").first()
-                self._meta = (row.layout, row.num_buckets)
-            except Exception as exc:
-                # Fall back to the legacy partitioned layout ONLY for
-                # the two states that actually mean it: a pre-descriptor
-                # index (columns missing) or no index at all. A
-                # transient failure (object-store hiccup, listing race
-                # with an index rewrite) must NOT be cached as
-                # 'partitioned' — that silently disables bucket pruning
-                # for the object's lifetime and leaks bucket_id into
-                # group() schemas.
-                msg = str(exc)
-                legacy = (
-                    "UNRESOLVED_COLUMN" in msg
-                    or "cannot resolve" in msg.lower()
-                    or "PATH_NOT_FOUND" in msg
-                    or "Path does not exist" in msg
-                    or "Unable to infer schema" in msg
-                )
-                if not legacy:
-                    self._idx = None  # drop the possibly-poisoned reader
-                    raise
-                self._meta = ("partitioned", 0)
+            self._meta = read_layout(self.path) or ("partitioned", 0)
         return self._meta
-
-    def _index_df(self) -> DataFrame:
-        if self._idx is None:
-            self._idx = self.spark.read.parquet(
-                f"{self.path}/{GROUP_INDEX_DIR}"
-            ).withColumn(keys.GROUP_COL, F.col(keys.GROUP_COL).cast("string"))
-        return self._idx
 
     def dataframe(self) -> DataFrame:
         """The whole dataset as one relation (reader reused — repeated
@@ -112,14 +195,25 @@ class PartitionedDataset:
 
     def group_index(self) -> DataFrame:
         """(group_id, num_examples) from the sidecar index — no scan."""
-        return self._index_df().select(keys.GROUP_COL, "num_examples")
+        if self._idx is None:
+            self._idx = self.spark.read.parquet(
+                f"{self.path}/{GROUP_INDEX_DIR}"
+            ).withColumn(keys.GROUP_COL, F.col(keys.GROUP_COL).cast("string"))
+        return self._idx.select(keys.GROUP_COL, "num_examples")
 
     def list_groups(
         self, shuffle: bool = False, seed: int = 0
     ) -> list[str]:
         """Group ids, optionally in seeded-shuffled order (the
-        shuffle_files/shuffle_seed contract, data_loaders.py:90-100)."""
-        ids = [r[0] for r in self.group_index().select(keys.GROUP_COL).collect()]
+        shuffle_files/shuffle_seed contract, data_loaders.py:90-100).
+        Read from the index with pyarrow: no Spark job."""
+        import pyarrow as pa
+        import pyarrow.dataset as pads
+
+        fs, root = _cfs.pyarrow_target(f"{self.path}/{GROUP_INDEX_DIR}")
+        index = pads.dataset(root, format="parquet", filesystem=fs)
+        col = index.to_table(columns=[keys.GROUP_COL]).column(0)
+        ids = col.cast(pa.string()).to_pylist()
         # a NULL group key (keyer over a NULL feature) is a real group:
         # sort it last instead of crashing the str comparison
         if shuffle:
@@ -152,6 +246,58 @@ class PartitionedDataset:
             ).drop(BUCKET_COL)
         return df.filter(F.col(keys.GROUP_COL) == group_id)
 
+    def _data_files(self) -> pads.Dataset:
+        """The data files as one pyarrow dataset, hive-partitioned as
+        the layout writes them (``bucket_id`` int32 or ``group_id``
+        string) and discovered once per object, like ``dataframe()``."""
+        if self._files is None:
+            import pyarrow as pa
+            import pyarrow.dataset as pads
+
+            bucketed = self.layout()[0] == "bucketed"
+            part = (
+                pa.field(BUCKET_COL, pa.int32())
+                if bucketed
+                else pa.field(keys.GROUP_COL, pa.string())
+            )
+            fs, root = _cfs.pyarrow_target(self.data_path)
+            files = pads.dataset(
+                root,
+                format="parquet",
+                filesystem=fs,
+                partitioning=pads.HivePartitioning(pa.schema([part])),
+            )
+            dirs_of: dict[str, list[str]] = {}
+            if not bucketed:
+                dirs = {
+                    pads.get_partition_keys(f.partition_expression).get(
+                        keys.GROUP_COL
+                    )
+                    for f in files.get_fragments()
+                }
+                dirs.discard(None)
+                for d, listed in _listed_ids(dirs).items():
+                    dirs_of.setdefault(listed, []).append(d)
+            self._dirs_of = dirs_of
+            self._files = files
+        return self._files
+
+    def _group_filter(self, group_id: str | None) -> pads.Expression:
+        """``group()``'s predicate over ``_data_files()``: the bucket
+        (or group directory) prunes files, and row-group statistics on
+        the sorted ``group_id`` prune within a bucket file."""
+        import pyarrow.dataset as pads
+
+        gid = pads.field(keys.GROUP_COL)
+        if group_id is None:
+            return gid.is_null()
+        layout, num_buckets = self.layout()
+        if layout == "bucketed" and num_buckets > 0:
+            bucket = _bucket_of(group_id, num_buckets)
+            return (pads.field(BUCKET_COL) == bucket) & (gid == group_id)
+        dirs = self._dirs_of.get(group_id, [group_id])
+        return functools.reduce(operator.or_, (gid == d for d in dirs))
+
     def group_stream(
         self,
         shuffle: bool = False,
@@ -169,28 +315,51 @@ class PartitionedDataset:
         (train_jax.py:172) the training examples layer on top.
         ``batch_groups=1`` yields singleton cohorts (plain stream).
         ``columns`` projects the per-group frames — the projection
-        reaches the Parquet scan, so consumers that only need metadata
+        reaches the Parquet read, so consumers that only need metadata
         never pay for the wide columns.
+
+        Each fetch is a driver-side pyarrow read of the layout's
+        Parquet files, filtered by ``group()``'s predicate, so the
+        data path must be readable from the driver. The stream runs no
+        Spark job; each frame equals ``group(gid)`` without the
+        ``group_id``/``bucket_id`` columns, projected to ``columns``,
+        then ``toPandas()``.
 
         ``prefetch`` overlaps the next N groups' pruned reads with the
         consumer's work (the reference's ``num_parallel_reads``
-        interleave, data_loaders.py:86-121, re-expressed as pipelined
-        Spark jobs: submission is thread-safe, each fetch is its own
-        job). Yield ORDER IS UNCHANGED — futures resolve in submission
-        order — so shuffle/seed/skip determinism and the value oracle
-        hold for every prefetch setting. A training loop spending t_c
-        per group on model work hides min(t_read, t_c) per group.
+        interleave, data_loaders.py:86-121, re-expressed as pyarrow
+        reads on a thread pool). Yield ORDER IS UNCHANGED — futures
+        resolve in submission order — so shuffle/seed/skip determinism
+        and the value oracle hold for every prefetch setting. A
+        training loop spending t_c per group on model work hides
+        min(t_read, t_c) per group.
         """
         ids = self.list_groups(shuffle=shuffle, seed=seed)
         ids = ids[skip:]
         if take is not None:
             ids = ids[:take]
+        if not ids:
+            return
+        files = self._data_files()
+        frame_cols = [
+            c for c in files.schema.names if c not in (keys.GROUP_COL, BUCKET_COL)
+        ]
+        if columns is None:
+            columns = frame_cols
+        unknown = [c for c in columns if c not in frame_cols]
+        if unknown:
+            raise ValueError(
+                f"columns {unknown} are not in the group frames of "
+                f"{self.path} (columns: {frame_cols})"
+            )
+        read_cols = list(dict.fromkeys(columns))
+        to_pandas = _arrow_to_pandas(self.spark, files.schema, columns)
 
         def fetch(gid: str | None) -> tuple[str | None, pd.DataFrame]:
-            g = self.group(gid).drop(keys.GROUP_COL, BUCKET_COL)
-            if columns is not None:
-                g = g.select(*columns)
-            return gid, g.toPandas()
+            table = files.to_table(
+                columns=read_cols, filter=self._group_filter(gid)
+            )
+            return gid, to_pandas(table.select(columns))
 
         cohort: list[tuple[str, pd.DataFrame]] = []
         if prefetch > 0:

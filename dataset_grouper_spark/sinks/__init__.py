@@ -84,30 +84,43 @@ def _write_index(
     )
 
 
-def _require_layout(
-    spark, path: str, op: str, expected: str = "partitioned"
-) -> None:
+def read_layout(path: str) -> tuple[str, int] | None:
+    """``(layout, num_buckets)`` from the ``_group_index`` descriptor,
+    read with pyarrow (no Spark job). None when there is no index dir,
+    when the index predates the descriptor (no ``layout`` column) —
+    both mean the legacy partitioned layout — or when the index has no
+    rows (an empty dataset). Any other read error raises: a transient
+    failure must not be taken for the legacy layout, which would
+    disable bucket pruning."""
+    import pyarrow.dataset as pads
+
+    from dataset_grouper_spark.compat import fs as _cfs
+
+    idx = f"{path}/{GROUP_INDEX_DIR}"
+    if not _cfs.is_dir(idx):
+        return None
+    fs, root = _cfs.pyarrow_target(idx)
+    index = pads.dataset(root, format="parquet", filesystem=fs)
+    if "layout" not in index.schema.names:
+        return None
+    head = index.head(1, columns=["layout", "num_buckets"]).to_pylist()
+    if not head:
+        return None
+    return head[0]["layout"], int(head[0]["num_buckets"])
+
+
+def _require_layout(path: str, op: str, expected: str = "partitioned") -> None:
     """Refuse to run a partitioned-layout lifecycle op on a dataset
     written with another layout: appending group_id= dirs into a
     bucket_id= tree makes the dataset UNREADABLE (conflicting
     partition columns) and the rewritten index would clobber the
     layout descriptor, silently breaking bucket pruning. Missing/
     legacy index -> assume the legacy partitioned layout."""
-    import os
-
-    idx = os.path.join(path, GROUP_INDEX_DIR)
-    if not os.path.isdir(idx):
-        return
-    try:
-        row = (
-            spark.read.parquet(idx).select("layout").first()
-        )
-    except Exception:
-        return  # legacy index without the descriptor
-    if row is not None and row["layout"] != expected:
+    meta = read_layout(path)
+    if meta is not None and meta[0] != expected:
         raise ValueError(
             f"{op} requires the '{expected}' layout; dataset at {path} "
-            f"was written with layout='{row['layout']}' (use the "
+            f"was written with layout='{meta[0]}' (use the "
             "bucketed-layout ops instead)"
         )
 
@@ -130,7 +143,7 @@ def append_partitioned(
     """
     path = _local_serving_path(path)
     keyed = keys.with_group_key(df, key)
-    _require_layout(df.sparkSession, path, "append_partitioned")
+    _require_layout(path, "append_partitioned")
     data_path = f"{path}/{DATA_DIR}"
     out = keyed.repartition(keys.GROUP_COL)
     if order_col is not None:
@@ -144,17 +157,14 @@ def append_partitioned(
     )
     try:
         old = spark.read.parquet(f"{path}/{GROUP_INDEX_DIR}").select(
-            keys.GROUP_COL, F.col("num_examples").alias("_old")
+            keys.GROUP_COL, "num_examples"
         )
+        # union + groupBy, not a join: a NULL group key must merge with
+        # its old index row (an equi-join never matches NULL = NULL)
         merged = (
-            new_counts.join(old, keys.GROUP_COL, "full_outer")
-            .select(
-                keys.GROUP_COL,
-                (
-                    F.coalesce(F.col("num_examples"), F.lit(0))
-                    + F.coalesce(F.col("_old"), F.lit(0))
-                ).alias("num_examples"),
-            )
+            new_counts.unionByName(old)
+            .groupBy(keys.GROUP_COL)
+            .agg(F.sum("num_examples").alias("num_examples"))
         )
         # stage-and-swap: the merged frame READS the old index, so an
         # in-place overwrite would delete its own input
@@ -210,14 +220,14 @@ def compact_partitioned(
     from pyspark.sql import Window
 
     data_path = f"{path}/{DATA_DIR}"
-    idx_df = spark.read.parquet(f"{path}/{GROUP_INDEX_DIR}")
-    meta = idx_df.first()
-    if meta is not None and meta.layout != "partitioned":
+    meta = read_layout(path)
+    if meta is not None and meta[0] != "partitioned":
         raise ValueError(
             "compact_partitioned handles layout='partitioned'; the "
             "bucketed layout is already file-bounded by construction — "
             "rewrite it with write_partitioned(layout='bucketed')"
         )
+    idx_df = spark.read.parquet(f"{path}/{GROUP_INDEX_DIR}")
     df = spark.read.parquet(data_path).withColumn(
         keys.GROUP_COL, F.col(keys.GROUP_COL).cast("string")
     )
@@ -518,13 +528,13 @@ def upsert_bucketed(
     from pyspark.sql import Window
 
     data_path = f"{path}/{DATA_DIR}"
-    meta = spark.read.parquet(f"{path}/{GROUP_INDEX_DIR}").first()
-    if meta is None or meta.layout != "bucketed":
+    meta = read_layout(path)
+    if meta is None or meta[0] != "bucketed":
         raise ValueError(
             "upsert_bucketed requires layout='bucketed'; use "
             "upsert_partitioned for the directory-per-group layout"
         )
-    num_buckets = int(meta.num_buckets)
+    num_buckets = meta[1]
     keyed_new = keys.with_group_key(df_new, key).withColumn(
         keys.GROUP_COL, F.col(keys.GROUP_COL).cast("string")
     )
@@ -633,7 +643,7 @@ def delete_partitioned(
     import shutil
 
     data_path = f"{path}/{DATA_DIR}"
-    _require_layout(spark, path, "delete_partitioned")
+    _require_layout(path, "delete_partitioned")
     df = spark.read.parquet(data_path).withColumn(
         keys.GROUP_COL, F.col(keys.GROUP_COL).cast("string")
     )
