@@ -7,6 +7,16 @@ Spark's static default of 200 (pathological both at tiny local scale
 and at 100 TB cluster scale — AQE coalesces down, but the initial
 number should track cluster parallelism).
 
+Partition discovery gets the same cap: reading more than 32 directories
+(``spark.sql.sources.parallelPartitionDiscovery.threshold``), such as a
+bucketed layout's 64 ``bucket_id=`` directories, lists them in a Spark
+job of ``min(paths, spark.sql.sources.parallelPartitionDiscovery.parallelism)``
+tasks. Spark's default of 10000 gives one task per directory; here the
+parallelism is ``min(cpus, shuffle partitions)``, so every
+``spark.read.parquet`` of a layout (the sinks' index re-read,
+``PartitionedDataset.dataframe()`` and the loaders built on it) lists
+with a job no wider than a shuffle.
+
 Python workers fork from ``dataset_grouper_spark.worker_daemon``
 (``spark.python.daemon.module``) instead of ``pyspark.daemon``. Every
 task start calls ``importlib.invalidate_caches()``, and before Python
@@ -54,6 +64,11 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        # listing jobs no wider than a shuffle (see the module docstring)
+        .config(
+            "spark.sql.sources.parallelPartitionDiscovery.parallelism",
+            str(min(int(cpus), shuffle_partitions)),
+        )
         # Arrow batches for the pandas-UDF paths (packing compat codec,
         # multimodal decode); 10-100x over row-at-a-time Python UDFs.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

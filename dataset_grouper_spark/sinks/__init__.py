@@ -11,10 +11,18 @@ cardinality:
   one group's files from directory metadata.
 - ``bucketed``: for high cardinality (C4 has millions of domains — a
   directory per group is pathological at 100 TB). Rows are
-  hash-repartitioned on group_id and sorted by (group_id, ord) within
-  files, so each group is a contiguous run inside a bounded number of
-  files; a sidecar group index (group_id -> file set, row count) gives
-  the reader pruning without directory explosion.
+  range-partitioned on (bucket_id, group_id) at the session's shuffle
+  width, which AQE coalesces to the data's size, and sorted by
+  (bucket_id, group_id[, ord]) within each task. A bucket directory
+  holds one or more files with disjoint group ranges: each group is
+  one contiguous run in exactly one file, and the file count follows
+  the data rather than the bucket count. A sidecar group index
+  (group_id -> row count, plus the layout descriptor) gives the reader
+  pruning without directory explosion.
+
+A ``partitionBy`` write's ``sortWithinPartitions`` must lead with the
+partition columns: otherwise Spark's planned write adds its own sort on
+them and the optimizer drops ours, so the files are not group-major.
 """
 
 from __future__ import annotations
@@ -63,6 +71,12 @@ def bucket_expr(num_buckets: int) -> Column:
     return F.pmod(F.crc32(F.encode(F.col(keys.GROUP_COL), "utf-8")), F.lit(num_buckets)).cast(
         "int"
     )
+
+
+def _bucketed_sort(order_col: str | Column | None) -> list[str | Column]:
+    """Sort columns for a bucketed ``partitionBy(bucket_id)`` write,
+    led by the partition column (see the module docstring)."""
+    return [BUCKET_COL, keys.GROUP_COL] + ([order_col] if order_col is not None else [])
 
 
 def _write_index(
@@ -517,10 +531,11 @@ def upsert_bucketed(
     a bucket (recomputable from the group id, so the probe is a cheap
     distinct over df_new; at most ``num_buckets`` of them, bounded by
     construction).  Untouched bucket directories are never opened;
-    rewritten buckets are re-sorted by (group, order) so single-group
-    reads keep their contiguous-run pruning; the sidecar index update
-    is a distributed merge (old rows whose bucket wasn't touched +
-    staged counts) — no collect of group counts, no dataset rescan.
+    rewritten buckets are re-sorted by (bucket, group, order), one file
+    per bucket, so single-group reads keep their contiguous-run
+    pruning; the sidecar index update is a distributed merge (old rows
+    whose bucket wasn't touched + staged counts) — no collect of group
+    counts, no dataset rescan.
     """
     path = _local_serving_path(path)
     import shutil
@@ -550,33 +565,39 @@ def upsert_bucketed(
     keyed_new = keyed_new.withColumn(
         BUCKET_COL, bucket_expr(num_buckets)
     ).persist()
-    touched = sorted(
-        r[0]
-        for r in keyed_new.select(BUCKET_COL).distinct().collect()
-    )  # bounded by num_buckets
+    touched = [
+        r[0] for r in keyed_new.select(BUCKET_COL).distinct().collect()
+    ]  # bounded by num_buckets
     if not touched:
         # empty batch (an hour with no events): a no-op, not a crash —
         # repartition(0, ...) raises on zero partitions
         keyed_new.unpersist()
         return {"upserted_rows": 0, "buckets_rewritten": 0}
+    # NULL-key rows have a NULL bucket (the __HIVE_DEFAULT_PARTITION__
+    # directory), which isin() never matches: select it with IS NULL
+    hit = F.col(BUCKET_COL).isin(sorted(b for b in touched if b is not None))
+    if None in touched:
+        hit = hit | F.col(BUCKET_COL).isNull()
     old = spark.read.parquet(data_path).withColumn(
         keys.GROUP_COL, F.col(keys.GROUP_COL).cast("string")
     )
-    old_touched = old.filter(F.col(BUCKET_COL).isin(touched))
+    old_touched = old.filter(hit)
     cols = [c for c in old.columns]
+    # NULL-safe on the group: a NULL-key row replaces its old twin too
+    new_ids = keyed_new.select(
+        F.col(keys.GROUP_COL).alias("_new_gid"), F.col(id_col).alias("_new_id")
+    )
     survivors = old_touched.join(
-        keyed_new.select(keys.GROUP_COL, id_col),
-        [keys.GROUP_COL, id_col],
+        new_ids,
+        old_touched[keys.GROUP_COL].eqNullSafe(F.col("_new_gid"))
+        & (old_touched[id_col] == F.col("_new_id")),
         "left_anti",
     )
     merged = survivors.select(cols).unionByName(keyed_new.select(cols))
 
     tmp_path = f"{path}/{DATA_DIR}_upserting"
     out = merged.repartition(len(touched), F.col(BUCKET_COL))
-    if order_col is not None:
-        out = out.sortWithinPartitions(keys.GROUP_COL, order_col)
-    else:
-        out = out.sortWithinPartitions(keys.GROUP_COL)
+    out = out.sortWithinPartitions(*_bucketed_sort(order_col))
     (
         out.write.mode("overwrite")
         .partitionBy(BUCKET_COL)
@@ -594,9 +615,12 @@ def upsert_bucketed(
     old_idx = spark.read.parquet(f"{path}/{GROUP_INDEX_DIR}").select(
         keys.GROUP_COL, "num_examples"
     )
-    kept_idx = old_idx.filter(
-        # NULL-safe for the NULL-group index row (see _stage_merged_index)
-        ~F.coalesce(bucket_expr(num_buckets).isin(touched), F.lit(False))
+    # NULL-safe for the NULL-group index row (see _stage_merged_index):
+    # it is dropped only when the batch touched the NULL bucket
+    kept_idx = (
+        old_idx.withColumn(BUCKET_COL, bucket_expr(num_buckets))
+        .filter(~F.coalesce(hit, F.lit(False)))
+        .drop(BUCKET_COL)
     )
     tmp_idx = f"{path}/{GROUP_INDEX_DIR}_new"
     (
@@ -827,6 +851,16 @@ def write_partitioned(
     ``layout='bucketed'`` -> group-major sorted files + group index
     (high cardinality). Both write a ``_group_index`` summary so
     the loader lists groups without scanning data.
+
+    The bucketed write range-partitions on (bucket_id, group_id)
+    without a fixed count: its width is ``spark.sql.shuffle.partitions``
+    and AQE coalesces it to the data's size, so the writer tasks (and
+    files per bucket) grow with the input, not with ``num_buckets``.
+    The range bounds come from a sampling pass over the input. Each
+    task sorts by (bucket_id, group_id[, order_col]), leading with the
+    partition column so Spark keeps the sort; a bucket directory then
+    holds one or more files with disjoint group ranges, and no group
+    spans two files.
     """
     path = _local_serving_path(path)
     keyed = keys.with_group_key(df, key)
@@ -854,11 +888,8 @@ def write_partitioned(
         # the sorted group_id. Bounded listing + exact pruning at any
         # cardinality.
         out = keyed.withColumn(BUCKET_COL, bucket_expr(num_buckets))
-        out = out.repartition(num_buckets, F.col(BUCKET_COL))
-        if order_col is not None:
-            out = out.sortWithinPartitions(keys.GROUP_COL, order_col)
-        else:
-            out = out.sortWithinPartitions(keys.GROUP_COL)
+        out = out.repartitionByRange(F.col(BUCKET_COL), F.col(keys.GROUP_COL))
+        out = out.sortWithinPartitions(*_bucketed_sort(order_col))
         (
             out.write.mode("overwrite")
             .partitionBy(BUCKET_COL)
@@ -867,16 +898,9 @@ def write_partitioned(
     else:
         raise ValueError(f"unknown layout: {layout}")
 
-    # Sidecar index: group listing + sizes, computed from the written
-    # data in one pass. Readers (loader.py) list groups here instead of
-    # scanning the dataset (the reference must scan all shards to find
-    # a group — data_loaders.py:98-100; SURVEY §4).
-    # The layout descriptor rides along as literal columns — one
-    # sidecar write, no separate metadata job.
-    spark = keyed.sparkSession
-    try:
-        written = spark.read.parquet(data_path)
-    except Exception:
+    if not any(
+        f.startswith("part-") for _, _, files in os.walk(data_path) for f in files
+    ):
         # Empty input: a partitionBy write of zero rows leaves NO part
         # files (no schema footer), making the dataset unreadable. Leave
         # one empty footer file with the post-layout schema (partition
@@ -886,7 +910,16 @@ def write_partitioned(
         if layout == "bucketed":
             empty = empty.withColumn(BUCKET_COL, bucket_expr(num_buckets))
         empty.limit(0).write.mode("overwrite").parquet(data_path)
-        written = spark.read.parquet(data_path)
+
+    # Sidecar index: group listing + sizes, computed from the written
+    # data in one pass. Readers (loader.py) list groups here instead of
+    # scanning the dataset (the reference must scan all shards to find
+    # a group — data_loaders.py:98-100; SURVEY §4).
+    # The layout descriptor rides along as literal columns — one
+    # sidecar write, no separate metadata job.
     _write_index(
-        written, path, layout, num_buckets if layout == "bucketed" else 0
+        keyed.sparkSession.read.parquet(data_path),
+        path,
+        layout,
+        num_buckets if layout == "bucketed" else 0,
     )

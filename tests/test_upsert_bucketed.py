@@ -111,3 +111,61 @@ def test_bucketed_upsert_rejects_partitioned_layout(spark):
         sinks.upsert_bucketed(
             spark, df, keys.by_feature("src"), path, "doc_id"
         )
+
+
+@pytest.mark.parametrize("with_keyed_rows", [False, True])
+def test_bucketed_upsert_with_null_key_rows(spark, tmp_path, with_keyed_rows):
+    """A NULL group key has a NULL bucket (the __HIVE_DEFAULT_PARTITION__
+    directory): the upsert rewrites that directory, and the NULL
+    group keeps exactly one index row."""
+    from dataset_grouper_spark.loader import PartitionedDataset
+
+    path = str(tmp_path / "pds")
+    rows = [(i, None if i % 10 == 0 else f"g{i % 7}", f"text-{i}") for i in range(100)]
+    schema = "doc_id long, src string, text string"
+    sinks.write_partitioned(
+        spark.createDataFrame(rows, schema),
+        keys.by_feature("src"),
+        path,
+        order_col="doc_id",
+        layout="bucketed",
+        num_buckets=N_BUCKETS,
+    )
+    batch = [(10, None, "REPLACED"), (1000, None, "new-null")]
+    if with_keyed_rows:
+        batch.append((1001, "g3", "new-g3"))
+    stats = sinks.upsert_bucketed(
+        spark,
+        spark.createDataFrame(batch, schema),
+        keys.by_feature("src"),
+        path,
+        "doc_id",
+        "doc_id",
+    )
+    assert stats == {
+        "upserted_rows": len(batch),
+        "buckets_rewritten": 2 if with_keyed_rows else 1,
+    }
+    assert sorted(os.listdir(path)) == [sinks.GROUP_INDEX_DIR, sinks.DATA_DIR]
+    data = os.path.join(path, sinks.DATA_DIR)
+    null_dirs = [d for d in os.listdir(data) if "__HIVE_DEFAULT_PARTITION__" in d]
+    assert null_dirs == [f"{sinks.BUCKET_COL}=__HIVE_DEFAULT_PARTITION__"]
+
+    back = spark.read.parquet(data)
+    nulls = {
+        r["doc_id"]: r["text"]
+        for r in back.filter(F.col(keys.GROUP_COL).isNull()).collect()
+    }
+    assert nulls[10] == "REPLACED"
+    assert nulls[1000] == "new-null"
+    assert nulls[20] == "text-20"
+    assert len(nulls) == 11
+    total = 100 + 1 + with_keyed_rows
+    assert back.count() == total
+
+    idx = spark.read.parquet(os.path.join(path, sinks.GROUP_INDEX_DIR)).collect()
+    counts = [(r[keys.GROUP_COL], r["num_examples"]) for r in idx]
+    assert [n for g, n in counts if g is None] == [11]
+    assert dict(counts)["g3"] == 12 + with_keyed_rows
+    assert sum(n for _, n in counts) == total
+    assert PartitionedDataset(spark, path).list_groups()[-1:] == [None]
