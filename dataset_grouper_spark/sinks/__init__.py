@@ -79,6 +79,23 @@ def _bucketed_sort(order_col: str | Column | None) -> list[str | Column]:
     return [BUCKET_COL, keys.GROUP_COL] + ([order_col] if order_col is not None else [])
 
 
+def _has_part_files(path: str) -> bool:
+    """Whether a Parquet write left any ``part-`` file under ``path``.
+    A zero-row ``partitionBy`` write leaves none, so the directory has
+    no schema footer and Spark cannot read it."""
+    return any(f.startswith("part-") for _, _, files in os.walk(path) for f in files)
+
+
+def _isin_null_safe(col: str, values: list) -> Column:
+    """``col`` in ``values``, matching NULL too when ``values`` holds
+    None: ``isin`` never matches a NULL key (the
+    ``__HIVE_DEFAULT_PARTITION__`` group or bucket)."""
+    hit = F.col(col).isin(sorted(v for v in values if v is not None))
+    if None in values:
+        hit = hit | F.col(col).isNull()
+    return hit
+
+
 def _write_index(
     written: DataFrame, path: str, layout: str, num_buckets: int
 ) -> None:
@@ -169,7 +186,7 @@ def append_partitioned(
         .groupBy(keys.GROUP_COL)
         .agg(F.count(F.lit(1)).alias("num_examples"))
     )
-    try:
+    if os.path.isdir(f"{path}/{GROUP_INDEX_DIR}"):
         old = spark.read.parquet(f"{path}/{GROUP_INDEX_DIR}").select(
             keys.GROUP_COL, "num_examples"
         )
@@ -182,8 +199,6 @@ def append_partitioned(
         )
         # stage-and-swap: the merged frame READS the old index, so an
         # in-place overwrite would delete its own input
-        import shutil
-
         tmp_idx = f"{path}/{GROUP_INDEX_DIR}_new"
         (
             merged.withColumn("layout", F.lit("partitioned"))
@@ -192,18 +207,14 @@ def append_partitioned(
             .write.mode("overwrite")
             .parquet(tmp_idx)
         )
-        shutil.rmtree(f"{path}/{GROUP_INDEX_DIR}")
-        shutil.move(tmp_idx, f"{path}/{GROUP_INDEX_DIR}")
-    except Exception:
-        # no readable prior index (fresh dataset / zero-row first
-        # append): fall back to the full rebuild, leaving a schema
-        # footer if even the data dir is empty (see write_partitioned)
-        try:
-            written = spark.read.parquet(data_path)
-        except Exception:
+        _swap_index(path, tmp_idx)
+    else:
+        # no prior index (a fresh dataset): full rebuild, leaving a
+        # schema footer if even the data dir has no part file (a
+        # zero-row first append; see write_partitioned)
+        if not _has_part_files(data_path):
             keyed.limit(0).write.mode("overwrite").parquet(data_path)
-            written = spark.read.parquet(data_path)
-        _write_index(written, path, "partitioned", 0)
+        _write_index(spark.read.parquet(data_path), path, "partitioned", 0)
 
 
 def compact_partitioned(
@@ -355,12 +366,11 @@ def _stage_merged_index(
     old = spark.read.parquet(f"{path}/{GROUP_INDEX_DIR}").select(
         keys.GROUP_COL, "num_examples"
     )
-    # NULL-safe: a NULL group key (__HIVE_DEFAULT_PARTITION__ rows
-    # from a keyer that yields NULL) makes isin() NULL, and ~NULL
-    # filters the row — the untouched NULL group would silently
-    # vanish from the index on every unrelated upsert/delete
+    # NULL-safe: the NULL group's row (__HIVE_DEFAULT_PARTITION__
+    # rows from a keyer that yields NULL) goes only when the NULL group
+    # was touched; coalesce, because ~NULL would filter it every time
     kept = old.filter(
-        ~F.coalesce(F.col(keys.GROUP_COL).isin(touched), F.lit(False))
+        ~F.coalesce(_isin_null_safe(keys.GROUP_COL, touched), F.lit(False))
     )
     if tmp_data_path is not None:
         staged = (
@@ -458,20 +468,27 @@ def upsert_partitioned(
     old = spark.read.parquet(data_path).withColumn(
         keys.GROUP_COL, F.col(keys.GROUP_COL).cast("string")
     )
+    # NULL-safe throughout: NULL-key rows are one group (the
+    # __HIVE_DEFAULT_PARTITION__ directory), rewritten like any other
     if len(touched) <= UPSERT_PRUNE_CAP:
-        old_touched = old.filter(F.col(keys.GROUP_COL).isin(touched))
+        old_touched = old.filter(_isin_null_safe(keys.GROUP_COL, touched))
     else:  # beyond the prune cap: semi join, no collect
+        new_gids = keyed_new.select(F.col(keys.GROUP_COL).alias("_new_gid"))
         old_touched = old.join(
-            keyed_new.select(keys.GROUP_COL).distinct(),
-            keys.GROUP_COL,
+            new_gids.distinct(),
+            old[keys.GROUP_COL].eqNullSafe(F.col("_new_gid")),
             "left_semi",
         )
     cols = [keys.GROUP_COL] + [
         c for c in old.columns if c != keys.GROUP_COL
     ]
+    new_ids = keyed_new.select(
+        F.col(keys.GROUP_COL).alias("_new_gid"), F.col(id_col).alias("_new_id")
+    )
     survivors = old_touched.join(
-        keyed_new.select(keys.GROUP_COL, id_col),
-        [keys.GROUP_COL, id_col],
+        new_ids,
+        old_touched[keys.GROUP_COL].eqNullSafe(F.col("_new_gid"))
+        & (old_touched[id_col] == F.col("_new_id")),
         "left_anti",
     )
     merged = survivors.select(cols).unionByName(keyed_new.select(cols))
@@ -492,11 +509,12 @@ def upsert_partitioned(
     keyed_new.unpersist()
     # stage the merged index BEFORE the swap (it reads tmp's files)
     tmp_idx = None
-    if len(touched) <= UPSERT_PRUNE_CAP:
-        try:
-            tmp_idx = _stage_merged_index(spark, path, touched, tmp_path)
-        except Exception:
-            tmp_idx = None
+    if len(touched) <= UPSERT_PRUNE_CAP and os.path.isdir(
+        f"{path}/{GROUP_INDEX_DIR}"
+    ):
+        tmp_idx = _stage_merged_index(
+            spark, path, touched, tmp_path if _has_part_files(tmp_path) else None
+        )
     swapped = 0
     for entry in os.listdir(tmp_path):
         if not entry.startswith(f"{keys.GROUP_COL}="):
@@ -575,9 +593,7 @@ def upsert_bucketed(
         return {"upserted_rows": 0, "buckets_rewritten": 0}
     # NULL-key rows have a NULL bucket (the __HIVE_DEFAULT_PARTITION__
     # directory), which isin() never matches: select it with IS NULL
-    hit = F.col(BUCKET_COL).isin(sorted(b for b in touched if b is not None))
-    if None in touched:
-        hit = hit | F.col(BUCKET_COL).isNull()
+    hit = _isin_null_safe(BUCKET_COL, touched)
     old = spark.read.parquet(data_path).withColumn(
         keys.GROUP_COL, F.col(keys.GROUP_COL).cast("string")
     )
@@ -684,7 +700,7 @@ def delete_partitioned(
         return {"deleted_rows": 0, "groups_rewritten": 0}
     beyond_cap = len(touched) > UPSERT_PRUNE_CAP
     if not beyond_cap:
-        scope = df.filter(F.col(keys.GROUP_COL).isin(touched))
+        scope = df.filter(_isin_null_safe(keys.GROUP_COL, touched))
     else:
         scope = df  # full rewrite — stated in the docstring
         # only the COUNT is needed past the cap; collecting every
@@ -724,7 +740,7 @@ def delete_partitioned(
             ).alias("_kept")
         )
         .filter(F.col("_kept") == 0)
-        .select("_g")
+        .select(F.col("_g").alias("_e"))
     )
     group_dirs: dict[str, set] = {}
     for r in (
@@ -732,7 +748,7 @@ def delete_partitioned(
             F.col(keys.GROUP_COL).alias("_g"),
             F.input_file_name().alias("_f"),
         )
-        .join(emptied, "_g", "left_semi")
+        .join(emptied, F.col("_g").eqNullSafe(F.col("_e")), "left_semi")
         .distinct()
         .collect()
     ):
@@ -748,18 +764,13 @@ def delete_partitioned(
         .parquet(tmp_path)
     )
     # stage the merged index BEFORE the swap (it reads tmp's files);
-    # tmp may not exist when every row of every touched group matched
+    # tmp holds no part file when every row of every touched group
+    # matched
     tmp_idx = None
-    if not beyond_cap:
-        try:
-            tmp_idx = _stage_merged_index(
-                spark,
-                path,
-                touched,
-                tmp_path if os.path.isdir(tmp_path) else None,
-            )
-        except Exception:
-            tmp_idx = None
+    if not beyond_cap and os.path.isdir(f"{path}/{GROUP_INDEX_DIR}"):
+        tmp_idx = _stage_merged_index(
+            spark, path, touched, tmp_path if _has_part_files(tmp_path) else None
+        )
     rewritten = set()
     if os.path.isdir(tmp_path):
         for entry in os.listdir(tmp_path):
@@ -898,9 +909,7 @@ def write_partitioned(
     else:
         raise ValueError(f"unknown layout: {layout}")
 
-    if not any(
-        f.startswith("part-") for _, _, files in os.walk(data_path) for f in files
-    ):
+    if not _has_part_files(data_path):
         # Empty input: a partitionBy write of zero rows leaves NO part
         # files (no schema footer), making the dataset unreadable. Leave
         # one empty footer file with the post-layout schema (partition

@@ -1,7 +1,10 @@
 """group_stream reads each group with pyarrow on the driver. Its frames
 must equal the Spark path they replace, ``group(gid)`` without the
 ``group_id``/``bucket_id`` columns (projected to ``columns``) and then
-``toPandas()``, and a whole stream must launch no Spark job."""
+``toPandas()``, and a whole stream must launch no Spark job. The full
+epoch, ``iter_groups_bulk``, reads the same files in one pass: it must
+yield every listed group once, with the stream's frames, and launch no
+Spark job either."""
 
 import datetime
 import decimal
@@ -60,6 +63,12 @@ def _assert_parity(pds: PartitionedDataset, columns=None, **kw) -> None:
         if columns is not None:
             want = want.select(*columns)
         pd.testing.assert_frame_equal(_sorted(pdf), _sorted(want.toPandas()))
+    epoch = list(pds.iter_groups_bulk(columns=columns))
+    ids = [gid for gid, _ in epoch]
+    assert len(ids) == len(set(ids))
+    assert sorted(ids, key=lambda g: (g is None, g)) == pds.list_groups()
+    for gid, pdf in epoch:
+        pd.testing.assert_frame_equal(pdf, streamed[gid])
 
 
 @pytest.fixture(scope="module")
@@ -182,6 +191,10 @@ def test_group_stream_runs_no_spark_job(spark, layouts, layout, prefetch):
     assert _max_job_id(spark) == before
     assert [gid for gid, _ in got] == ids[-5:] and got[-1][0] is None
     assert all(n > 0 for _, n in got)
+    # a full epoch reads the same files: no job either
+    epoch = {gid: len(pdf) for gid, pdf in pds.iter_groups_bulk()}
+    assert _max_job_id(spark) == before
+    assert sorted(epoch, key=lambda g: (g is None, g)) == ids
     # the probe sees jobs: the Spark path runs one
     pds.group(ids[0]).count()
     assert _max_job_id(spark) > before
