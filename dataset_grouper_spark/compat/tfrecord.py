@@ -13,8 +13,9 @@ byte-compatible shards with the reference's WriteToTFRecord output
 
 from __future__ import annotations
 
+import os
 import struct
-from collections.abc import Iterable, Iterator
+from collections.abc import Callable, Iterable, Iterator
 
 from pyspark.sql import Column, DataFrame
 
@@ -408,6 +409,83 @@ def shard_name(prefix: str, shard: int, num_shards: int, suffix: str = "") -> st
     return f"{prefix}-{shard:05d}-of-{num_shards:05d}{suffix}"
 
 
+def write_shards(
+    frame: DataFrame,
+    records: Callable[[Iterator], Iterator[bytes]],
+    file_path_prefix: str,
+    num_shards: int = 0,
+    file_name_suffix: str = "",
+) -> list[str]:
+    """Write one TFRecord shard per partition of ``frame``: staged in
+    the tasks, committed by the driver.
+
+    Each task streams ``records(pdf_iter)`` (its partition's Arrow
+    batches as pandas frames in, record bytes out) into a file of its
+    own under a staging directory beside the shards, named per task
+    attempt, and reports ``(partition, path)`` unless it had no
+    records. The driver renames only the files ``collect()`` returned,
+    so a failed, retried or speculative attempt leaves nothing behind
+    once the staging directory is removed, on success and on failure.
+
+    ``num_shards > 0`` must equal ``frame``'s partition count: partition
+    ``i`` becomes shard ``i`` of exactly ``num_shards``, and a partition
+    with no records gets an empty shard. ``num_shards == 0`` renumbers
+    the non-empty files in partition order, so no shard is empty; with
+    no records at all it writes one empty ``-00000-of-00001`` shard.
+    A ``.gz`` suffix gzips every shard (see :func:`write_records`).
+    """
+    import itertools
+    import uuid
+
+    import pandas as pd
+
+    from dataset_grouper_spark.compat import fs
+
+    parent = fs.parent_dir(file_path_prefix) or "."
+    stage = fs.join(
+        parent, f".{os.path.basename(file_path_prefix)}-{uuid.uuid4().hex}.staging"
+    )
+    # the driver makes the directory: a task still running after the
+    # job failed and the directory went cannot recreate it
+    fs.makedirs(stage)
+
+    def write_task(pdf_iter):
+        from pyspark import TaskContext
+
+        ctx = TaskContext.get()
+        it = iter(records(pdf_iter))
+        first = next(it, None)
+        if first is None:
+            return
+        path = fs.join(
+            stage,
+            f"part-{ctx.partitionId():05d}-{ctx.taskAttemptId()}{file_name_suffix}",
+        )
+        write_records(path, itertools.chain([first], it))
+        yield pd.DataFrame({"partition": [ctx.partitionId()], "path": [path]})
+
+    try:
+        staged = {
+            r.partition: r.path
+            for r in frame.mapInPandas(write_task, "partition int, path string").collect()
+        }
+        if num_shards:
+            sources = [staged.get(i) for i in range(num_shards)]
+        else:
+            sources = [staged[i] for i in sorted(staged)] or [None]
+        out = []
+        for i, src in enumerate(sources):
+            dst = shard_name(file_path_prefix, i, len(sources), file_name_suffix)
+            if src is None:
+                write_records(dst, [])
+            else:
+                fs.move(src, dst)
+            out.append(dst)
+        return out
+    finally:
+        fs.rmtree(stage)
+
+
 def write_grouped_tfrecords(
     packed: DataFrame,
     group_col: str,
@@ -421,43 +499,32 @@ def write_grouped_tfrecords(
 
     ``packed`` must have one row per group with ``payload_col`` =
     array of serialized example blobs (e.g. from
-    operators.packing.pack_groups with a binary payload). Each
-    partition writes exactly one shard file via an Arrow-batched
-    mapInPandas (no row pickling) — fully parallel, no driver collect
-    of data.
+    operators.packing.pack_groups with a binary payload). Rows are
+    spread round-robin over ``num_shards`` partitions and each writes
+    one shard via an Arrow-batched mapInPandas (no row pickling) —
+    fully parallel, no driver collect of data. Exactly ``num_shards``
+    files result; shards are staged and committed by
+    :func:`write_shards`, so a failed job leaves none behind.
 
     Shards go through ``compat.fs`` (pyarrow.fs under any URI scheme),
     so ``file_path_prefix`` may be a local path, ``file://``, or an
     object-store URI (``s3://``, ``gs://``, ``hdfs://``) — no shared
     POSIX mount required across executors.
     """
-    import pandas as pd
-
-    from dataset_grouper_spark.compat import fs
     from dataset_grouper_spark.compat.tfexample import create_sequence_example
 
-    fs.makedirs(fs.parent_dir(file_path_prefix) or ".")
-    target = packed.select(group_col, payload_col).repartition(num_shards)
+    def records(pdf_iter):
+        for pdf in pdf_iter:
+            for payloads in pdf[payload_col]:
+                yield create_sequence_example([bytes(b) for b in payloads])
 
-    def write_shard(pdf_iter):
-        from pyspark import TaskContext
-
-        idx = TaskContext.get().partitionId()
-        path = shard_name(file_path_prefix, idx, num_shards, file_name_suffix)
-        gz = _infer_gzip(path, "auto")
-        raw = fs.open_write(path)
-        with (_GzipWriter(raw) if gz else raw) as f:
-            for pdf in pdf_iter:
-                recs = [
-                    create_sequence_example([bytes(b) for b in payloads])
-                    for payloads in pdf[payload_col]
-                ]
-                for lo in range(0, len(recs), _IO_BATCH):
-                    f.write(_frame_records(recs[lo : lo + _IO_BATCH]))
-        yield pd.DataFrame({"path": [path]})
-
-    out = target.mapInPandas(write_shard, "path string").collect()
-    return sorted(r.path for r in out)
+    return write_shards(
+        packed.select(group_col, payload_col).repartition(num_shards),
+        records,
+        file_path_prefix,
+        num_shards=num_shards,
+        file_name_suffix=file_name_suffix,
+    )
 
 
 def read_tfrecord_dataframe(

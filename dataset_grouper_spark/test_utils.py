@@ -14,8 +14,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from dataset_grouper_spark import keys, pipelines
-from dataset_grouper_spark.compat import tfrecord
-from dataset_grouper_spark.operators import packing
 
 
 def make_test_dataframe(spark: SparkSession, num_rows: int = 10) -> DataFrame:
@@ -39,13 +37,8 @@ def prepare_test_tfrecord_dataset(
     SequenceExample packing all rows, like the reference fixture.
     """
     df = make_test_dataframe(spark, num_rows)
-    ser = pipelines.serialize_examples(df).withColumnRenamed("_ex", "ex")
-    packed = packing.pack_groups(
-        ser, keys.constant(group), "id", payload_col="ex",
-        size_cols=["id", "text", "score"],
-    )
     prefix = os.path.join(out_dir, "test_data.tfrecord")
-    paths = tfrecord.write_grouped_tfrecords(
-        packed, "group_id", "packed", prefix, num_shards=1
+    paths = pipelines.tfds_to_tfrecords(
+        df, prefix, keys.constant(group), order_col="id", num_shards=1
     )
     return df, paths
