@@ -17,9 +17,12 @@ Spark-executor equivalent.
 
 from __future__ import annotations
 
+import contextlib
 import os
 import re
 import shutil
+import uuid
+from collections.abc import Iterator
 from fnmatch import fnmatch
 from typing import IO
 from urllib.parse import urlparse
@@ -298,6 +301,28 @@ def walk_files(path: str) -> list[str]:
         for i in infos
         if i.type == pafs.FileType.File and i.path.startswith(base)
     )
+
+
+@contextlib.contextmanager
+def staging_dir(parent: str, name: str) -> Iterator[str]:
+    """A fresh ``<parent>/.<name>-<uuid>.staging`` directory for a
+    job's tasks to write into before the driver commits what they
+    report; removed on exit, on success and on failure. The driver
+    makes it: a task still running after its job failed and the
+    directory went cannot recreate it."""
+    stage = join(parent, f".{name}-{uuid.uuid4().hex}.staging")
+    makedirs(stage)
+    try:
+        yield stage
+    finally:
+        rmtree(stage)
+
+
+def leftover_staging_dirs(parent: str, name: str) -> list[str]:
+    """Sorted names of the ``staging_dir(parent, name)`` directories
+    still under ``parent``: left by a driver that died before its
+    commit."""
+    return sorted(n for n in listdir(parent) if fnmatch(n, f".{name}-*.staging"))
 
 
 def join(base: str, *parts: str) -> str:

@@ -27,6 +27,7 @@ key used by serialization.py:20), each element a serialized Example.
 from __future__ import annotations
 
 import struct
+from collections.abc import Iterable
 from typing import Any
 
 SERIALIZED_BYTES_KEY = "serialized_bytes"
@@ -130,7 +131,16 @@ def encode_example_checked(
     raises KeyError when the example's keys do not exactly match the
     declared feature schema (serialize_tfds_example,
     serialization.py:40-48; tested at serialization_test.py:33-43)."""
-    got = set(features)
+    check_feature_keys(features, schema_keys)
+    return encode_example(features)
+
+
+def check_feature_keys(
+    got: Iterable[str], schema_keys: set[str] | frozenset[str]
+) -> None:
+    """Raise the reference's KeyError when the feature names ``got``
+    differ from the declared ``schema_keys``."""
+    got = set(got)
     if got != set(schema_keys):
         raise KeyError(
             "Found a mismatch between the provided features_dict and an"
@@ -138,7 +148,6 @@ def encode_example_checked(
             f" structure of *all* examples being serialized."
             f" (example keys={sorted(got)}, schema keys={sorted(schema_keys)})"
         )
-    return encode_example(features)
 
 
 def create_sequence_example(

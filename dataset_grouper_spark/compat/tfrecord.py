@@ -435,19 +435,10 @@ def write_shards(
     A ``.gz`` suffix gzips every shard (see :func:`write_records`).
     """
     import itertools
-    import uuid
 
     import pandas as pd
 
     from dataset_grouper_spark.compat import fs
-
-    parent = fs.parent_dir(file_path_prefix) or "."
-    stage = fs.join(
-        parent, f".{os.path.basename(file_path_prefix)}-{uuid.uuid4().hex}.staging"
-    )
-    # the driver makes the directory: a task still running after the
-    # job failed and the directory went cannot recreate it
-    fs.makedirs(stage)
 
     def write_task(pdf_iter):
         from pyspark import TaskContext
@@ -464,7 +455,8 @@ def write_shards(
         write_records(path, itertools.chain([first], it))
         yield pd.DataFrame({"partition": [ctx.partitionId()], "path": [path]})
 
-    try:
+    parent = fs.parent_dir(file_path_prefix) or "."
+    with fs.staging_dir(parent, os.path.basename(file_path_prefix)) as stage:
         staged = {
             r.partition: r.path
             for r in frame.mapInPandas(write_task, "partition int, path string").collect()
@@ -482,8 +474,6 @@ def write_shards(
                 fs.move(src, dst)
             out.append(dst)
         return out
-    finally:
-        fs.rmtree(stage)
 
 
 def write_grouped_tfrecords(

@@ -51,6 +51,7 @@ from dataset_grouper_spark.sinks import (
     BUCKET_COL,
     DATA_DIR,
     GROUP_INDEX_DIR,
+    bucket_of,
     read_layout,
 )
 
@@ -67,13 +68,6 @@ _EPOCH_BATCH_ROWS = 65536
 def _shuffle_rank(group_id: str, seed: int) -> str:
     """Deterministic seeded shuffle key for group ordering."""
     return hashlib.md5(f"{seed}:{group_id}".encode()).hexdigest()
-
-
-def _bucket_of(group_id: str, num_buckets: int) -> int:
-    """Python twin of sinks.bucket_expr (zlib.crc32 == Spark crc32)."""
-    import zlib
-
-    return zlib.crc32(group_id.encode()) % num_buckets
 
 
 _INT_RE = re.compile(r"[+-]?[0-9]+")
@@ -254,7 +248,7 @@ class PartitionedDataset:
             return df.filter(F.col(keys.GROUP_COL).isNull())
         if layout == "bucketed" and num_buckets > 0:
             df = df.filter(
-                F.col(BUCKET_COL) == _bucket_of(group_id, num_buckets)
+                F.col(BUCKET_COL) == bucket_of(group_id, num_buckets)
             ).drop(BUCKET_COL)
         return df.filter(F.col(keys.GROUP_COL) == group_id)
 
@@ -305,7 +299,7 @@ class PartitionedDataset:
             return gid.is_null()
         layout, num_buckets = self.layout()
         if layout == "bucketed" and num_buckets > 0:
-            bucket = _bucket_of(group_id, num_buckets)
+            bucket = bucket_of(group_id, num_buckets)
             return (pads.field(BUCKET_COL) == bucket) & (gid == group_id)
         dirs = self._dirs_of.get(group_id, [group_id])
         return functools.reduce(operator.or_, (gid == d for d in dirs))

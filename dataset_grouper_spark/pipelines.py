@@ -44,11 +44,13 @@ def _example_encoder(schema: StructType, check_schema: bool = True):
     """The per-example serialize step (serialization.py:23-48) as a
     function from a pandas frame with ``schema``'s columns to one
     serialized Example per row. With ``check_schema`` (the reference's
-    behavior), an example whose keys diverge from the schema raises
-    KeyError instead of silently encoding."""
+    behavior), a frame whose columns diverge from the schema raises
+    KeyError instead of silently encoding; the check is on the frame's
+    columns, once per batch, so a NULL or NaN cell (a missing feature)
+    passes it."""
     from dataset_grouper_spark.compat.tfexample import (
+        check_feature_keys,
         encode_example,
-        encode_example_checked,
     )
 
     schema_keys = frozenset(schema.names)
@@ -87,18 +89,18 @@ def _example_encoder(schema: StructType, check_schema: bool = True):
         return v
 
     def encode(pdf) -> list[bytes]:
-        out = []
-        for row in pdf.to_dict("records"):
-            feats = {
-                k: p
-                for k, v in row.items()
-                if (p := _py(v, to_int=k in integral)) is not None
-            }
-            if check_schema:
-                out.append(encode_example_checked(feats, schema_keys))
-            else:
-                out.append(encode_example(feats))
-        return out
+        if check_schema:
+            check_feature_keys(pdf.columns, schema_keys)
+        return [
+            encode_example(
+                {
+                    k: p
+                    for k, v in row.items()
+                    if (p := _py(v, to_int=k in integral)) is not None
+                }
+            )
+            for row in pdf.to_dict("records")
+        ]
 
     return encode
 

@@ -13,12 +13,15 @@ cardinality:
   directory per group is pathological at 100 TB). Rows are
   range-partitioned on (bucket_id, group_id) at the session's shuffle
   width, which AQE coalesces to the data's size, and sorted by
-  (bucket_id, group_id[, ord]) within each task. A bucket directory
-  holds one or more files with disjoint group ranges: each group is
-  one contiguous run in exactly one file, and the file count follows
-  the data rather than the bucket count. A sidecar group index
-  (group_id -> row count, plus the layout descriptor) gives the reader
-  pruning without directory explosion.
+  (bucket_id, group_id[, ord]) within each task. One ``mapInArrow``
+  pass (:mod:`.bucket_writer`) then writes each task's bucket runs as
+  pyarrow Parquet files and counts its group runs into its slice of
+  the sidecar group index (group_id -> row count, plus the layout
+  descriptor), so the index needs no rescan. A bucket directory holds
+  one or more files with disjoint group ranges: each group is one
+  contiguous run in exactly one file, and the file count follows the
+  data rather than the bucket count. The tasks write into a stage the
+  driver swaps in, so a failed write leaves the previous dataset.
 
 A ``partitionBy`` write's ``sortWithinPartitions`` must lead with the
 partition columns: otherwise Spark's planned write adds its own sort on
@@ -33,6 +36,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from dataset_grouper_spark import keys
+from dataset_grouper_spark.compat import fs as _cfs
 from dataset_grouper_spark.functions import textstats
 from dataset_grouper_spark.operators.packing import BYTES_LIMIT, cap_prefix
 
@@ -50,8 +54,6 @@ def _local_serving_path(path: str) -> str:
     through a shutil deep inside a rewrite. Keep serving layouts on a
     local/HDFS-style mount; the lakehouse formats (Delta/Iceberg/Hudi)
     are the object-store-native storage tier."""
-    from dataset_grouper_spark.compat import fs as _cfs
-
     if not _cfs.is_uri(path):
         return path
     if path.startswith("file://"):
@@ -64,6 +66,16 @@ def _local_serving_path(path: str) -> str:
     )
 
 
+def bucket_of(group_id: str | None, num_buckets: int) -> int | None:
+    """Python twin of :func:`bucket_expr` (zlib.crc32 == Spark crc32);
+    the NULL group's bucket is NULL."""
+    import zlib
+
+    if group_id is None:
+        return None
+    return zlib.crc32(group_id.encode()) % num_buckets
+
+
 def bucket_expr(num_buckets: int) -> Column:
     """Deterministic bucket of a group id — engine-portable (crc32 of
     the utf-8 bytes, mod buckets), so ANY reader can recompute the
@@ -74,8 +86,8 @@ def bucket_expr(num_buckets: int) -> Column:
 
 
 def _bucketed_sort(order_col: str | Column | None) -> list[str | Column]:
-    """Sort columns for a bucketed ``partitionBy(bucket_id)`` write,
-    led by the partition column (see the module docstring)."""
+    """Sort columns for a bucketed write: the writer cuts a file per
+    bucket run and an index row per group run."""
     return [BUCKET_COL, keys.GROUP_COL] + ([order_col] if order_col is not None else [])
 
 
@@ -96,19 +108,18 @@ def _isin_null_safe(col: str, values: list) -> Column:
     return hit
 
 
-def _write_index(
-    written: DataFrame, path: str, layout: str, num_buckets: int
-) -> None:
-    """The sidecar group index (group listing + sizes + layout
-    descriptor), computed from the written data in one pass."""
+def _write_index(written: DataFrame, path: str) -> None:
+    """The partitioned layout's sidecar group index (group listing +
+    sizes + layout descriptor), computed from the written data in one
+    pass."""
     written = written.withColumn(
         keys.GROUP_COL, F.col(keys.GROUP_COL).cast("string")
     )
     (
         written.groupBy(keys.GROUP_COL)
         .agg(F.count(F.lit(1)).alias("num_examples"))
-        .withColumn("layout", F.lit(layout))
-        .withColumn("num_buckets", F.lit(num_buckets))
+        .withColumn("layout", F.lit("partitioned"))
+        .withColumn("num_buckets", F.lit(0))
         .coalesce(1)
         .write.mode("overwrite")
         .parquet(f"{path}/{GROUP_INDEX_DIR}")
@@ -124,8 +135,6 @@ def read_layout(path: str) -> tuple[str, int] | None:
     failure must not be taken for the legacy layout, which would
     disable bucket pruning."""
     import pyarrow.dataset as pads
-
-    from dataset_grouper_spark.compat import fs as _cfs
 
     idx = f"{path}/{GROUP_INDEX_DIR}"
     if not _cfs.is_dir(idx):
@@ -214,7 +223,7 @@ def append_partitioned(
         # zero-row first append; see write_partitioned)
         if not _has_part_files(data_path):
             keyed.limit(0).write.mode("overwrite").parquet(data_path)
-        _write_index(spark.read.parquet(data_path), path, "partitioned", 0)
+        _write_index(spark.read.parquet(data_path), path)
 
 
 def compact_partitioned(
@@ -240,8 +249,6 @@ def compact_partitioned(
     ``{"files_before", "files_after", "groups", "rows"}``.
     """
     path = _local_serving_path(path)
-    import shutil
-
     from pyspark.sql import Window
 
     data_path = f"{path}/{DATA_DIR}"
@@ -318,16 +325,7 @@ def compact_partitioned(
         .partitionBy(keys.GROUP_COL)
         .parquet(tmp_path)
     )
-    # rename-aside swap: the old rmtree(data)->move(tmp,data) left a
-    # crash window where the ONLY copy of the data lived in the temp
-    # dir that vacuum_partitioned advertises as always-safe to delete.
-    # With the aside rename, a crash at any point leaves either data/
-    # or data_retiring/ intact; vacuum restores the latter.
-    retiring = f"{path}/{DATA_DIR}_retiring"
-    shutil.rmtree(retiring, ignore_errors=True)
-    shutil.move(data_path, retiring)
-    shutil.move(tmp_path, data_path)
-    shutil.rmtree(retiring)
+    _replace_data(path, tmp_path)
     # compaction moves rows between FILES, never between groups: the
     # sidecar index (group -> num_examples) is invariant, so it carries
     # over untouched — no post-rewrite data scan, no index rewrite (the
@@ -396,10 +394,23 @@ def _stage_merged_index(
 
 
 def _swap_index(path: str, tmp_idx: str) -> None:
-    import shutil
+    _cfs.rmtree(f"{path}/{GROUP_INDEX_DIR}")
+    _cfs.move(tmp_idx, f"{path}/{GROUP_INDEX_DIR}")
 
-    shutil.rmtree(f"{path}/{GROUP_INDEX_DIR}")
-    shutil.move(tmp_idx, f"{path}/{GROUP_INDEX_DIR}")
+
+def _replace_data(path: str, new_data: str) -> None:
+    """Swap ``new_data`` in as ``data/`` by renaming the old one aside
+    first: a crash at any point leaves ``data/`` or ``data_retiring/``
+    intact, and :func:`vacuum_partitioned` restores the latter (a plain
+    rmtree(data) -> move would leave the only copy in a directory
+    vacuum deletes)."""
+    data_path = f"{path}/{DATA_DIR}"
+    retiring = f"{data_path}_retiring"
+    _cfs.rmtree(retiring)
+    if _cfs.is_dir(data_path):
+        _cfs.move(data_path, retiring)
+    _cfs.move(new_data, data_path)
+    _cfs.rmtree(retiring)
 
 
 def upsert_partitioned(
@@ -528,9 +539,7 @@ def upsert_partitioned(
     if tmp_idx is not None:
         _swap_index(path, tmp_idx)
     else:  # past the prune cap or no readable index: full rebuild
-        _write_index(
-            spark.read.parquet(data_path), path, "partitioned", 0
-        )
+        _write_index(spark.read.parquet(data_path), path)
     return {"upserted_rows": n_new, "groups_rewritten": swapped}
 
 
@@ -550,15 +559,19 @@ def upsert_bucketed(
     distinct over df_new; at most ``num_buckets`` of them, bounded by
     construction).  Untouched bucket directories are never opened;
     rewritten buckets are re-sorted by (bucket, group, order), one file
-    per bucket, so single-group reads keep their contiguous-run
-    pruning; the sidecar index update is a distributed merge (old rows
-    whose bucket wasn't touched + staged counts) — no collect of group
-    counts, no dataset rescan.
+    per bucket, and written by the layout's one writer
+    (:mod:`.bucket_writer`), which also counts the rewritten groups.
+    The new index is those counts plus the old index rows whose bucket
+    was not touched, read and filtered with pyarrow on the driver — no
+    rescan of the written data. Buckets and the index swap in once the
+    write has succeeded; a failed write leaves the dataset as it was.
     """
     path = _local_serving_path(path)
-    import shutil
-
+    import pyarrow as pa
+    import pyarrow.dataset as pads
     from pyspark.sql import Window
+
+    from dataset_grouper_spark.sinks import bucket_writer
 
     data_path = f"{path}/{DATA_DIR}"
     meta = read_layout(path)
@@ -593,11 +606,10 @@ def upsert_bucketed(
         return {"upserted_rows": 0, "buckets_rewritten": 0}
     # NULL-key rows have a NULL bucket (the __HIVE_DEFAULT_PARTITION__
     # directory), which isin() never matches: select it with IS NULL
-    hit = _isin_null_safe(BUCKET_COL, touched)
     old = spark.read.parquet(data_path).withColumn(
         keys.GROUP_COL, F.col(keys.GROUP_COL).cast("string")
     )
-    old_touched = old.filter(hit)
+    old_touched = old.filter(_isin_null_safe(BUCKET_COL, touched))
     cols = [c for c in old.columns]
     # NULL-safe on the group: a NULL-key row replaces its old twin too
     new_ids = keyed_new.select(
@@ -610,56 +622,42 @@ def upsert_bucketed(
         "left_anti",
     )
     merged = survivors.select(cols).unionByName(keyed_new.select(cols))
-
-    tmp_path = f"{path}/{DATA_DIR}_upserting"
     out = merged.repartition(len(touched), F.col(BUCKET_COL))
     out = out.sortWithinPartitions(*_bucketed_sort(order_col))
-    (
-        out.write.mode("overwrite")
-        .partitionBy(BUCKET_COL)
-        .parquet(tmp_path)
-    )
-    n_new = keyed_new.count()
-    keyed_new.unpersist()
-    # distributed index merge staged BEFORE the swap (it reads tmp)
-    staged_counts = (
-        spark.read.parquet(tmp_path)
-        .withColumn(keys.GROUP_COL, F.col(keys.GROUP_COL).cast("string"))
-        .groupBy(keys.GROUP_COL)
-        .agg(F.count(F.lit(1)).alias("num_examples"))
-    )
-    old_idx = spark.read.parquet(f"{path}/{GROUP_INDEX_DIR}").select(
-        keys.GROUP_COL, "num_examples"
-    )
-    # NULL-safe for the NULL-group index row (see _stage_merged_index):
-    # it is dropped only when the batch touched the NULL bucket
-    kept_idx = (
-        old_idx.withColumn(BUCKET_COL, bucket_expr(num_buckets))
-        .filter(~F.coalesce(hit, F.lit(False)))
-        .drop(BUCKET_COL)
-    )
-    tmp_idx = f"{path}/{GROUP_INDEX_DIR}_new"
-    (
-        kept_idx.unionByName(staged_counts)
-        .withColumn("layout", F.lit("bucketed"))
-        .withColumn("num_buckets", F.lit(num_buckets))
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(tmp_idx)
-    )
-    swapped = 0
-    for entry in os.listdir(tmp_path):
-        if not entry.startswith(f"{BUCKET_COL}="):
-            continue
-        dst = os.path.join(data_path, entry)
-        if os.path.isdir(dst):
-            shutil.rmtree(dst)
-        shutil.move(os.path.join(tmp_path, entry), dst)
-        swapped += 1
-    shutil.rmtree(tmp_path)
-    shutil.rmtree(f"{path}/{GROUP_INDEX_DIR}")
-    shutil.move(tmp_idx, f"{path}/{GROUP_INDEX_DIR}")
-    return {"upserted_rows": n_new, "buckets_rewritten": swapped}
+
+    with _cfs.staging_dir(path, DATA_DIR) as stage:
+        bucket_writer.write(out, stage, num_buckets)
+        n_new = keyed_new.count()
+        keyed_new.unpersist()
+        # the old index rows of untouched buckets (the NULL group's row
+        # goes only when its NULL bucket was touched)
+        fs, root = _cfs.pyarrow_target(f"{path}/{GROUP_INDEX_DIR}")
+        old_idx = pads.dataset(root, format="parquet", filesystem=fs).to_table(
+            columns=[keys.GROUP_COL, "num_examples"]
+        )
+        hit = set(touched)
+        kept = [
+            (g, n)
+            for g, n in zip(
+                old_idx[keys.GROUP_COL].cast(pa.string()).to_pylist(),
+                old_idx["num_examples"].to_pylist(),
+            )
+            if bucket_of(g, num_buckets) not in hit
+        ]
+        bucket_writer.write_index(
+            spark,
+            f"{stage}/{GROUP_INDEX_DIR}/part-kept.parquet",
+            [g for g, _ in kept],
+            [n for _, n in kept],
+            num_buckets,
+        )
+        buckets = _cfs.listdir(f"{stage}/{DATA_DIR}")
+        for entry in buckets:
+            dst = f"{data_path}/{entry}"
+            _cfs.rmtree(dst)
+            _cfs.move(f"{stage}/{DATA_DIR}/{entry}", dst)
+        _swap_index(path, f"{stage}/{GROUP_INDEX_DIR}")
+    return {"upserted_rows": n_new, "buckets_rewritten": len(buckets)}
 
 
 def delete_partitioned(
@@ -793,9 +791,7 @@ def delete_partitioned(
     if tmp_idx is not None:
         _swap_index(path, tmp_idx)
     else:  # past the prune cap or no readable index: full rebuild
-        _write_index(
-            spark.read.parquet(data_path), path, "partitioned", 0
-        )
+        _write_index(spark.read.parquet(data_path), path)
     return {
         "deleted_rows": n_del,
         "groups_rewritten": n_groups if beyond_cap else len(touched),
@@ -809,15 +805,16 @@ def vacuum_partitioned(path: str) -> dict:
     """Remove crash leftovers from the rewrite ops: each of
     compact/upsert/delete stages its rewrite in a sibling temp dir and
     swaps at the end — a crash mid-job can strand
-    ``data_compacting``/``data_upserting``/``data_deleting``.  Run this
-    before retrying a failed rewrite.  Returns the removed directory
-    names.
+    ``data_compacting``/``data_upserting``/``data_deleting``, and a
+    driver that dies between a bucketed write's job and its commit
+    leaves its ``.data-<uuid>.staging`` directory.  Run this before
+    retrying a failed rewrite.  Returns the removed directory names.
 
     Crash recovery first: if ``data/`` is MISSING, the crash happened
-    mid-swap and the surviving sibling (``data_retiring`` from
-    compact's rename-aside, or a fully-written temp) is the only copy
+    mid-swap and the surviving sibling (``data_retiring`` from the
+    rename-aside swap, or a fully-written temp) is the only copy
     — it is RESTORED to ``data/``, never deleted.  Only after data/
-    exists are leftovers removed."""
+    exists are leftovers removed; ``data/`` itself is never touched."""
     path = _local_serving_path(path)
     import os
     import shutil
@@ -833,6 +830,8 @@ def vacuum_partitioned(path: str) -> dict:
     candidates = [DATA_DIR + s for s in _TEMP_SUFFIXES]
     candidates.append(DATA_DIR + "_retiring")
     candidates.append(GROUP_INDEX_DIR + "_new")  # append's index stage
+    # the bucketed writer's stages (compat.fs.staging_dir(path, DATA_DIR))
+    candidates += _cfs.leftover_staging_dirs(path, DATA_DIR)
     for name in candidates:
         d = os.path.join(path, name)
         if os.path.isdir(d):
@@ -868,13 +867,24 @@ def write_partitioned(
     and AQE coalesces it to the data's size, so the writer tasks (and
     files per bucket) grow with the input, not with ``num_buckets``.
     The range bounds come from a sampling pass over the input. Each
-    task sorts by (bucket_id, group_id[, order_col]), leading with the
-    partition column so Spark keeps the sort; a bucket directory then
-    holds one or more files with disjoint group ranges, and no group
-    spans two files.
+    task sorts by (bucket_id, group_id[, order_col]) and then, in one
+    ``mapInArrow`` pass (:mod:`.bucket_writer`), writes one pyarrow
+    Parquet file per bucket run and its slice of ``_group_index`` from
+    the group runs; a bucket directory holds one or more files with
+    disjoint group ranges, and no group spans two files. The tasks
+    write into a stage; the driver swaps its ``data/`` and
+    ``_group_index`` in (the old ``data/`` renamed aside first), so a
+    failed write leaves the previous dataset readable. A column type
+    Arrow cannot carry raises ``TypeError`` before any job runs.
     """
     path = _local_serving_path(path)
     keyed = keys.with_group_key(df, key)
+    if layout == "bucketed":
+        from dataset_grouper_spark.sinks import bucket_writer
+
+        bucket_writer.arrow_schema(keyed.schema)
+    elif layout != "partitioned":
+        raise ValueError(f"unknown layout: {layout}")
     if limit is not None:
         if order_col is None:
             raise ValueError("byte-capped write requires a stable order_col")
@@ -882,15 +892,7 @@ def write_partitioned(
             keyed, order_col, textstats.row_bytes_expr(df, size_cols), limit
         )
 
-    data_path = f"{path}/{DATA_DIR}"
-    if layout == "partitioned":
-        (
-            keyed.repartition(keys.GROUP_COL)
-            .write.mode("overwrite")
-            .partitionBy(keys.GROUP_COL)
-            .parquet(data_path)
-        )
-    elif layout == "bucketed":
+    if layout == "bucketed":
         # Explicit computed bucket column, written as a partition dir:
         # millions of groups collapse into `num_buckets` directories,
         # and a single-group read prunes to exactly one directory
@@ -901,24 +903,38 @@ def write_partitioned(
         out = keyed.withColumn(BUCKET_COL, bucket_expr(num_buckets))
         out = out.repartitionByRange(F.col(BUCKET_COL), F.col(keys.GROUP_COL))
         out = out.sortWithinPartitions(*_bucketed_sort(order_col))
-        (
-            out.write.mode("overwrite")
-            .partitionBy(BUCKET_COL)
-            .parquet(data_path)
-        )
-    else:
-        raise ValueError(f"unknown layout: {layout}")
+        with _cfs.staging_dir(path, DATA_DIR) as stage:
+            if not bucket_writer.write(out, stage, num_buckets):
+                # empty input: one empty footer with the post-layout
+                # schema (bucket_id inline) and a zero-row index, so an
+                # everything-filtered-out pipeline still yields a
+                # loadable, listable, zero-group dataset
+                spark = keyed.sparkSession
+                bucket_writer.write_empty(
+                    spark, out.schema, f"{stage}/{DATA_DIR}/part-00000.parquet"
+                )
+                bucket_writer.write_index(
+                    spark, f"{stage}/{GROUP_INDEX_DIR}/part-00000.parquet",
+                    [], [], num_buckets,
+                )
+            _replace_data(path, f"{stage}/{DATA_DIR}")
+            _swap_index(path, f"{stage}/{GROUP_INDEX_DIR}")
+        return
 
+    data_path = f"{path}/{DATA_DIR}"
+    (
+        keyed.repartition(keys.GROUP_COL)
+        .write.mode("overwrite")
+        .partitionBy(keys.GROUP_COL)
+        .parquet(data_path)
+    )
     if not _has_part_files(data_path):
         # Empty input: a partitionBy write of zero rows leaves NO part
         # files (no schema footer), making the dataset unreadable. Leave
         # one empty footer file with the post-layout schema (partition
         # columns inline) so an everything-filtered-out pipeline still
         # yields a loadable, listable, zero-group dataset.
-        empty = keyed
-        if layout == "bucketed":
-            empty = empty.withColumn(BUCKET_COL, bucket_expr(num_buckets))
-        empty.limit(0).write.mode("overwrite").parquet(data_path)
+        keyed.limit(0).write.mode("overwrite").parquet(data_path)
 
     # Sidecar index: group listing + sizes, computed from the written
     # data in one pass. Readers (loader.py) list groups here instead of
@@ -926,9 +942,4 @@ def write_partitioned(
     # a group — data_loaders.py:98-100; SURVEY §4).
     # The layout descriptor rides along as literal columns — one
     # sidecar write, no separate metadata job.
-    _write_index(
-        keyed.sparkSession.read.parquet(data_path),
-        path,
-        layout,
-        num_buckets if layout == "bucketed" else 0,
-    )
+    _write_index(keyed.sparkSession.read.parquet(data_path), path)

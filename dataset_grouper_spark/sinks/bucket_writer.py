@@ -1,0 +1,337 @@
+"""The bucketed layout's writer: one ``mapInArrow`` pass whose tasks
+write the bucket files and their slice of the group index with
+pyarrow, into a stage the driver commits.
+
+The input frame carries ``bucket_id`` and is sorted by
+(bucket_id, group_id[, order]) within each partition, with no group
+in two partitions (a range or bucket partitioning on the keys). Each
+task streams its Arrow batches once:
+
+- every run of one bucket becomes one Parquet file,
+  ``<stage>/data/bucket_id=<b>/part-<partition>-<attempt>.parquet``
+  (a NULL bucket is ``__HIVE_DEFAULT_PARTITION__``), holding every
+  column but ``bucket_id`` in the frame's order;
+- every run of one group adds a row to the task's index slice,
+  ``<stage>/_group_index/part-<partition>-<attempt>.parquet``, with
+  the columns and types of the index Spark wrote before (``group_id``
+  string, ``num_examples`` long, ``layout`` string, ``num_buckets``
+  int). The runs are counted in the same pass, so the index needs no
+  rescan, and the slices are disjoint because no group spans tasks;
+- the task returns the paths it wrote.
+
+The driver keeps only the returned files (a failed or speculative
+attempt's files are removed), then the caller commits the stage.
+
+The files read back as Spark-written ones do: every footer stores
+Spark's ``org.apache.spark.sql.parquet.row.metadata`` (the data
+columns' schema, nullability included, as Spark's writer stores it)
+and ``org.apache.spark.version``, so Spark's reader takes the column
+types from the footer and reads dates and timestamps without calendar
+rebasing; compression follows ``spark.sql.parquet.compression.codec``.
+Encodings are chosen per task on its first batch so that the files
+stay within a few percent of Spark's in size: a column is
+dictionary-encoded only when its dictionary and indices are smaller
+than its plain values (parquet-mr's test after a column's first page),
+and long strings keep no min/max statistics. A column type Arrow
+cannot carry raises ``TypeError`` naming the column before any job
+runs.
+"""
+
+from __future__ import annotations
+
+import json
+from collections.abc import Iterator
+
+import pyarrow as pa
+from pyspark.sql import DataFrame
+from pyspark.sql.types import StructType
+
+from dataset_grouper_spark import keys
+from dataset_grouper_spark.compat import fs
+from dataset_grouper_spark.sinks import BUCKET_COL, DATA_DIR, GROUP_INDEX_DIR
+
+NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
+
+INDEX_SCHEMA = pa.schema(
+    [
+        pa.field(keys.GROUP_COL, pa.string()),
+        pa.field("num_examples", pa.int64(), nullable=False),
+        pa.field("layout", pa.string(), nullable=False),
+        pa.field("num_buckets", pa.int32(), nullable=False),
+    ]
+)
+
+# Spark's codec names -> pyarrow's (Spark's "lz4" and "lz4_raw" both
+# read back as LZ4); pyarrow cannot write lzo
+_CODECS = {
+    "none": "none",
+    "uncompressed": "none",
+    "snappy": "snappy",
+    "gzip": "gzip",
+    "brotli": "brotli",
+    "lz4": "lz4",
+    "lz4_raw": "lz4",
+    "zstd": "zstd",
+}
+
+# mean value length above which a string column keeps no statistics
+# (parquet-mr's column index truncates min/max to the same 64 bytes)
+_STATS_MAX_BYTES = 64
+
+# buffered Arrow bytes per row group: parquet-mr's default block size,
+# which Spark's writer keeps
+_ROW_GROUP_BYTES = 128 << 20
+
+
+def arrow_schema(schema: StructType) -> pa.Schema:
+    """``schema`` as Arrow types, nullability kept as Spark's writer
+    keeps it. Raises ``TypeError`` naming the first column whose type
+    Arrow cannot carry."""
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    fields = []
+    for f in schema:
+        try:
+            fields.append(pa.field(f.name, to_arrow_type(f.dataType), f.nullable))
+        except TypeError as e:
+            raise TypeError(
+                f"column {f.name!r} has type {f.dataType.simpleString()}, which the "
+                f"bucketed layout's Arrow writer cannot write: {e}"
+            ) from None
+    return pa.schema(fields)
+
+
+def _footer(schema: StructType, spark_version: str) -> dict[bytes, bytes]:
+    return {
+        b"org.apache.spark.sql.parquet.row.metadata": json.dumps(
+            schema.jsonValue(), separators=(",", ":")
+        ).encode(),
+        b"org.apache.spark.version": spark_version.encode(),
+    }
+
+
+def _codec(spark) -> str:
+    name = spark.conf.get("spark.sql.parquet.compression.codec").lower()
+    if name not in _CODECS:
+        raise ValueError(
+            f"spark.sql.parquet.compression.codec={name!r}: the bucketed layout's "
+            f"Arrow writer supports {sorted(_CODECS)}"
+        )
+    return _CODECS[name]
+
+
+def _leaf_paths(schema: pa.Schema) -> list[str]:
+    """The Parquet column paths ``schema`` writes (``m.key_value.key``
+    for a map's keys), which pyarrow's per-column options take."""
+    import io
+
+    import pyarrow.parquet as pq
+
+    buf = io.BytesIO()
+    pq.write_table(schema.empty_table(), buf, store_schema=False)
+    return [c.path for c in pq.ParquetFile(buf).schema]
+
+
+def _is_binary_like(t: pa.DataType) -> bool:
+    return (
+        pa.types.is_string(t)
+        or pa.types.is_large_string(t)
+        or pa.types.is_binary(t)
+        or pa.types.is_large_binary(t)
+    )
+
+
+def _column_options(batch: pa.RecordBatch, leaves: list[str]) -> dict:
+    """Per-column encodings for a task's files, chosen on its first
+    batch. A flat column is dictionary-encoded when its dictionary plus
+    indices take fewer bytes than its plain values (parquet-mr's test
+    after a column's first page). A string or binary column other than
+    ``group_id`` whose values average over ``_STATS_MAX_BYTES`` keeps no
+    min/max statistics: pyarrow writes them into every page header as
+    well as the footer, and free text gains no pruning from them."""
+    import pyarrow.compute as pc
+
+    dictionary, unbounded = [], set()
+    for name, col in zip(batch.schema.names, batch.columns):
+        if pa.types.is_nested(col.type) or pa.types.is_boolean(col.type):
+            continue
+        uniq = pc.unique(col)
+        index_bytes = len(col) * max(1, len(uniq).bit_length()) / 8
+        if uniq.nbytes + index_bytes < col.nbytes:
+            dictionary.append(name)
+        if name != keys.GROUP_COL and _is_binary_like(col.type):
+            if (pc.mean(pc.binary_length(col)).as_py() or 0) > _STATS_MAX_BYTES:
+                unbounded.add(name)
+    return {
+        "use_dictionary": dictionary,
+        "write_statistics": [p for p in leaves if p.split(".")[0] not in unbounded],
+    }
+
+
+def _count_runs(ids: pa.Array, values: list, counts: list[int]) -> None:
+    """Append the runs of equal ``ids`` (NULL equal to NULL) to
+    ``values`` and ``counts``, extending the last run when it continues
+    from the previous batch."""
+    import pyarrow.compute as pc
+
+    runs = pc.run_end_encode(ids)
+    ends = runs.run_ends.to_pylist()
+    for v, n in zip(runs.values.to_pylist(), [e - s for s, e in zip([0, *ends], ends)]):
+        if counts and values[-1] == v:
+            counts[-1] += n
+        else:
+            values.append(v)
+            counts.append(n)
+
+
+class _File:
+    """One staged Parquet file: batches are buffered and written as row
+    groups of about ``_ROW_GROUP_BYTES``."""
+
+    def __init__(self, path: str, schema: pa.Schema, options: dict):
+        self.path = path
+        self.schema = schema
+        self.options = options
+        self.writer = None
+        self.parts: list[pa.RecordBatch] = []
+        self.nbytes = 0
+
+    def add(self, batch: pa.RecordBatch) -> None:
+        self.parts.append(batch)
+        self.nbytes += batch.nbytes
+        if self.nbytes >= _ROW_GROUP_BYTES:
+            self._flush()
+
+    def _flush(self) -> None:
+        import pyarrow.parquet as pq
+
+        if self.writer is None:
+            fs.makedirs(fs.parent_dir(self.path))
+            target, where = fs.pyarrow_target(self.path)
+            self.writer = pq.ParquetWriter(
+                where, self.schema, filesystem=target, **self.options
+            )
+        if self.parts:
+            self.writer.write_table(pa.Table.from_batches(self.parts, self.schema))
+        self.parts, self.nbytes = [], 0
+
+    def close(self) -> str:
+        self._flush()
+        self.writer.close()
+        return self.path
+
+
+def _index_part(
+    path: str, group_ids: list, counts: list[int], num_buckets: int, codec: str
+) -> None:
+    import pyarrow.parquet as pq
+
+    fs.makedirs(fs.parent_dir(path))
+    target, where = fs.pyarrow_target(path)
+    table = pa.table(
+        [
+            pa.array(group_ids, pa.string()),
+            pa.array(counts, pa.int64()),
+            pa.array(["bucketed"] * len(counts), pa.string()),
+            pa.array([num_buckets] * len(counts), pa.int32()),
+        ],
+        schema=INDEX_SCHEMA,
+    )
+    pq.write_table(
+        table,
+        where,
+        filesystem=target,
+        compression=codec,
+        use_dictionary=["layout", "num_buckets"],
+        store_schema=False,
+    )
+
+
+def write_index(
+    spark, path: str, group_ids: list, counts: list[int], num_buckets: int
+) -> None:
+    """One part of a bucketed layout's ``_group_index`` at ``path``:
+    ``group_ids[i]`` holds ``counts[i]`` rows."""
+    _index_part(path, group_ids, counts, num_buckets, _codec(spark))
+
+
+def write_empty(spark, schema: StructType, path: str) -> None:
+    """A zero-row Parquet file of ``schema`` at ``path``: the footer an
+    empty dataset's readers take their schema from."""
+    import pyarrow.parquet as pq
+
+    arrow = arrow_schema(schema).with_metadata(_footer(schema, spark.version))
+    fs.makedirs(fs.parent_dir(path))
+    target, where = fs.pyarrow_target(path)
+    pq.write_table(
+        arrow.empty_table(), where, filesystem=target, compression=_codec(spark)
+    )
+
+
+def write(frame: DataFrame, stage: str, num_buckets: int) -> list[str]:
+    """Write ``frame`` (see the module docstring) into ``stage`` in one
+    Spark job and return the paths of the files the job's successful
+    attempts wrote, after removing any other file under ``stage``."""
+    import pyarrow.compute as pc
+
+    names = frame.columns
+    data_cols = [c for c in names if c != BUCKET_COL]
+    data_spark = StructType([frame.schema[c] for c in data_cols])
+    schema = arrow_schema(data_spark).with_metadata(
+        _footer(data_spark, frame.sparkSession.version)
+    )
+    codec = _codec(frame.sparkSession)
+    bucket_pos = names.index(BUCKET_COL)
+    data_pos = [names.index(c) for c in data_cols]
+    gid_pos = data_cols.index(keys.GROUP_COL)
+    leaves = _leaf_paths(schema)
+
+    def task(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        from pyspark import TaskContext
+
+        ctx = TaskContext.get()
+        name = f"part-{ctx.partitionId():05d}-{ctx.taskAttemptId()}.parquet"
+        written: list[str] = []
+        gids: list = []
+        counts: list[int] = []
+        options = None
+        out, bucket = None, None
+        try:
+            for batch in batches:
+                if batch.num_rows == 0:
+                    continue
+                data = batch.select(data_pos).cast(schema)
+                if options is None:
+                    options = {"compression": codec, **_column_options(data, leaves)}
+                _count_runs(data.column(gid_pos), gids, counts)
+                runs = pc.run_end_encode(batch.column(bucket_pos))
+                start = 0
+                for b, end in zip(runs.values.to_pylist(), runs.run_ends.to_pylist()):
+                    if out is None or b != bucket:
+                        if out is not None:
+                            written.append(out.close())
+                        part = NULL_PARTITION if b is None else b
+                        out = _File(
+                            fs.join(stage, DATA_DIR, f"{BUCKET_COL}={part}", name),
+                            schema,
+                            options,
+                        )
+                        bucket = b
+                    out.add(data.slice(start, end - start))
+                    start = end
+        finally:
+            if out is not None:
+                written.append(out.close())
+        if not written:
+            return
+        index = fs.join(stage, GROUP_INDEX_DIR, name)
+        _index_part(index, gids, counts, num_buckets, codec)
+        written.append(index)
+        yield pa.record_batch([pa.array(written, pa.string())], names=["path"])
+
+    staged = [r.path for r in frame.mapInArrow(task, "path string").collect()]
+    kept = set(staged)
+    for rel in fs.walk_files(stage):
+        if fs.join(stage, rel) not in kept:
+            fs.remove(fs.join(stage, rel))
+    return staged

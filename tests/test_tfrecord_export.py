@@ -46,18 +46,43 @@ def _assert_parity(df, tmp_path, key, order_col, limit=packing.BYTES_LIMIT, suff
 
 @pytest.fixture(scope="module")
 def zipf_df(spark):
+    # NULL data cells in a string, an int and a double column, and NaN
+    # in the double one: each is a missing feature of its example
     rng = np.random.default_rng(7)
     clients = rng.zipf(1.3, 600) % 40
     rows = [
-        (i, f"c{c:02d}", " ".join(f"w{t}" for t in rng.integers(0, 50, 3 + i % 9)), i % 4)
+        (
+            i,
+            f"c{c:02d}",
+            None if i % 17 == 0 else " ".join(f"w{t}" for t in rng.integers(0, 50, 3 + i % 9)),
+            None if i % 19 == 0 else i % 4,
+            None if i % 11 == 0 else float("nan") if i % 13 == 0 else i / 8,
+        )
         for i, c in enumerate(clients.tolist())
     ]
-    return spark.createDataFrame(rows, "id long, client string, text string, n int")
+    return spark.createDataFrame(
+        rows, "id long, client string, text string, n int, score double"
+    )
 
 
 def test_zipf_keys_match_composed_operators(spark, zipf_df, tmp_path):
     want, _ = _assert_parity(zipf_df, tmp_path, F.col("client"), "id")
     assert sum(want.values()) == zipf_df.select("client").distinct().count()
+
+
+def test_null_and_nan_cells_encode_as_missing_features(spark, zipf_df):
+    from dataset_grouper_spark.compat.tfexample import decode_example
+
+    def encoded(check_schema):
+        ser = pipelines.serialize_examples(zipf_df, check_schema=check_schema)
+        return {r.id: r._ex for r in ser.select("id", "_ex").collect()}
+
+    checked = encoded(True)
+    assert checked == encoded(False)
+    # id 0: NULL text, int and double; 13: NaN double; 1: no NULL
+    assert set(decode_example(checked[0])) == {"id", "client"}
+    assert set(decode_example(checked[13])) == {"id", "client", "text", "n"}
+    assert set(decode_example(checked[1])) == {"id", "client", "text", "n", "score"}
 
 
 def test_limit_that_drops_rows_matches(spark, zipf_df, tmp_path):
