@@ -142,7 +142,7 @@ def stratified_sample(
 
     This is the corpus-mixing primitive: "keep 100% of wiki, 30% of
     web, 5% of crawl" is one filter. The per-stratum threshold is a
-    literal map lookup (``create_map`` + ``getItem``) — a single
+    literal map lookup (``create_map`` indexed by the strata column) — a single
     codegen'd expression, no join, no when-chain — so the filter sits
     directly on the scan and Catalyst can push it into the source.
     For thousands of strata or runtime-computed fractions, broadcast-join
@@ -156,7 +156,7 @@ def stratified_sample(
         pairs.extend([F.lit(s), F.lit(int(pct))])
     thresh = (
         F.coalesce(
-            F.create_map(*pairs).getItem(F.col(strata_col)),
+            F.create_map(*pairs)[F.col(strata_col)],
             F.lit(int(default_pct)),
         )
         if pairs

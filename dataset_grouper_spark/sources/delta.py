@@ -43,7 +43,6 @@ from __future__ import annotations
 
 import json
 import os
-import re
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
@@ -51,6 +50,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
 from dataset_grouper_spark.localrel import local_frame
+from dataset_grouper_spark.sources.rewrite import (
+    file_scan,
+    norm_path,
+    norm_path_py,
+    pack_bins,
+    rewrite_bins,
+)
 
 from dataset_grouper_spark.compat import fs as _fs
 
@@ -211,22 +217,6 @@ def _replay(spark: SparkSession | None, table_path: str, version: int):
 _DV_BROADCAST_ROWS = 1_000_000
 
 
-def _norm_path(c):
-    """Scheme-insensitive path: ``file:/a``, ``file:///a`` and ``/a``
-    all normalize to ``/a`` (``_metadata.file_path`` is a URI; the
-    log's add paths are table-relative)."""
-    return F.regexp_replace(c, r"^[a-zA-Z][a-zA-Z0-9+.\-]*:/+", "/")
-
-
-_SCHEME_PREFIX = re.compile(r"^[a-zA-Z][a-zA-Z0-9+.\-]*:/+")
-
-
-def _norm_abs(path: str) -> str:
-    """Python-side twin of :func:`_norm_path` — join keys built from a
-    URI table location must match the normalized ``_metadata.file_path``."""
-    return _SCHEME_PREFIX.sub("/", path)
-
-
 def _resolve_dv_path(table_path: str, storage: str, payload: str) -> str:
     """'u': ``{prefix}{20-char Z85 uuid}`` ->
     ``<table>/<prefix>/deletion_vector_<uuid>.bin``; 'p': absolute."""
@@ -269,7 +259,7 @@ def _dv_positions_frame(
             total = None
         rows.append(
             (
-                _norm_abs(abs_path),
+                norm_path_py(abs_path),
                 desc["storageType"],
                 desc["pathOrInlineDv"],
                 int(desc.get("offset") or 0),
@@ -325,6 +315,21 @@ def _apply_dvs(
 ROW_TRACKING_DOMAIN = "delta.rowTracking"
 
 
+def _checkpoint_column(cp_file: str, column: str) -> list[dict]:
+    """The rows of one top-level action column of a checkpoint (a
+    checkpoint's add rows, with stats JSON per live file, are the bulk
+    of it, so read just the one column). A checkpoint written without
+    the column has no such actions and gives no rows; an unreadable
+    checkpoint raises."""
+    import pyarrow.parquet as pq
+
+    with _fs.open_random(cp_file) as f:
+        pf = pq.ParquetFile(f)
+        if column not in pf.schema_arrow.names:
+            return []
+        return _arrow_rows(pf.read(columns=[column]))
+
+
 def _current_protocol(table_path: str, version: int) -> dict:
     """The table's governing protocol action at ``version`` —
     checkpoint row first, then the JSON tail, latest wins (the same
@@ -336,17 +341,7 @@ def _current_protocol(table_path: str, version: int) -> dict:
     if ckpt is not None:
         cp_version, cp_file = ckpt
         start = cp_version + 1
-        import pyarrow.parquet as pq
-
-        with _fs.open_random(cp_file) as f:
-            try:
-                rows = _arrow_rows(
-                    pq.read_table(f, columns=["protocol"])
-                )
-            except Exception:
-                f.seek(0)
-                rows = _arrow_rows(pq.read_table(f))
-        for d in rows:
+        for d in _checkpoint_column(cp_file, "protocol"):
             if d.get("protocol"):
                 proto = d["protocol"]
     for v in [
@@ -398,22 +393,10 @@ def _domain_metadata(
     if ckpt is not None:
         cp_version, cp_file = ckpt
         start = cp_version + 1
-        import pyarrow.parquet as pq
-
-        with _fs.open_random(cp_file) as f:
-            # project just the domainMetadata column — a checkpoint's
-            # add rows (stats JSON per live file) are the bulk of it,
-            # and this runs on every append/gate of a tracked table
-            try:
-                rows = _arrow_rows(
-                    pq.read_table(f, columns=["domainMetadata"])
-                )
-            except Exception:  # checkpoint written without the column
-                rows = []
-            for d in rows:
-                dm = d.get("domainMetadata")
-                if dm and dm.get("domain"):
-                    out[dm["domain"]] = dm
+        for d in _checkpoint_column(cp_file, "domainMetadata"):
+            dm = d.get("domainMetadata")
+            if dm and dm.get("domain"):
+                out[dm["domain"]] = dm
     for v in [
         v for v in delta_versions(table_path) if start <= v <= version
     ]:
@@ -675,7 +658,7 @@ def read_delta(
             return df
         return df.withColumns(
             {
-                "__fp": _norm_path(F.col("_metadata.file_path")),
+                "__fp": norm_path(F.col("_metadata.file_path")),
                 "__pos": F.col("_metadata.row_index"),
             }
         )
@@ -763,7 +746,7 @@ def read_delta(
         fmap = local_frame(spark, 
             [
                 (
-                    _norm_abs(os.path.join(table_abs, rel)),
+                    norm_path_py(os.path.join(table_abs, rel)),
                     int(a["baseRowId"]),
                 )
                 for rel, a in adds.items()
@@ -1114,7 +1097,7 @@ def delta_delete_where(
     def tagged(df: DataFrame) -> DataFrame:
         return df.withColumns(
             {
-                "__fp": _norm_path(F.col("_metadata.file_path")),
+                "__fp": norm_path(F.col("_metadata.file_path")),
                 "__pos": F.col("_metadata.row_index"),
             }
         )
@@ -1180,7 +1163,7 @@ def delta_delete_where(
         dv = a.get("deletionVector") or {}
         map_rows.append(
             (
-                _norm_abs(os.path.join(table_abs, rel)),
+                norm_path_py(os.path.join(table_abs, rel)),
                 rel,
                 dv.get("storageType"),
                 dv.get("pathOrInlineDv"),
@@ -1605,200 +1588,6 @@ def resolve_delta_version(table_path: str, timestamp: float) -> int:
     return max(eligible)
 
 
-def _zorder_rewrite_actions(
-    spark: SparkSession,
-    table_path: str,
-    table_abs: str,
-    groups: dict,
-    scan_schema,
-    phys: dict,
-    tracked: bool,
-    target_file_bytes: int,
-    zorder_by: tuple[str, str],
-) -> list[dict]:
-    """OPTIMIZE ZORDER as ONE distributed job across every partition
-    bin (VERDICT r12 task 2): all bins' files scan together under a
-    broadcast ``__fp -> __bin`` map, per-bin grid bounds come from a
-    single ``groupBy("__bin")`` aggregate joined back broadcast, each
-    row Morton-codes against its OWN bin's envelope
-    (``to_grid_cols``), and one range exchange on ``(__bin, __z)`` +
-    ``partitionBy("__bin")`` writes every bin's clustered files. Job
-    count is O(1), not O(bins) — the previous shape launched a
-    4-scalar bounds job AND a write job PER bin, serializing
-    2×(bins) job launches on the driver; a table with thousands of
-    partitions would crawl on scheduler overhead alone. DV
-    materialization and row-id inheritance ride the same single scan,
-    exactly as on the bin-pack path."""
-    import glob as _glob
-    import shutil
-    import tempfile
-    import uuid
-
-    import pyarrow.parquet as pq
-
-    from dataset_grouper_spark.sinks.zorder import (
-        interleave_bits,
-        to_grid_cols,
-    )
-
-    bins = [
-        groups[key]
-        for key in sorted(
-            groups, key=lambda k: tuple((v is None, v or "") for v in k)
-        )
-        if groups[key]
-    ]
-    if not bins:
-        return []
-    read_schema = (
-        StructType(
-            list(scan_schema.fields)
-            + [StructField("_row_id", LongType(), True)]
-        )
-        if tracked
-        else scan_schema
-    )
-    out_fields = [f.name for f in read_schema.fields]
-    all_paths, fp_bin, dv_adds = [], [], []
-    for i, b in enumerate(bins):
-        for a in b:
-            p = os.path.join(table_abs, a["path"])
-            all_paths.append(p)
-            fp_bin.append((_norm_abs(p), i))
-            if a.get("deletionVector"):
-                dv_adds.append((p, a["deletionVector"]))
-    scan = (
-        spark.read.schema(read_schema)
-        .parquet(*all_paths)
-        .withColumns(
-            {
-                "__fp": _norm_path(F.col("_metadata.file_path")),
-                "__pos": F.col("_metadata.row_index"),
-            }
-        )
-        .join(
-            F.broadcast(
-                local_frame(spark, 
-                    fp_bin, "`__fp` string, `__bin` int"
-                )
-            ),
-            "__fp",
-        )
-    )
-    if tracked:
-        bmap = local_frame(spark, 
-            [
-                (
-                    _norm_abs(os.path.join(table_abs, a["path"])),
-                    int(a["baseRowId"]),
-                )
-                for b in bins
-                for a in b
-            ],
-            "`__fp` string, `__brid` long",
-        )
-        scan = (
-            scan.join(F.broadcast(bmap), "__fp", "left")
-            .withColumn(
-                "_row_id",
-                F.coalesce(
-                    F.col("_row_id"), F.col("__brid") + F.col("__pos")
-                ),
-            )
-            .drop("__brid")
-        )
-    if dv_adds:
-        dv_frame, total = _dv_positions_frame(spark, table_path, dv_adds)
-        scan = _apply_dvs(scan, dv_frame, total, out_fields + ["__bin"])
-    else:
-        scan = scan.select(*out_fields, "__bin")
-    ca, cb = (phys.get(c, c) for c in zorder_by)
-    bounds = scan.groupBy("__bin").agg(
-        F.min(F.col(ca).cast("double")).alias("__alo"),
-        F.max(F.col(ca).cast("double")).alias("__ahi"),
-        F.min(F.col(cb).cast("double")).alias("__blo"),
-        F.max(F.col(cb).cast("double")).alias("__bhi"),
-    )
-    bits = 8
-    z = interleave_bits(
-        to_grid_cols(
-            F.col(ca),
-            F.coalesce(F.col("__alo"), F.lit(0.0)),
-            F.coalesce(F.col("__ahi"), F.lit(0.0)),
-            bits,
-        ),
-        to_grid_cols(
-            F.col(cb),
-            F.coalesce(F.col("__blo"), F.lit(0.0)),
-            F.coalesce(F.col("__bhi"), F.lit(0.0)),
-            bits,
-        ),
-        bits,
-    )
-    n_out = sum(
-        max(
-            1,
-            -(
-                -sum(int(a.get("size") or 0) for a in b)
-                // target_file_bytes
-            ),
-        )
-        for b in bins
-    )
-    stage = tempfile.mkdtemp(prefix="_delta_optimize_z_")
-    (
-        scan.join(F.broadcast(bounds), "__bin")
-        .withColumn("__z", z)
-        .select(*out_fields, "__bin", "__z")
-        .repartitionByRange(n_out, "__bin", "__z")
-        .sortWithinPartitions("__bin", "__z")
-        .drop("__z")
-        .write.mode("overwrite")
-        .partitionBy("__bin")
-        .parquet(stage)
-    )
-    actions: list[dict] = []
-    for i, b in enumerate(bins):
-        pv = b[0].get("partitionValues") or {}
-        for src in sorted(
-            _glob.glob(os.path.join(stage, f"__bin={i}", "part-*.parquet"))
-        ):
-            if pq.ParquetFile(src).metadata.num_rows == 0:
-                continue  # empty range-boundary partition
-            rel = f"part-{uuid.uuid4().hex}.parquet"
-            _fs.move(src, os.path.join(table_abs, rel))
-            actions.append(
-                {
-                    "add": {
-                        "path": rel,
-                        "partitionValues": pv,
-                        "size": _fs.file_size(
-                            os.path.join(table_abs, rel)
-                        ),
-                        "modificationTime": 0,
-                        "dataChange": False,
-                        "stats": _file_stats(
-                            os.path.join(table_abs, rel),
-                            scan_schema.fields,
-                        ),
-                    }
-                }
-            )
-        for a in b:
-            actions.append(
-                {
-                    "remove": {
-                        "path": a["path"],
-                        "dataChange": False,
-                        "deletionTimestamp": 0,
-                        "partitionValues": a.get("partitionValues") or {},
-                    }
-                }
-            )
-    shutil.rmtree(stage, ignore_errors=True)
-    return actions
-
-
 def delta_optimize(
     spark: SparkSession,
     table_path: str,
@@ -1811,33 +1600,34 @@ def delta_optimize(
     ~``target_file_bytes`` files, and MATERIALIZE deletion vectors
     while at it (a file carrying a DV is always rewritten, its
     tombstoned rows dropped for good — the DV purge OPTIMIZE performs
-    in Delta). Commits one version of paired remove/add actions with
-    ``dataChange: false`` — the logical table is bit-identical, so
-    change-feed readers correctly skip the commit
-    (:func:`read_delta_changes` ignores dataChange=false actions) and
-    streams see nothing. Returns the committed version, or None when
-    no partition had anything worth rewriting.
+    in Delta). Each partition's small and DV'd files are packed
+    greedily, in path order, into bins of up to ``target_file_bytes``
+    (``rewrite.pack_bins``); a bin is rewritten into one file when it
+    holds two or more files or a DV'd file. Commits one version of
+    paired remove/add actions with ``dataChange: false`` — the logical
+    table is bit-identical, so change-feed readers correctly skip the
+    commit (:func:`read_delta_changes` ignores dataChange=false
+    actions) and streams see nothing. Returns the committed version,
+    or None when no partition had anything worth rewriting.
 
     ``zorder_by=(colA, colB)`` (two numeric columns) is OPTIMIZE
     ZORDER BY: rewritten files cluster along the Morton curve of the
     two columns (``sinks.zorder`` bit interleave — pure Catalyst, one
-    range exchange), ALL the partition's files are rewritten (layout
-    changes, not just packing), and the refreshed ``add.stats``
-    envelopes stay narrow on BOTH dimensions — which is what lets
-    ``skip_filters`` on EITHER column prune files. Bounds for the
-    grid come from one min/max aggregate over the partition's rows.
+    range exchange), ALL the partition's files are rewritten as one
+    bin (layout changes, not just packing), and the refreshed
+    ``add.stats`` envelopes stay narrow on BOTH dimensions — which is
+    what lets ``skip_filters`` on EITHER column prune files. Each
+    bin's grid bounds come from one min/max aggregate over all bins.
 
-    Scale shape: the rewrite is one distributed read+repartition+write
-    job per touched partition over ONLY that partition's small files —
-    O(small data), never O(table); big clean files are untouched.
-    Planning (grouping adds by partitionValues) is driver-side metadata
-    of the same order as any table format's manifest walk. The commit
-    claims ``<version>.json`` with an exclusive create and RAISES on a
-    lost race — remove/add pairs must not rebase blindly past a
-    concurrent delete of the same files."""
-    import glob as _glob
-    import shutil
-    import tempfile
+    Scale shape: ONE distributed read+exchange+write job rewrites every
+    bin of every partition (``rewrite.rewrite_bins``), over ONLY the
+    binned files — O(small data), never O(table), and the job count
+    does not grow with the partition count; big clean files are
+    untouched. Planning (grouping adds by partitionValues) is
+    driver-side metadata of the same order as any table format's
+    manifest walk. The commit claims ``<version>.json`` with an
+    exclusive create and RAISES on a lost race — remove/add pairs must
+    not rebase blindly past a concurrent delete of the same files."""
     import uuid
 
     if small_file_bytes is None:
@@ -1868,6 +1658,38 @@ def delta_optimize(
         pv = a.get("partitionValues") or {}
         key = tuple(pv.get(phys[c], pv.get(c)) for c in part_cols)
         groups.setdefault(key, []).append(a)
+    partitions = [
+        sorted(groups[key], key=lambda a: a["path"])
+        for key in sorted(
+            groups, key=lambda k: tuple((v is None, v or "") for v in k)
+        )
+    ]
+
+    def size(a: dict) -> int:
+        return int(a.get("size") or 0)
+
+    if zorder_by:
+        # re-layout: every file of a partition is one bin
+        bins = partitions
+    else:
+        bins = [
+            b
+            for b in pack_bins(
+                (
+                    [
+                        a
+                        for a in members
+                        if a.get("deletionVector") or size(a) < small_file_bytes
+                    ]
+                    for members in partitions
+                ),
+                size,
+                target_file_bytes,
+            )
+            if len(b) >= 2 or any(a.get("deletionVector") for a in b)
+        ]
+    if not bins:
+        return None
 
     data_fields = [f for f in schema.fields if f.name not in part_cols]
     # rewrite under PHYSICAL names: compacted files must look exactly
@@ -1875,114 +1697,69 @@ def delta_optimize(
     scan_schema = StructType(
         [StructField(phys[f.name], f.dataType, True) for f in data_fields]
     )
-
-    if zorder_by:
-        # re-layout: every file of every bin participates, ONE
-        # distributed job for the whole table (helper above)
-        actions = _zorder_rewrite_actions(
-            spark, table_path, table_abs, groups, scan_schema, phys,
-            tracked, target_file_bytes, zorder_by,
+    read_schema = (
+        StructType(
+            list(scan_schema.fields)
+            + [StructField("_row_id", LongType(), True)]
         )
-    else:
-        actions = []
-    for key in sorted(
-        () if zorder_by else groups,
-        key=lambda k: tuple((v is None, v or "") for v in k),
-    ):
-        members = groups[key]
-        picked = [
-            a
-            for a in members
-            if a.get("deletionVector")
-            or int(a.get("size") or 0) < small_file_bytes
-        ]
-        if len(picked) < 2 and not any(
-            a.get("deletionVector") for a in picked
-        ):
-            continue
-        if not picked:
-            continue
-        paths = [os.path.join(table_abs, a["path"]) for a in picked]
-        read_schema = (
-            StructType(
-                list(scan_schema.fields)
-                + [StructField("_row_id", LongType(), True)]
-            )
-            if tracked
-            else scan_schema
-        )
-        scan = spark.read.schema(read_schema).parquet(*paths)
-        dv_adds = [
-            (os.path.join(table_abs, a["path"]), a["deletionVector"])
-            for a in picked
-            if a.get("deletionVector")
-        ]
-        out_fields = [f.name for f in read_schema.fields]
-        if tracked or dv_adds:
-            scan = scan.withColumns(
-                {
-                    "__fp": _norm_path(F.col("_metadata.file_path")),
-                    "__pos": F.col("_metadata.row_index"),
-                }
-            )
-        if tracked:
-            bmap = local_frame(spark, 
-                [
-                    (
-                        _norm_abs(os.path.join(table_abs, a["path"])),
-                        int(a["baseRowId"]),
-                    )
-                    for a in picked
-                ],
-                "`__fp` string, `__brid` long",
-            )
-            scan = (
-                scan.join(F.broadcast(bmap), "__fp", "left")
-                .withColumn(
-                    "_row_id",
-                    F.coalesce(
-                        F.col("_row_id"),
-                        F.col("__brid") + F.col("__pos"),
-                    ),
-                )
-                .drop("__brid")
-            )
-        if dv_adds:
-            dv_frame, total = _dv_positions_frame(spark, table_path, dv_adds)
-            scan = _apply_dvs(scan, dv_frame, total, out_fields)
-        elif tracked:
-            scan = scan.select(*out_fields)
-        live_bytes = sum(int(a.get("size") or 0) for a in picked)
-        n_out = max(1, -(-live_bytes // target_file_bytes))
-        stage = tempfile.mkdtemp(prefix="_delta_optimize_")
-        scan.repartition(n_out).write.mode("overwrite").parquet(stage)
-        pv = picked[0].get("partitionValues") or {}
-        new_adds = []
-        for src in sorted(_glob.glob(os.path.join(stage, "part-*.parquet"))):
-            rel = f"part-{uuid.uuid4().hex}.parquet"
-            _fs.move(src, os.path.join(table_abs, rel))
-            new_adds.append(
-                {
-                    "add": {
-                        "path": rel,
-                        "partitionValues": pv,
-                        "size": _fs.file_size(os.path.join(table_abs, rel)),
-                        "modificationTime": 0,
-                        "dataChange": False,
-                        # refreshed envelopes: the whole point of a
-                        # z-ordered rewrite is narrow per-file stats
-                        # (scan_schema fields = the files' PHYSICAL
-                        # names, which is also how stats are keyed on
-                        # column-mapped tables)
-                        "stats": _file_stats(
-                            os.path.join(table_abs, rel), scan_schema.fields
-                        ),
+        if tracked
+        else scan_schema
+    )
+    binned = [
+        [(os.path.join(table_abs, a["path"]), size(a)) for a in b] for b in bins
+    ]
+    scan = file_scan(spark, read_schema, [p for b in binned for p, _s in b])
+    dv_adds = [
+        (os.path.join(table_abs, a["path"]), a["deletionVector"])
+        for b in bins
+        for a in b
+        if a.get("deletionVector")
+    ]
+    if dv_adds:
+        dv_frame, total = _dv_positions_frame(spark, table_path, dv_adds)
+        scan = _apply_dvs(scan, dv_frame, total, scan.columns)
+    row_id_bases = (
+        {
+            os.path.join(table_abs, a["path"]): int(a["baseRowId"])
+            for b in bins
+            for a in b
+        }
+        if tracked
+        else None
+    )
+    actions: list[dict] = []
+    with rewrite_bins(
+        spark,
+        scan,
+        binned,
+        target_file_bytes,
+        zorder_by=tuple(phys.get(c, c) for c in zorder_by) if zorder_by else None,
+        row_id_bases=row_id_bases,
+    ) as staged:
+        for b, files in zip(bins, staged):
+            pv = b[0].get("partitionValues") or {}
+            for src in files:
+                rel = f"part-{uuid.uuid4().hex}.parquet"
+                dst = os.path.join(table_abs, rel)
+                _fs.move(src, dst)
+                actions.append(
+                    {
+                        "add": {
+                            "path": rel,
+                            "partitionValues": pv,
+                            "size": _fs.file_size(dst),
+                            "modificationTime": 0,
+                            "dataChange": False,
+                            # refreshed envelopes: the whole point of a
+                            # z-ordered rewrite is narrow per-file stats
+                            # (scan_schema fields = the files' PHYSICAL
+                            # names, which is also how stats are keyed
+                            # on column-mapped tables)
+                            "stats": _file_stats(dst, scan_schema.fields),
+                        }
                     }
-                }
-            )
-        shutil.rmtree(stage, ignore_errors=True)
-        for a in picked:
-            actions.append(
+                )
+            actions.extend(
                 {
                     "remove": {
                         "path": a["path"],
@@ -1991,10 +1768,8 @@ def delta_optimize(
                         "partitionValues": a.get("partitionValues") or {},
                     }
                 }
+                for a in b
             )
-        actions.extend(new_adds)
-    if not actions:
-        return None
     if tracked:
         # every add on a row-tracked table carries a baseRowId (the
         # spec invariant the reader checks); compacted files' rows
@@ -2433,7 +2208,7 @@ def delta_merge(
     table_abs = _table_abs(table_path)
     paths = [os.path.join(table_abs, rel) for rel in adds]
     tag_cols = {
-        "__fp": _norm_path(F.col("_metadata.file_path")),
+        "__fp": norm_path(F.col("_metadata.file_path")),
         "__pos": F.col("_metadata.row_index"),
     }
     def unmap(df: DataFrame) -> DataFrame:
@@ -2547,7 +2322,7 @@ def delta_merge(
         bmap = local_frame(spark, 
             [
                 (
-                    _norm_abs(os.path.join(table_abs, rel)),
+                    norm_path_py(os.path.join(table_abs, rel)),
                     int(a["baseRowId"]),
                 )
                 for rel, a in adds.items()
@@ -2585,7 +2360,7 @@ def delta_merge(
         .collect()
     ]
     abs_to_rel = {
-        _norm_abs(os.path.join(table_abs, rel)): rel for rel in adds
+        norm_path_py(os.path.join(table_abs, rel)): rel for rel in adds
     }
     touched_rel = sorted(abs_to_rel[p] for p in touched)
 

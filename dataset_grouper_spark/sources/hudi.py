@@ -533,17 +533,7 @@ def _fid_expr():
     lets one distributed job group rows by their file group without a
     per-group driver loop."""
     return F.regexp_extract(
-        F.element_at(
-            F.split(
-                F.regexp_replace(
-                    F.col("_metadata.file_path"),
-                    r"^[a-zA-Z][a-zA-Z0-9+.\-]*:/+",
-                    "/",
-                ),
-                "/",
-            ),
-            -1,
-        ),
+        F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1),
         r"^([^_]+)_",
         1,
     )
@@ -1251,14 +1241,7 @@ def _touched_group_map(spark: SparkSession, table_path: str):
     current = spark.read.parquet(*paths).select(
         F.col("_hoodie_record_key").alias("__k"),
         F.element_at(
-            F.split(
-                F.regexp_replace(
-                    F.col("_metadata.file_path"),
-                    r"^[a-zA-Z][a-zA-Z0-9+.\-]*:/+",
-                    "/",
-                ),
-                "/",
-            ),
+            F.split(F.col("_metadata.file_path"), "/"),
             -1,
         ).alias("__f"),
     )

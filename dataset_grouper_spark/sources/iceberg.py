@@ -60,6 +60,13 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dataset_grouper_spark.localrel import local_frame
+from dataset_grouper_spark.sources.rewrite import (
+    file_scan,
+    norm_path,
+    norm_path_py,
+    pack_bins,
+    rewrite_bins,
+)
 
 from dataset_grouper_spark.compat import fs as _fs
 from dataset_grouper_spark.sources.avro import read_avro_file, write_avro_file
@@ -528,28 +535,6 @@ def _live_files(
     return files, delete_files, delete_rows, eq_deletes
 
 
-def _norm_path(c: Column) -> Column:
-    """Scheme-insensitive path: ``file:/a``, ``file:///a`` and ``/a``
-    all normalize to ``/a`` (Spark's ``_metadata.file_path`` is a URI;
-    manifests usually carry plain absolute paths)."""
-    return F.regexp_replace(c, r"^[a-zA-Z][a-zA-Z0-9+.\-]*:/+", "/")
-
-
-_NORM_RE = None
-
-
-def _norm_path_py(p: str) -> str:
-    """Python-side twin of :func:`_norm_path` (the DV decode runs in
-    plain Python workers where Column expressions don't exist)."""
-    global _NORM_RE
-    if _NORM_RE is None:
-        import re
-
-        _NORM_RE = re.compile(r"^[a-zA-Z][a-zA-Z0-9+.\-]*:/+")
-    p = _NORM_RE.sub("/", p)
-    return p if p.startswith("/") else "/" + p
-
-
 def _apply_position_deletes(
     spark: SparkSession,
     keyed: DataFrame,
@@ -576,7 +561,7 @@ def _apply_position_deletes(
     if parquet_dels:
         parts.append(
             spark.read.parquet(*parquet_dels).select(
-                _norm_path(F.col("file_path")).alias("__fp"),
+                norm_path(F.col("file_path")).alias("__fp"),
                 F.col("pos").cast("long").alias("__pos"),
             )
         )
@@ -603,7 +588,7 @@ def _apply_position_deletes(
                     pos = _pf.read_dv(pth, int(off), int(sz))
                     yield pd.DataFrame(
                         {
-                            "__fp": [_norm_path_py(ref)] * len(pos),
+                            "__fp": [norm_path_py(ref)] * len(pos),
                             "__pos": pd.Series(pos, dtype="int64"),
                         }
                     )
@@ -643,7 +628,7 @@ def _apply_equality_deletes(
     by_id = {f["id"]: f["name"] for f in schema["fields"]}
     types = {f["name"]: _spark_type(f["type"]) for f in schema["fields"]}
     seq_map = local_frame(spark, 
-        [(p if p.startswith("/") else "/" + p, s) for p, s in data_files],
+        [(norm_path_py(p), s) for p, s in data_files],
         "`__fp` string, `__seq` long",
     )
     keyed = keyed.join(F.broadcast(seq_map), "__fp", "left")
@@ -923,7 +908,7 @@ def read_iceberg(
     cols = [f["name"] for f in schema["fields"]]
     keyed = data.withColumns(
         {
-            "__fp": _norm_path(F.col("_metadata.file_path")),
+            "__fp": norm_path(F.col("_metadata.file_path")),
             "__pos": F.col("_metadata.row_index"),
         }
     )
@@ -959,7 +944,7 @@ def read_iceberg(
             )
         frids = _first_row_ids(table_path, snaps[snapshot_id])
         fmap = local_frame(spark, 
-            [(_norm_path_py(p), fid) for p, fid in frids.items()],
+            [(norm_path_py(p), fid) for p, fid in frids.items()],
             "`__fp` string, `__frid` long",
         )
         keyed = keyed.join(F.broadcast(fmap), "__fp", "left")
@@ -1924,13 +1909,7 @@ def iceberg_delete_where(
     # tags exactly as read_iceberg does — already-dead rows (position-
     # or equality-deleted) can never match, keeping delete files
     # disjoint and re-runs no-ops
-    scan = spark.read.schema(ddl).parquet(*data_files)
-    keyed = scan.withColumns(
-        {
-            "__fp": _norm_path(F.col("_metadata.file_path")),
-            "__pos": F.col("_metadata.row_index"),
-        }
-    )
+    keyed = file_scan(spark, ddl, data_files)
     if delete_files:
         keyed = _apply_position_deletes(
             spark, keyed, delete_files, delete_rows
@@ -1944,7 +1923,7 @@ def iceberg_delete_where(
     # one row per live data file — planning-scale, not data-scale);
     # scheme-aware keys, or URI-backed tables silently no-op
     path_map = local_frame(spark, 
-        [(_norm_path_py(p), p) for p in data_files],
+        [(norm_path_py(p), p) for p in data_files],
         "`__fp` string, `file_path` string",
     )
     hits = (
@@ -2060,13 +2039,7 @@ def iceberg_dv_delete(
         f"`{f['name']}` {_spark_type(f['type'])}"
         for f in schema["fields"]
     )
-    scan = spark.read.schema(ddl).parquet(*data_files)
-    keyed = scan.withColumns(
-        {
-            "__fp": _norm_path(F.col("_metadata.file_path")),
-            "__pos": F.col("_metadata.row_index"),
-        }
-    )
+    keyed = file_scan(spark, ddl, data_files)
     if delete_files:
         keyed = _apply_position_deletes(
             spark, keyed, delete_files, delete_rows
@@ -2080,7 +2053,7 @@ def iceberg_dv_delete(
     # naive '/'+p key would never match the scan's normalized
     # _metadata path and the delete would silently no-op
     path_map = local_frame(spark, 
-        [(_norm_path_py(p), p) for p in data_files],
+        [(norm_path_py(p), p) for p in data_files],
         "`__fp` string, `file_path` string",
     )
     hits = (
@@ -2148,7 +2121,7 @@ def iceberg_dv_delete(
         p = _localize(p)
         if not _is_abs(p):
             p = os.path.join(table_path, p)
-        return _norm_path_py(p)
+        return norm_path_py(p)
 
     already = {
         _ref_key(d["referenced"])
@@ -2503,14 +2476,17 @@ def iceberg_rewrite_data_files(
     parity twin of the Delta side's ``delta_optimize``.
 
     Files smaller than ``small_file_bytes`` (default ``target/2``) are
-    greedily packed into bins PER PARTITION (files from different
-    partitions never merge — each output file must carry one partition
-    struct); bins with fewer than ``min_input_files`` members are left
-    alone. The rewrite is ONE distributed job for all bins: a scan of
-    the binned files routed by a broadcast path→bin map and written
-    ``partitionBy(bin)`` — hash routing puts each bin in exactly one
-    task, so each bin yields one output file. At 100 TB the cost is
-    O(bytes in small files), never O(table).
+    greedily packed, in path order, into bins PER PARTITION
+    (``rewrite.pack_bins``; files from different partitions never
+    merge — each output file must carry one partition struct); bins
+    with fewer than ``min_input_files`` members are left alone. The
+    rewrite is ONE distributed job for all bins, shared with
+    ``delta_optimize`` (``rewrite.rewrite_bins``): one scan of the
+    binned files with deletes applied, tagged by a broadcast path→bin
+    map (a literal for a single bin) and written ``partitionBy(bin)``
+    — hash routing puts each bin in exactly one task, so each bin
+    yields one output file. At 100 TB the cost is O(bytes in small
+    files), never O(table).
 
     Correctness under merge-on-read deletes:
 
@@ -2540,17 +2516,15 @@ def iceberg_rewrite_data_files(
     sort, the twin of ``delta_optimize(zorder_by=)``): EVERY live data
     file participates (layout changes, not just packing — one bin per
     partition), rewritten rows cluster along the Morton curve of the
-    two columns (``sinks.zorder`` bit interleave — pure Catalyst, one
-    range exchange per partition), and the refreshed manifest bounds
+    two columns (``sinks.zorder`` bit interleave — pure Catalyst, each
+    bin gridded against its own bounds, one range exchange for all
+    bins in the same single job), and the refreshed manifest bounds
     stay narrow on BOTH dimensions, which is what lets
     ``read_iceberg(skip_filters=...)`` prune on either column.
 
     Rewritten files are materialized under the table's CURRENT schema.
     Returns the new snapshot id, or the current snapshot id unchanged
     when no bin qualifies."""
-    import glob
-    import shutil
-    import tempfile
     import uuid
 
     import pyarrow.parquet as pq
@@ -2574,7 +2548,6 @@ def iceberg_rewrite_data_files(
     data_seqs, delete_files, delete_rows, eq_deletes = _live_files(
         table_path, snap
     )
-    seq_by_path = dict(data_seqs)
 
     # full entry walk (paths + partition structs + stats) — the
     # planning-scale read _live_files does, but keeping the records
@@ -2617,42 +2590,33 @@ def iceberg_rewrite_data_files(
             else ""
         )
 
-    bins: list[list[dict]] = []
+    def size(rec: dict) -> int:
+        return int(rec["data_file"].get("file_size_in_bytes") or 0)
+
+    groups: dict[str, list[dict]] = {}
+    for rec in live:
+        groups.setdefault(part_key(rec["data_file"]), []).append(rec)
+    partitions = [
+        sorted(members, key=lambda r: r["path"])
+        for _k, members in sorted(groups.items())
+    ]
     if zorder_by is not None:
         # re-layout: every live data file participates, one bin per
         # partition (the whole partition re-clusters along the curve)
-        groups_all: dict[str, list[dict]] = {}
-        for rec in live:
-            groups_all.setdefault(part_key(rec["data_file"]), []).append(
-                rec
-            )
-        bins = [
-            sorted(members, key=lambda r: r["path"])
-            for _k, members in sorted(groups_all.items())
-        ]
+        bins = partitions
     else:
-        # greedy deterministic bin-pack per partition
-        groups: dict[str, list[dict]] = {}
-        for rec in live:
-            size = int(rec["data_file"].get("file_size_in_bytes") or 0)
-            if size < small_file_bytes:
-                groups.setdefault(part_key(rec["data_file"]), []).append(
-                    rec
-                )
-        for _k, members in sorted(groups.items()):
-            members.sort(key=lambda r: r["path"])
-            cur: list[dict] = []
-            cur_bytes = 0
-            for rec in members:
-                size = int(rec["data_file"].get("file_size_in_bytes") or 0)
-                if cur and cur_bytes + size > target_file_bytes:
-                    bins.append(cur)
-                    cur, cur_bytes = [], 0
-                cur.append(rec)
-                cur_bytes += size
-            if cur:
-                bins.append(cur)
-        bins = [b for b in bins if len(b) >= min_input_files]
+        bins = [
+            b
+            for b in pack_bins(
+                (
+                    [r for r in members if size(r) < small_file_bytes]
+                    for members in partitions
+                ),
+                size,
+                target_file_bytes,
+            )
+            if len(b) >= min_input_files
+        ]
     if not bins:
         return cur_id
 
@@ -2671,203 +2635,71 @@ def iceberg_rewrite_data_files(
     binned_paths = [r["path"] for b in bins for r in b]
     binned = set(binned_paths)
 
-    scan_ddl = ddl + ", `_row_id` bigint" if lineage else ddl
-    fmap = None
+    scan = file_scan(
+        spark, ddl + ", `_row_id` bigint" if lineage else ddl, binned_paths
+    )
+    if delete_files:
+        scan = _apply_position_deletes(spark, scan, delete_files, delete_rows)
+    if eq_deletes:
+        scan = _apply_equality_deletes(
+            spark,
+            scan,
+            [(p, sq) for p, sq in data_seqs if p in binned],
+            eq_deletes,
+            schema,
+        )
+    row_id_bases = None
     if lineage:
         frids = _first_row_ids(table_path, snap)
-        fmap = local_frame(spark, 
-            [(_norm_path_py(p), fid) for p, fid in frids.items()],
-            "`__fp` string, `__frid` long",
-        )
-
-    def scan_of(paths: list[str]):
-        s = (
-            spark.read.schema(scan_ddl)
-            .parquet(*paths)
-            .withColumn(
-                "__fp", _norm_path(F.col("_metadata.file_path"))
-            )
-            .withColumn("__pos", F.col("_metadata.row_index"))
-        )
-        if delete_files:
-            s = _apply_position_deletes(
-                spark, s, delete_files, delete_rows
-            )
-        if eq_deletes:
-            pset = set(paths)
-            s = _apply_equality_deletes(
-                spark,
-                s,
-                [(p, sq) for p, sq in data_seqs if p in pset],
-                eq_deletes,
-                schema,
-            )
-        if lineage:
-            # resolve every surviving row's durable id BEFORE the
-            # rewrite loses file/ordinal identity
-            s = (
-                s.join(F.broadcast(fmap), "__fp", "left")
-                .withColumn(
-                    "_row_id",
-                    F.coalesce(
-                        F.col("_row_id"),
-                        F.col("__frid") + F.col("__pos"),
-                    ),
-                )
-                .drop("__frid")
-            )
-        return s
-
-    stage = tempfile.mkdtemp(prefix="_ice_rw_stage_")
-    if zorder_by is None:
-        bin_map = local_frame(spark, 
-            [
-                (
-                    r["path"]
-                    if r["path"].startswith("/")
-                    else "/" + r["path"],
-                    i,
-                )
-                for i, b in enumerate(bins)
-                for r in b
-            ],
-            "`__fp` string, `__bin` int",
-        )
-        (
-            scan_of(binned_paths)
-            .join(F.broadcast(bin_map), "__fp")
-            .drop("__fp", "__pos")
-            .repartition(len(bins), "__bin")
-            .write.mode("overwrite")
-            .partitionBy("__bin")
-            .parquet(stage)
-        )
-    else:
-        # sort-strategy rewrite as ONE distributed job across every
-        # bin (VERDICT r12 task 2): a broadcast __fp->__bin map, one
-        # groupBy("__bin") bounds aggregate joined back broadcast,
-        # per-row Morton codes against the row's OWN bin envelope
-        # (to_grid_cols), one range exchange on (__bin, __z) +
-        # partitionBy("__bin"). Job count O(1), not the previous
-        # 2×(bins) per-bin bounds+write launches — a table with
-        # thousands of partitions would crawl on scheduler overhead.
-        from dataset_grouper_spark.sinks.zorder import (
-            interleave_bits,
-            to_grid_cols,
-        )
-
-        bin_map = local_frame(spark, 
-            [
-                (
-                    r["path"]
-                    if r["path"].startswith("/")
-                    else "/" + r["path"],
-                    i,
-                )
-                for i, b in enumerate(bins)
-                for r in b
-            ],
-            "`__fp` string, `__bin` int",
-        )
-        s = (
-            scan_of(binned_paths)
-            .join(F.broadcast(bin_map), "__fp")
-            .drop("__fp", "__pos")
-        )
-        ca, cb = zorder_by
-        bounds = s.groupBy("__bin").agg(
-            F.min(F.col(ca).cast("double")).alias("__alo"),
-            F.max(F.col(ca).cast("double")).alias("__ahi"),
-            F.min(F.col(cb).cast("double")).alias("__blo"),
-            F.max(F.col(cb).cast("double")).alias("__bhi"),
-        )
-        bits = 8
-        z = interleave_bits(
-            to_grid_cols(
-                F.col(ca),
-                F.coalesce(F.col("__alo"), F.lit(0.0)),
-                F.coalesce(F.col("__ahi"), F.lit(0.0)),
-                bits,
-            ),
-            to_grid_cols(
-                F.col(cb),
-                F.coalesce(F.col("__blo"), F.lit(0.0)),
-                F.coalesce(F.col("__bhi"), F.lit(0.0)),
-                bits,
-            ),
-            bits,
-        )
-        n_out = sum(
-            max(
-                1,
-                -(
-                    -sum(
-                        int(r["data_file"].get("file_size_in_bytes") or 0)
-                        for r in b
-                    )
-                    // target_file_bytes
-                ),
-            )
-            for b in bins
-        )
-        (
-            s.join(F.broadcast(bounds), "__bin")
-            .withColumn("__z", z)
-            .drop("__alo", "__ahi", "__blo", "__bhi")
-            .repartitionByRange(n_out, "__bin", "__z")
-            .sortWithinPartitions("__bin", "__z")
-            .drop("__z")
-            .write.mode("overwrite")
-            .partitionBy("__bin")
-            .parquet(stage)
-        )
+        row_id_bases = {p: frids.get(p) for p in binned_paths}
 
     snap_id = max(snaps) + 1
     new_entries = []
-    compacted_in = 0
-    for i, b in enumerate(bins):
-        compacted_in += len(b)
-        seq_new = max(r["seq"] for r in b)
-        partition = b[0]["data_file"].get("partition")
-        for src in sorted(
-            glob.glob(os.path.join(stage, f"__bin={i}", "part-*.parquet"))
-        ):
-            nrows = pq.ParquetFile(src).metadata.num_rows
-            if nrows == 0:
-                continue
-            dst = os.path.join(
-                table_path,
-                "data",
-                f"rw-{snap_id}-{uuid.uuid4().hex}.parquet",
-            )
-            lo_b, hi_b = _footer_bounds(src, schema["fields"])
-            nbytes = os.path.getsize(src)
-            _fs.move(src, dst)
-            rec = {
-                "content": 0,
-                "file_path": dst,
-                "file_format": "PARQUET",
-                "record_count": nrows,
-                "file_size_in_bytes": nbytes,
-                "equality_ids": None,
-                "lower_bounds": lo_b,
-                "upper_bounds": hi_b,
-            }
-            if lineage:
-                # null = "this file materializes its own _row_id
-                # column"; explicit ids beat inheritance on read
-                rec["first_row_id"] = None
-            if isinstance(partition, dict):
-                rec["partition"] = partition
-            new_entries.append(
-                {
-                    "status": 1,
-                    "snapshot_id": None,
-                    "sequence_number": seq_new,
-                    "data_file": rec,
+    with rewrite_bins(
+        spark,
+        scan,
+        [[(r["path"], size(r)) for r in b] for b in bins],
+        target_file_bytes,
+        zorder_by=zorder_by,
+        row_id_bases=row_id_bases,
+    ) as staged:
+        for b, files in zip(bins, staged):
+            seq_new = max(r["seq"] for r in b)
+            partition = b[0]["data_file"].get("partition")
+            for src in files:
+                nrows = pq.ParquetFile(src).metadata.num_rows
+                dst = os.path.join(
+                    table_path,
+                    "data",
+                    f"rw-{snap_id}-{uuid.uuid4().hex}.parquet",
+                )
+                lo_b, hi_b = _footer_bounds(src, schema["fields"])
+                nbytes = os.path.getsize(src)
+                _fs.move(src, dst)
+                rec = {
+                    "content": 0,
+                    "file_path": dst,
+                    "file_format": "PARQUET",
+                    "record_count": nrows,
+                    "file_size_in_bytes": nbytes,
+                    "equality_ids": None,
+                    "lower_bounds": lo_b,
+                    "upper_bounds": hi_b,
                 }
-            )
-    shutil.rmtree(stage, ignore_errors=True)
+                if lineage:
+                    # null = "this file materializes its own _row_id
+                    # column"; explicit ids beat inheritance on read
+                    rec["first_row_id"] = None
+                if isinstance(partition, dict):
+                    rec["partition"] = partition
+                new_entries.append(
+                    {
+                        "status": 1,
+                        "snapshot_id": None,
+                        "sequence_number": seq_new,
+                        "data_file": rec,
+                    }
+                )
 
     # kept files ride along as EXISTING with their resolved sequences
     any_partition = any(
@@ -2922,7 +2754,7 @@ def iceberg_rewrite_data_files(
         content=0,
         summary={
             "operation": "replace",
-            "compacted-data-files": str(compacted_in),
+            "compacted-data-files": str(len(binned_paths)),
             "added-data-files": str(len(new_entries)),
         },
         carry_content={1},
@@ -3143,7 +2975,7 @@ def iceberg_remove_dangling_deletes(
         s for s in meta["snapshots"] if s["snapshot-id"] == cur_id
     )
     data_seqs, _dfs, _dr, _eq = _live_files(table_path, snap)
-    live_paths = {_norm_path_py(p) for p, _ in data_seqs}
+    live_paths = {norm_path_py(p) for p, _ in data_seqs}
     min_live_seq = min((s for _, s in data_seqs), default=None)
     ml = _localize(snap["manifest-list"])
     if not _is_abs(ml):
@@ -3173,7 +3005,7 @@ def iceberg_remove_dangling_deletes(
             alive = True
             if fmt == "PUFFIN":
                 ref = df_rec.get("referenced_data_file") or ""
-                alive = _norm_path_py(ref) in live_paths
+                alive = norm_path_py(ref) in live_paths
             elif content == 1:  # position-delete parquet: read refs
                 import pyarrow.parquet as pq
 
@@ -3184,7 +3016,7 @@ def iceberg_remove_dangling_deletes(
                         .to_pylist()
                     )
                 alive = any(
-                    _norm_path_py(r) in live_paths for r in set(refs)
+                    norm_path_py(r) in live_paths for r in set(refs)
                 )
             else:  # equality delete: inert once no live file precedes
                 alive = min_live_seq is not None and min_live_seq < seq

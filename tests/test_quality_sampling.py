@@ -1,6 +1,8 @@
 """Gopher quality gates, stratified sampling, n-gram counts, skew
 profile — value-exact unit tests on crafted rows."""
 
+import warnings
+
 from pyspark.sql import functions as F
 
 from dataset_grouper_spark.functions import quality, vocab
@@ -57,6 +59,11 @@ def test_stratified_sample_respects_fractions(spark):
     assert {r.doc_id for r in other.collect()} != {
         r.doc_id for r in kept.filter(F.col("source") == "web").collect()
     }
+    # the map lookup uses the supported form: a Column key in getItem
+    # is deprecated (FutureWarning) and slated for removal
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        sessions.stratified_sample(df, "source", "doc_id", {"web": 30})
 
 
 def test_stratified_sample_sql_twin_matches_on_negative_ids(spark):
