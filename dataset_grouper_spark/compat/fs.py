@@ -254,26 +254,6 @@ def move(src: str, dst: str) -> None:
     remove(src)
 
 
-def glob_files(pattern: str) -> list[str]:
-    """Sorted full paths matching a glob whose LAST component only is a
-    pattern (the shape every lakehouse call site uses:
-    ``<dir>/part-*.parquet``)."""
-    fs, p = _split(pattern)
-    if fs is None:
-        import glob as _glob
-
-        hits = sorted(_glob.glob(p))
-        if pattern.startswith("file://"):
-            return [f"file://{h}" for h in hits]
-        return hits
-    head, _, tail = pattern.rpartition("/")
-    try:
-        names = listdir(head)
-    except FileNotFoundError:
-        return []
-    return [f"{head}/{n}" for n in sorted(names) if fnmatch(n, tail)]
-
-
 def is_uri(path: str) -> bool:
     return bool(_URI_RE.match(path))
 

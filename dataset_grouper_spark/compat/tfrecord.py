@@ -56,7 +56,6 @@ def _crc32c_py(data: bytes, state: int = 0xFFFFFFFF) -> int:
 import numpy as np
 
 _TABLE_NP = np.array(_CRC_TABLE, dtype=np.uint32)
-_J32 = np.arange(32, dtype=np.uint32)
 
 
 def _apply_op(op: np.ndarray, s: int) -> int:
@@ -107,15 +106,6 @@ def _zero_advance_op(n_bytes: int) -> np.ndarray:
         op = np.array([1 << j for j in range(32)], dtype=np.uint32)
     _OP_CACHE[n_bytes] = op
     return op
-
-
-def _apply_op_vec(op: np.ndarray, states: np.ndarray) -> np.ndarray:
-    """Apply a 32x32 GF(2) operator to every uint32 in ``states`` (any
-    shape)."""
-    bits = ((states[..., None] >> _J32) & 1).astype(bool)
-    return np.bitwise_xor.reduce(
-        np.where(bits, op, np.uint32(0)), axis=-1
-    )
 
 
 _TBL_CACHE: dict[int, np.ndarray] = {}
@@ -256,14 +246,6 @@ def _mask(crc: int) -> int:
 
 def _masked_crc(data: bytes) -> int:
     return _mask(crc32c(data))
-
-
-def _write_record(f, rec: bytes) -> None:
-    header = struct.pack("<Q", len(rec))
-    f.write(header)
-    f.write(struct.pack("<I", _masked_crc(header)))
-    f.write(rec)
-    f.write(struct.pack("<I", _masked_crc(rec)))
 
 
 def _frame_records(recs: list[bytes]) -> bytes:

@@ -33,11 +33,8 @@ Three consumption modes:
 
 from __future__ import annotations
 
-import functools
 import hashlib
 import itertools
-import operator
-import re
 from collections.abc import Callable, Iterator
 from typing import TYPE_CHECKING
 
@@ -52,6 +49,8 @@ from dataset_grouper_spark.sinks import (
     DATA_DIR,
     GROUP_INDEX_DIR,
     bucket_of,
+    data_files,
+    read_data,
     read_layout,
 )
 
@@ -70,30 +69,6 @@ def _shuffle_rank(group_id: str, seed: int) -> str:
     return hashlib.md5(f"{seed}:{group_id}".encode()).hexdigest()
 
 
-_INT_RE = re.compile(r"[+-]?[0-9]+")
-_DECIMAL_RE = re.compile(r"[+-]?([0-9]+\.?[0-9]*|\.[0-9]+)([eE][+-]?[0-9]+)?")
-
-
-def _listed_ids(dirs: set[str]) -> dict[str, str]:
-    """Directory value -> the group id Spark lists for it.
-
-    Spark reads ``group_id=`` directories through partition-column type
-    inference and the index and ``dataframe()`` cast the result back to
-    string, so all-numeric ids come back canonicalised: "007" lists as
-    "7", and "3" next to "1.50" lists as "3.0" (a double column). Every
-    other value lists as itself."""
-    if dirs and all(_INT_RE.fullmatch(d) for d in dirs):
-        return {d: str(int(d)) for d in dirs}
-    if dirs and all(_DECIMAL_RE.fullmatch(d) for d in dirs):
-        # Python's repr of a double is Java's Double.toString in
-        # [1e-3, 1e7); outside it the ids stay as written
-        return {
-            d: repr(float(d)) if 1e-3 <= abs(float(d)) < 1e7 else d
-            for d in dirs
-        }
-    return {d: d for d in dirs}
-
-
 def _arrow_to_pandas(
     spark: SparkSession, schema: pa.Schema, columns: list[str]
 ) -> Callable[[pa.Table], pd.DataFrame]:
@@ -106,22 +81,12 @@ def _arrow_to_pandas(
     Spark collect sends (INT96 timestamps become UTC instants), then
     converted with toPandas's ``to_pandas`` options and Spark's own
     per-column converters under the session time zone."""
-    import json
-
-    from pyspark.sql.pandas.types import (
-        _create_converter_to_pandas,
-        from_arrow_schema,
-        to_arrow_schema,
-    )
+    from pyspark.sql.pandas.types import _create_converter_to_pandas, to_arrow_schema
     from pyspark.sql.types import StructField, StructType
 
-    stored = (schema.metadata or {}).get(b"org.apache.spark.sql.parquet.row.metadata")
-    spark_schema = (
-        StructType.fromJson(json.loads(stored))
-        if stored is not None
-        else from_arrow_schema(schema)
-    )
-    types = {f.name: f.dataType for f in spark_schema}
+    from dataset_grouper_spark.sinks import bucket_writer
+
+    types = {f.name: f.dataType for f in bucket_writer.spark_schema(schema)}
     fields = StructType([StructField(c, types[c], True) for c in columns])
     target = to_arrow_schema(fields)
 
@@ -175,8 +140,6 @@ class PartitionedDataset:
         self._df: DataFrame | None = None
         self._idx: DataFrame | None = None
         self._files: pads.Dataset | None = None
-        # partitioned layout: listed group id -> its group_id= values
-        self._dirs_of: dict[str, list[str]] = {}
 
     def layout(self) -> tuple[str, int]:
         """(layout, num_buckets) from the group-index sidecar; a
@@ -190,12 +153,12 @@ class PartitionedDataset:
         """The whole dataset as one relation (reader reused — repeated
         per-group reads must not re-list the dataset every call).
 
-        group_id is normalized back to string: parquet partition-column
-        type inference would otherwise turn numeric-looking group
-        directories into ints."""
+        The directory column is declared, not inferred
+        (:func:`sinks.read_data`), so a numeric-looking group id reads
+        back as written."""
         if self._df is None:
-            self._df = self.spark.read.parquet(self.data_path).withColumn(
-                keys.GROUP_COL, F.col(keys.GROUP_COL).cast("string")
+            self._df = read_data(
+                self.spark, self.path, self.layout()[1], self._data_files()
             )
         return self._df
 
@@ -253,39 +216,10 @@ class PartitionedDataset:
         return df.filter(F.col(keys.GROUP_COL) == group_id)
 
     def _data_files(self) -> pads.Dataset:
-        """The data files as one pyarrow dataset, hive-partitioned as
-        the layout writes them (``bucket_id`` int32 or ``group_id``
-        string) and discovered once per object, like ``dataframe()``."""
+        """The data files as one pyarrow dataset (:func:`sinks.data_files`),
+        discovered once per object, like ``dataframe()``."""
         if self._files is None:
-            import pyarrow as pa
-            import pyarrow.dataset as pads
-
-            bucketed = self.layout()[0] == "bucketed"
-            part = (
-                pa.field(BUCKET_COL, pa.int32())
-                if bucketed
-                else pa.field(keys.GROUP_COL, pa.string())
-            )
-            fs, root = _cfs.pyarrow_target(self.data_path)
-            files = pads.dataset(
-                root,
-                format="parquet",
-                filesystem=fs,
-                partitioning=pads.HivePartitioning(pa.schema([part])),
-            )
-            dirs_of: dict[str, list[str]] = {}
-            if not bucketed:
-                dirs = {
-                    pads.get_partition_keys(f.partition_expression).get(
-                        keys.GROUP_COL
-                    )
-                    for f in files.get_fragments()
-                }
-                dirs.discard(None)
-                for d, listed in _listed_ids(dirs).items():
-                    dirs_of.setdefault(listed, []).append(d)
-            self._dirs_of = dirs_of
-            self._files = files
+            self._files = data_files(self.path, self.layout()[1])
         return self._files
 
     def _group_filter(self, group_id: str | None) -> pads.Expression:
@@ -297,12 +231,11 @@ class PartitionedDataset:
         gid = pads.field(keys.GROUP_COL)
         if group_id is None:
             return gid.is_null()
-        layout, num_buckets = self.layout()
-        if layout == "bucketed" and num_buckets > 0:
+        num_buckets = self.layout()[1]
+        if num_buckets:
             bucket = bucket_of(group_id, num_buckets)
             return (pads.field(BUCKET_COL) == bucket) & (gid == group_id)
-        dirs = self._dirs_of.get(group_id, [group_id])
-        return functools.reduce(operator.or_, (gid == d for d in dirs))
+        return gid == group_id
 
     def _frame_reader(
         self, columns: list[str] | None, order_col: str | None = None
@@ -425,9 +358,8 @@ class PartitionedDataset:
         runs. It relies on the layout's group-major contract: a bucketed
         file holds each of its groups as one contiguous run and no group
         spans two files; a partitioned directory holds one group. The
-        bucketed files are read in path order; the partitioned ones in
-        listed-id order (NULL last), so the directories of one listed id
-        ("007" and "7") are adjacent. A group id that shows up again
+        files are read in path order, so a directory's files are
+        adjacent. A group id that shows up again
         after its run ended raises ``ValueError`` naming the file (a
         bucketed dataset written by the unsorted write of older
         versions); no group is yielded twice.
@@ -441,19 +373,10 @@ class PartitionedDataset:
         import numpy as np
         import pyarrow as pa
         import pyarrow.compute as pc
-        import pyarrow.dataset as pads
 
         read_cols, to_frame = self._frame_reader(columns, order_col)
         files = self._data_files()
-        listed = {d: gid for gid, dirs in self._dirs_of.items() for d in dirs}
-
-        def gid_of(frag: pads.Fragment) -> str | None:
-            keys_ = pads.get_partition_keys(frag.partition_expression)
-            return listed.get(keys_.get(keys.GROUP_COL))
-
         frags = sorted(files.get_fragments(), key=lambda f: f.path)
-        if self.layout()[0] != "bucketed":
-            frags.sort(key=lambda f: (gid_of(f) is None, gid_of(f) or ""))
 
         def runs() -> Iterator[tuple[str | None, pa.RecordBatch, str]]:
             for frag in frags:
@@ -469,8 +392,7 @@ class PartitionedDataset:
                         np.diff(codes.indices.to_numpy(), prepend=-1)
                     ).tolist()
                     for s, e in zip(starts, [*starts[1:], batch.num_rows]):
-                        gid = ids[s].as_py()
-                        yield listed.get(gid, gid), batch.slice(s, e - s), frag.path
+                        yield ids[s].as_py(), batch.slice(s, e - s), frag.path
 
         def frame(parts: list[pa.RecordBatch]) -> pd.DataFrame:
             table = pa.Table.from_batches(parts)

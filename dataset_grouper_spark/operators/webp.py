@@ -295,10 +295,6 @@ def _decode_entropy_image(
     return out.reshape(h, xsize)
 
 
-def _avg2(a, b):
-    return ((a.astype(np.uint16) + b.astype(np.uint16)) >> 1).astype(np.uint8)
-
-
 def _inverse_predictor(img, size_bits, sub, h, w):
     """Spec §Predictor Transform inverse: per-pixel add (mod 256 per
     channel) of the block-mode prediction. Scalar loop — prediction is

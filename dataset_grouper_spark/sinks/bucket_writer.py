@@ -1,22 +1,31 @@
-"""The bucketed layout's writer: one ``mapInArrow`` pass whose tasks
-write the bucket files and their slice of the group index with
-pyarrow, into a stage the driver commits.
+"""The group layouts' writer: one ``mapInArrow`` pass whose tasks
+write the data files and their slice of the group index with pyarrow,
+into a stage the driver commits. It writes both layouts; they differ
+only in the directory column, ``bucket_id`` for the bucketed layout
+and ``group_id`` for the partitioned one (``num_buckets`` 0, as in the
+index's layout descriptor).
 
-The input frame carries ``bucket_id`` and is sorted by
-(bucket_id, group_id[, order]) within each partition, with no group
-in two partitions (a range or bucket partitioning on the keys). Each
-task streams its Arrow batches once:
+The input frame carries the directory column and is sorted by
+(directory column, group_id[, order]) within each partition, with no
+group in two partitions (a range or hash partitioning on the keys).
+Each task streams its Arrow batches once:
 
-- every run of one bucket becomes one Parquet file,
-  ``<stage>/data/bucket_id=<b>/part-<partition>-<attempt>.parquet``
-  (a NULL bucket is ``__HIVE_DEFAULT_PARTITION__``), holding every
-  column but ``bucket_id`` in the frame's order;
+- every run of one directory value becomes one Parquet file,
+  ``<stage>/data/<column>=<value>/part-<partition>-<call>-<attempt>.c<n>.parquet``,
+  holding every column but the directory column in the frame's order.
+  ``<call>`` is a token unique to the call, so files staged by two
+  calls never share a name. Directory names are Spark's
+  ``partitionBy`` names (:func:`escape`). Given ``max_rows``, a file
+  is rolled every ``max_rows`` rows, like Spark's
+  ``maxRecordsPerFile``;
 - every run of one group adds a row to the task's index slice,
-  ``<stage>/_group_index/part-<partition>-<attempt>.parquet``, with
-  the columns and types of the index Spark wrote before (``group_id``
-  string, ``num_examples`` long, ``layout`` string, ``num_buckets``
-  int). The runs are counted in the same pass, so the index needs no
-  rescan, and the slices are disjoint because no group spans tasks;
+  ``<stage>/_group_index/part-<partition>-<call>-<attempt>.parquet``,
+  with the columns and types of the index Spark wrote before
+  (``group_id`` string, ``num_examples`` long, ``layout`` string,
+  ``num_buckets`` int). The runs are counted in the same pass, so the
+  index needs no rescan, and the slices are disjoint when no group
+  spans tasks (compaction's frame spreads a large group over tasks,
+  and its caller sums the slices);
 - the task returns the paths it wrote.
 
 The driver keeps only the returned files (a failed or speculative
@@ -48,9 +57,32 @@ from pyspark.sql.types import StructType
 
 from dataset_grouper_spark import keys
 from dataset_grouper_spark.compat import fs
-from dataset_grouper_spark.sinks import BUCKET_COL, DATA_DIR, GROUP_INDEX_DIR
+from dataset_grouper_spark.sinks import DATA_DIR, GROUP_INDEX_DIR, dir_column
 
 NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
+
+# the characters Spark's ExternalCatalogUtils.escapePathName writes as
+# %XX in a partition directory name on a non-Windows host: the ASCII
+# controls but NUL, and "#%'*/:=?\{[]^ plus DEL (not "}")
+_ESCAPED = frozenset([chr(c) for c in range(1, 0x20)] + list("\"#%'*/:=?\\\x7f{[]^"))
+
+
+def escape(value) -> str:
+    """A directory column value as Spark's ``partitionBy`` names its
+    directory: NULL and "" are ``NULL_PARTITION``, and every character
+    in ``_ESCAPED`` becomes ``%`` and its two upper-case hex digits."""
+    if value is None or value == "":
+        return NULL_PARTITION
+    value = str(value)
+    if _ESCAPED.isdisjoint(value):
+        return value
+    return "".join(f"%{ord(c):02X}" if c in _ESCAPED else c for c in value)
+
+
+def directory(num_buckets: int, value) -> str:
+    """The ``data/`` directory that holds the rows whose directory
+    column is ``value``."""
+    return f"{dir_column(num_buckets)}={escape(value)}"
 
 INDEX_SCHEMA = pa.schema(
     [
@@ -101,13 +133,25 @@ def arrow_schema(schema: StructType) -> pa.Schema:
     return pa.schema(fields)
 
 
+_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
 def _footer(schema: StructType, spark_version: str) -> dict[bytes, bytes]:
     return {
-        b"org.apache.spark.sql.parquet.row.metadata": json.dumps(
-            schema.jsonValue(), separators=(",", ":")
-        ).encode(),
+        _ROW_METADATA: json.dumps(schema.jsonValue(), separators=(",", ":")).encode(),
         b"org.apache.spark.version": spark_version.encode(),
     }
+
+
+def spark_schema(schema: pa.Schema) -> StructType:
+    """The Spark schema a data file stores in its footer (Spark's
+    writer and this one both do), else the one its Arrow types give."""
+    stored = (schema.metadata or {}).get(_ROW_METADATA)
+    if stored is None:
+        from pyspark.sql.pandas.types import from_arrow_schema
+
+        return from_arrow_schema(schema)
+    return StructType.fromJson(json.loads(stored))
 
 
 def _codec(spark) -> str:
@@ -232,7 +276,9 @@ def _index_part(
         [
             pa.array(group_ids, pa.string()),
             pa.array(counts, pa.int64()),
-            pa.array(["bucketed"] * len(counts), pa.string()),
+            pa.array(
+                ["bucketed" if num_buckets else "partitioned"] * len(counts), pa.string()
+            ),
             pa.array([num_buckets] * len(counts), pa.int32()),
         ],
         schema=INDEX_SCHEMA,
@@ -250,7 +296,7 @@ def _index_part(
 def write_index(
     spark, path: str, group_ids: list, counts: list[int], num_buckets: int
 ) -> None:
-    """One part of a bucketed layout's ``_group_index`` at ``path``:
+    """One part of a layout's ``_group_index`` at ``path``:
     ``group_ids[i]`` holds ``counts[i]`` rows."""
     _index_part(path, group_ids, counts, num_buckets, _codec(spark))
 
@@ -268,34 +314,50 @@ def write_empty(spark, schema: StructType, path: str) -> None:
     )
 
 
-def write(frame: DataFrame, stage: str, num_buckets: int) -> list[str]:
+def write(
+    frame: DataFrame, stage: str, num_buckets: int, max_rows: int | None = None
+) -> list[str]:
     """Write ``frame`` (see the module docstring) into ``stage`` in one
     Spark job and return the paths of the files the job's successful
-    attempts wrote, after removing any other file under ``stage``."""
+    attempts wrote, after removing any other file under ``stage``.
+    ``num_buckets`` 0 writes the partitioned layout; ``max_rows`` caps
+    the rows of a data file."""
+    import uuid
+
     import pyarrow.compute as pc
 
     names = frame.columns
-    data_cols = [c for c in names if c != BUCKET_COL]
+    dir_col = dir_column(num_buckets)
+    data_cols = [c for c in names if c != dir_col]
     data_spark = StructType([frame.schema[c] for c in data_cols])
     schema = arrow_schema(data_spark).with_metadata(
         _footer(data_spark, frame.sparkSession.version)
     )
     codec = _codec(frame.sparkSession)
-    bucket_pos = names.index(BUCKET_COL)
+    dir_pos = names.index(dir_col)
     data_pos = [names.index(c) for c in data_cols]
-    gid_pos = data_cols.index(keys.GROUP_COL)
+    gid_pos = names.index(keys.GROUP_COL)
     leaves = _leaf_paths(schema)
+    call = uuid.uuid4().hex
 
     def task(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from pyspark import TaskContext
 
         ctx = TaskContext.get()
-        name = f"part-{ctx.partitionId():05d}-{ctx.taskAttemptId()}.parquet"
+        prefix = f"part-{ctx.partitionId():05d}-{call}-{ctx.taskAttemptId()}"
         written: list[str] = []
         gids: list = []
         counts: list[int] = []
         options = None
-        out, bucket = None, None
+        out, folder, rows = None, None, 0
+
+        def roll() -> _File:
+            if out is not None:
+                written.append(out.close())
+            return _File(
+                fs.join(folder, f"{prefix}.c{len(written):03d}.parquet"), schema, options
+            )
+
         try:
             for batch in batches:
                 if batch.num_rows == 0:
@@ -303,28 +365,26 @@ def write(frame: DataFrame, stage: str, num_buckets: int) -> list[str]:
                 data = batch.select(data_pos).cast(schema)
                 if options is None:
                     options = {"compression": codec, **_column_options(data, leaves)}
-                _count_runs(data.column(gid_pos), gids, counts)
-                runs = pc.run_end_encode(batch.column(bucket_pos))
+                _count_runs(batch.column(gid_pos), gids, counts)
+                runs = pc.run_end_encode(batch.column(dir_pos))
                 start = 0
-                for b, end in zip(runs.values.to_pylist(), runs.run_ends.to_pylist()):
-                    if out is None or b != bucket:
-                        if out is not None:
-                            written.append(out.close())
-                        part = NULL_PARTITION if b is None else b
-                        out = _File(
-                            fs.join(stage, DATA_DIR, f"{BUCKET_COL}={part}", name),
-                            schema,
-                            options,
-                        )
-                        bucket = b
-                    out.add(data.slice(start, end - start))
-                    start = end
+                for v, end in zip(runs.values.to_pylist(), runs.run_ends.to_pylist()):
+                    if out is None or v != value:
+                        value = v
+                        folder = fs.join(stage, DATA_DIR, directory(num_buckets, v))
+                        out, rows = roll(), 0
+                    while start < end:
+                        if rows == max_rows:
+                            out, rows = roll(), 0
+                        n = end - start if max_rows is None else min(end - start, max_rows - rows)
+                        out.add(data.slice(start, n))
+                        start, rows = start + n, rows + n
         finally:
             if out is not None:
                 written.append(out.close())
         if not written:
             return
-        index = fs.join(stage, GROUP_INDEX_DIR, name)
+        index = fs.join(stage, GROUP_INDEX_DIR, f"{prefix}.parquet")
         _index_part(index, gids, counts, num_buckets, codec)
         written.append(index)
         yield pa.record_batch([pa.array(written, pa.string())], names=["path"])

@@ -290,29 +290,75 @@ def test_writer_keeps_only_the_files_its_tasks_returned(spark, tmp_path):
     assert str(stray) not in staged
 
 
-def test_a_failed_write_keeps_the_previous_dataset(spark, tmp_path):
+def _tree(path: str) -> dict[str, bytes]:
+    out = {}
+    for d, _, files in os.walk(path):
+        for f in files:
+            with open(os.path.join(d, f), "rb") as fh:
+                out[os.path.relpath(os.path.join(d, f), path)] = fh.read()
+    return out
+
+
+_FAILED_OPS = [
+    ("partitioned", op) for op in ("write", "append", "compact", "upsert", "delete")
+] + [("bucketed", "write"), ("bucketed", "upsert")]
+
+
+@pytest.mark.parametrize(
+    "layout,op", _FAILED_OPS, ids=[f"{layout}-{op}" for layout, op in _FAILED_OPS]
+)
+def test_a_failed_write_keeps_the_previous_dataset(spark, tmp_path, layout, op):
     path = str(tmp_path / "pds")
-
-    def write(df):
-        sinks.write_partitioned(
-            df, keys.by_feature("src"), path, order_col="doc_id", layout="bucketed",
-            num_buckets=4,
-        )
-
-    write(_docs(spark, 300, 20))
-    before = sorted(PartitionedDataset(spark, path).dataframe().collect())
-    bad = _docs(spark, 600, 20).withColumn(
-        "text",
-        F.when(F.col("doc_id") == 450, F.raise_error(F.lit("boom"))).otherwise(
-            F.col("text")
-        ),
+    key = keys.by_feature("src")
+    sinks.write_partitioned(
+        _docs(spark, 300, 20), key, path, order_col="doc_id", layout=layout, num_buckets=4
     )
-    with pytest.raises(Exception, match="boom"):
-        write(bad)
+    before = sorted(PartitionedDataset(spark, path).dataframe().collect())
+    if layout == "partitioned":
+        # a group id too long for a directory name: the writer's own
+        # tasks fail, when an in-place overwrite (Spark's partitionBy)
+        # has already removed the old files
+        bad = _docs(spark, 600, 20).withColumn(
+            "src", F.when(F.col("doc_id") == 450, F.lit("x" * 300)).otherwise(F.col("src"))
+        )
+    else:
+        bad = _docs(spark, 600, 20).withColumn(
+            "text",
+            F.when(F.col("doc_id") == 450, F.raise_error(F.lit("boom"))).otherwise(
+                F.col("text")
+            ),
+        )
+    upsert = sinks.upsert_bucketed if layout == "bucketed" else sinks.upsert_partitioned
+    run = {
+        "write": lambda: sinks.write_partitioned(
+            bad, key, path, order_col="doc_id", layout=layout, num_buckets=4
+        ),
+        "append": lambda: sinks.append_partitioned(bad, key, path, order_col="doc_id"),
+        "compact": lambda: sinks.compact_partitioned(
+            spark, path, target_rows_per_file=7, order_col="doc_id"
+        ),
+        "upsert": lambda: upsert(spark, bad, key, path, "doc_id", "doc_id"),
+        "delete": lambda: sinks.delete_partitioned(
+            spark,
+            path,
+            "CASE WHEN doc_id = 150 THEN raise_error('boom') ELSE doc_id % 3 = 0 END",
+        ),
+    }[op]
+    if op == "compact":
+        # a data file that is not Parquet (not the first, whose footer
+        # the read takes the schema from): the rewrite job fails
+        with open(_data_files(path)[-1], "wb") as f:
+            f.write(b"boom")
+    tree = _tree(path)
+    with pytest.raises(Exception, match="boom|too long|TASK_WRITE_FAILED|not a Parquet file"):
+        run()
+    # the old rows and the old index, byte for byte, and no stage left
     assert sorted(os.listdir(path)) == [sinks.GROUP_INDEX_DIR, sinks.DATA_DIR]
-    pds = PartitionedDataset(spark, path)
-    assert sorted(pds.dataframe().collect()) == before
-    assert sum(len(f) for _, f in pds.iter_groups_bulk()) == 300
+    assert _tree(path) == tree
+    if op != "compact":
+        pds = PartitionedDataset(spark, path)
+        assert sorted(pds.dataframe().collect()) == before
+        assert sum(len(f) for _, f in pds.iter_groups_bulk()) == 300
 
 
 def test_a_column_arrow_cannot_carry_raises_before_any_job(spark, tmp_path):

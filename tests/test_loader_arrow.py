@@ -158,18 +158,46 @@ def test_group_stream_parity_after_upsert_bucketed(spark, tmp_path):
     ids=["ints", "doubles", "merged"],
 )
 def test_group_stream_numeric_directory_ids(spark, tmp_path, ids):
-    # Spark infers a numeric type for all-numeric group_id directories,
-    # so the index lists "7" (or "7.0") for the directory "007", and
-    # "007" and "7" are one group; the stream must read the listed
-    # group's directories
+    # Spark would infer a numeric type for all-numeric group_id
+    # directories; the layout's reads declare group_id a string, so
+    # every id lists as written and "007" and "7" are two groups
     path = str(tmp_path / "numeric")
     df = spark.createDataFrame(
         [(i, ids[i % len(ids)]) for i in range(30)], "id long, g string"
     )
     sinks.write_partitioned(df, F.col("g"), path, order_col="id")
     pds = PartitionedDataset(spark, path)
+    assert pds.list_groups() == sorted(ids)
+    assert {r.group_id: r.num_examples for r in pds.group_index().collect()} == {
+        g: 10 for g in ids
+    }
     _assert_parity(pds)
     assert sum(len(pdf) for c in pds.group_stream() for _, pdf in c) == 30
+
+
+def test_directory_names_match_spark_partition_by(spark, tmp_path):
+    # Spark's own partitionBy is only the reference for the names: the
+    # layout writer must name every directory as it does ("{" escaped,
+    # "}" not; NULL and "" both the default partition), and the listing,
+    # the stream and group() must agree on every id
+    ids = IDS + ["", "x:y", "q?r", "{c}", "t\tu"]
+    df = spark.createDataFrame(
+        [(i, ids[i % len(ids)]) for i in range(3 * len(ids))], "id long, g string"
+    )
+    ref = tmp_path / "spark"
+    keys.with_group_key(df, F.col("g")).write.partitionBy(keys.GROUP_COL).parquet(str(ref))
+    path = tmp_path / "pds"
+    sinks.write_partitioned(df, F.col("g"), str(path), order_col="id")
+    spark_dirs = sorted(d.name for d in ref.iterdir() if d.is_dir())
+    assert sorted(d.name for d in (path / sinks.DATA_DIR).iterdir() if d.is_dir()) == spark_dirs
+    assert "group_id=%7Bc}" in spark_dirs
+    pds = PartitionedDataset(spark, str(path))
+    want = {g: 3 for g in ids if g}
+    want[None] = 6  # NULL and "" share the default partition
+    assert pds.list_groups() == sorted(want, key=lambda g: (g is None, g))
+    streamed = {gid: len(pdf) for c in pds.group_stream() for gid, pdf in c}
+    assert streamed == {g: pds.group(g).count() for g in want} == want
+    _assert_parity(pds)
 
 
 def _max_job_id(spark) -> int:
